@@ -29,8 +29,9 @@ to one numpy reduceat pass — the Arrow kernel is the right shape.
 DuckDB side: generated SQL built by the ``*_sql`` functions below
 (DuckDB parses ``'0x..'`` hex casts). Downstream operators are the
 production ones —
-``operators.minhash.minhash_edges_from_sigs``,
-``operators.simhash.simhash_edges_from_sigs``,
+``operators.minhash.minhash_edges_from_sigs`` and
+``operators.simhash.simhash_edges_from_sigs`` (both on the shared
+bucket-pairing core ``operators.buckets.pair_buckets``),
 ``operators.suffix.suffix_edges``, ``operators.cc.connected_components``
 — so banding, skew caps, verification, and the iterative CC loop are all
 value-checked against the oracle, not just the hash kernels.

@@ -199,7 +199,7 @@ def lsh_topk(
       still probes, meeting <= n_tables * bucket_cap candidates, so the
       join is never quadratic in a hot bucket. Deterministic (id-ranked),
       same connectivity trade as the dedup detectors' hot-bucket star path
-      (operators/minhash.py:246).
+      (``operators.buckets.pair_buckets``).
     """
     dim_row = vectors.select(F.size(vec_col).alias("d")).first()
     dim = int(dim_row["d"])

@@ -35,10 +35,13 @@ Scale notes (the 1000-executor story):
   stored signature table can additionally be bucketed by band-key prefix
   (Iceberg bucket transform) to skip the shuffle entirely; the Parquet
   backend here keeps the seam simple.
-- Hot buckets obey the same ``bucket_cap`` discipline as the batch path:
-  capped buckets contribute star edges to the bucket root (linear, not
-  quadratic), and ONLY new members (plus one bridge edge when the root
-  itself is new) are emitted — old members' intra-bucket connectivity is
+- The MinHash and SimHash folds and the batch detectors run ONE
+  bucket-pairing core, ``operators.buckets.pair_buckets`` (batch is the
+  fold with an empty old side), so the touched-bucket semi-join, the
+  singleton drop, the cap split and the star rules exist once: capped
+  buckets contribute star edges to the bucket root (linear, not
+  quadratic) for new members only, plus root -> every old member when
+  the root itself is new — old members' intra-bucket connectivity is
   already captured by the carried labels.
 - Labels-as-star-edges keeps the CC input shallow: the previous
   partition collapses to one edge per non-root member, so incremental CC
@@ -83,14 +86,13 @@ from ..functions.text import _nonblank
 from .cc import connected_components
 from .minhash import (
     _attach_deps,
-    band_table,
+    lsh_candidates,
     release_cached_deps,
-    minhash_edges_from_sigs,
     verify_pairs,
     with_dual_signatures,
     with_minhash,
 )
-from .simhash import chunk_table, simhash_edges_from_sigs, with_simhash
+from .simhash import hamming_edges, with_simhash
 
 
 def _signed_increment(docs: DataFrame, id_col: str, text_col: str,
@@ -130,118 +132,19 @@ def incremental_minhash_edges(
     cfg: DedupConfig,
     num_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Verified LSH edges with >= 1 new endpoint, plus hot-bucket summary.
-
-    Mirrors ``minhash_edges_from_sigs`` (same window-pass cap/root shape,
-    same hybrid auto-accept/verify split) restricted to buckets touched
-    by the increment. Old-vs-old pairs are excluded BY CONSTRUCTION — the
-    previous run already adjudicated them and their verdict rides in via
-    the carried labels.
-    """
-    new_bands = band_table(new_sigs, "id", cfg).withColumn("is_new", F.lit(True))
-    old_bands = band_table(old_sigs, "id", cfg)
-    # drop untouched old buckets before any window/pairing work: a bucket
-    # with no new member cannot emit a new-endpoint pair
-    touched_keys = new_bands.select("band_key").distinct()
-    old_touched = old_bands.join(touched_keys, "band_key", "left_semi").withColumn(
-        "is_new", F.lit(False)
-    )
-    combined = new_bands.unionByName(old_touched)
-    if num_partitions:
-        combined = combined.repartition(num_partitions, "band_key")
-    w = Window.partitionBy("band_key")
-    bw = (
-        combined.withColumn("bucket_size", F.count("*").over(w))
-        .withColumn("root", F.min("id").over(w))
-        # the smallest OLD member: bridge target when the root is new
-        .withColumn(
-            "old_min", F.min(F.when(~F.col("is_new"), F.col("id"))).over(w)
-        )
-        # singleton buckets emit nothing (no pair, star, or hot row) —
-        # drop them before the persist + pair join, same -42% detect-tail
-        # win as the batch path (operators/minhash.py)
-        .where(F.col("bucket_size") >= 2)
-        .persist()
-    )
-    ok = bw.where(F.col("bucket_size") <= cfg.bucket_cap)
-    hot = (
-        bw.where(F.col("bucket_size") > cfg.bucket_cap)
-        .select("band_key", "bucket_size")
-        .distinct()
-    )
-    # capped buckets: star edges for NEW members; when the root is itself
-    # new, ALSO star every OLD member to the new root — the from-scratch
-    # run stars root->EVERY member with each edge individually verified,
-    # so a single bridge edge could under-connect when only SOME old
-    # members pass the root verify (old members' mutual connectivity is
-    # already in the carried labels either way)
-    hot_rows = bw.where(F.col("bucket_size") > cfg.bucket_cap)
-    root_is_new = F.col("old_min").isNull() | (F.col("root") != F.col("old_min"))
-    star = (
-        hot_rows.where(F.col("is_new") & (F.col("id") != F.col("root")))
-        .select(F.col("root").alias("src"), F.col("id").alias("dst"))
-        .unionByName(
-            hot_rows.where(root_is_new & ~F.col("is_new"))
-            .select(F.col("root").alias("src"), F.col("id").alias("dst"))
-        )
-        .distinct()
-    )
-    # explicit hot-bucket salting (cfg.bucket_salt > 1): same id-hashed
-    # sub-bucket pairing as the batch path, restricted to >=1 new endpoint
-    # (old-old salted pairs were generated by the run that first saw the
-    # bucket hot, or fully verified while it was still under the cap)
-    if cfg.bucket_salt > 1:
-        salted = hot_rows.select(
-            F.xxhash64(
-                "band_key", F.pmod(F.xxhash64("id"), F.lit(cfg.bucket_salt))
-            ).alias("band_key"),
-            "id",
-            "is_new",
-        )
-        sp = (
-            salted.alias("a")
-            .join(salted.alias("b"), "band_key")
-            .where(
-                (F.col("a.id") < F.col("b.id"))
-                & (F.col("a.is_new") | F.col("b.is_new"))
-            )
-            .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-            .distinct()
-        )
-        star = star.unionByName(sp)
-    a, b = ok.alias("a"), ok.alias("b")
-    pairs = (
-        a.join(b, ["band_key"])
-        .where(
-            (F.col("a.id") < F.col("b.id"))
-            & (F.col("a.is_new") | F.col("b.is_new"))
-        )
-        .groupBy(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-        .agg(F.count("*").alias("n_bands"))
-        .persist()
-    )
-    auto = pairs.where(F.col("n_bands") >= cfg.auto_accept_bands).select("src", "dst")
-    ambiguous = pairs.where(F.col("n_bands") < cfg.auto_accept_bands).select("src", "dst")
-    # prune the signature side to the pair endpoints BEFORE the verify
-    # joins: verify needs only ids appearing in a candidate pair, and the
-    # endpoint-id set is O(touched) — small enough to broadcast for a
-    # daily increment — while the stored signature table is the largest
-    # payload in the job; without the semi-join every increment would
-    # re-shuffle the whole corpus's 128-slot signatures
-    cand = ambiguous.unionByName(star)
-    endpoint_ids = (
-        cand.select(F.col("src").alias("id"))
-        .unionByName(cand.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    all_sigs = (
-        new_sigs.select("id", "minhash")
-        .unionByName(old_sigs.select("id", "minhash"))
-        .join(endpoint_ids, "id", "left_semi")
-    )
-    verified = verify_pairs(cand, all_sigs, "id", cfg).select("src", "dst")
-    edges = _attach_deps(auto.unionByName(verified).distinct(), [bw, pairs])
-    return edges, hot
+    """Verified LSH edges with >= 1 new endpoint, plus hot-bucket summary:
+    the same core as ``minhash_edges_from_sigs`` (``lsh_candidates``) with
+    the stored index as the old side. Old-vs-old pairs are excluded BY
+    CONSTRUCTION — the previous run already adjudicated them and their
+    verdict rides in via the carried labels."""
+    auto, cand, hot, deps = lsh_candidates(new_sigs, old_sigs, "id", cfg, num_partitions)
+    # prune the stored signatures to the candidate endpoints BEFORE the
+    # verify joins: the endpoint set is O(touched), small enough to
+    # broadcast, while the stored index is the largest payload of a fold
+    ends = cand.select(F.col("src").alias("id")).unionByName(cand.select(F.col("dst").alias("id")))
+    sigs = new_sigs.unionByName(old_sigs.join(ends.distinct(), "id", "left_semi"))
+    verified = verify_pairs(cand, sigs, "id", cfg).select("src", "dst")
+    return _attach_deps(auto.unionByName(verified).distinct(), deps), hot
 
 
 def incremental_simhash_edges(
@@ -250,64 +153,10 @@ def incremental_simhash_edges(
     cfg: DedupConfig,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Hamming-verified SimHash edges with >= 1 new endpoint.
-
-    Same touched-bucket discipline as the LSH fold, over the pigeonhole
-    chunk keys (``simhash.chunk_table``): old chunks are semi-joined on
-    the increment's (chunk_id, chunk_val) set before any window/pairing
-    work; hot chunks emit Hamming-verified star edges for NEW members
-    plus one bridge edge when the chunk root is itself new.
-    """
-    new_c = chunk_table(new_sigs, "id", cfg).withColumn("is_new", F.lit(True))
-    old_c = chunk_table(old_sigs, "id", cfg)
-    touched = new_c.select("chunk_id", "chunk_val").distinct()
-    old_t = old_c.join(touched, ["chunk_id", "chunk_val"], "left_semi").withColumn(
-        "is_new", F.lit(False)
-    )
-    combined = new_c.unionByName(old_t)
-    if num_partitions:
-        combined = combined.repartition(num_partitions, "chunk_id", "chunk_val")
-    w = Window.partitionBy("chunk_id", "chunk_val")
-    cw = (
-        combined.withColumn("n", F.count("*").over(w))
-        .withColumn("r", F.min(F.struct("id", "sig")).over(w))
-        .withColumn(
-            "om",
-            F.min(F.when(~F.col("is_new"), F.struct("id", "sig"))).over(w),
-        )
-        .persist()
-    )
-    ok = cw.where(F.col("n") <= cfg.simhash_chunk_cap).select(
-        "chunk_id", "chunk_val", "id", "sig", "is_new"
-    )
-    hmax = F.lit(cfg.simhash_hamming_max)
-    a, b = ok.alias("a"), ok.alias("b")
-    joined = (
-        a.join(b, ["chunk_id", "chunk_val"])
-        .where(
-            (F.col("a.id") < F.col("b.id"))
-            & (F.col("a.is_new") | F.col("b.is_new"))
-        )
-        .where(F.expr("bit_count(a.sig ^ b.sig)") <= hmax)
-        .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-    )
-    hot = cw.where(F.col("n") > cfg.simhash_chunk_cap)
-    # new members star to the chunk root; when the root is itself new,
-    # ALSO star every OLD member (each Hamming-verified) — a from-scratch
-    # run stars root->every member, and per-edge verification means a
-    # single bridge could under-connect (see the LSH fold)
-    root_is_new = F.col("om").isNull() | (F.col("r.id") != F.col("om.id"))
-    star = (
-        hot.where(F.col("is_new") & (F.col("id") != F.col("r.id")))
-        .where(F.expr("bit_count(sig ^ r.sig)") <= hmax)
-        .select(F.col("r.id").alias("src"), F.col("id").alias("dst"))
-        .unionByName(
-            hot.where(root_is_new & ~F.col("is_new"))
-            .where(F.expr("bit_count(sig ^ r.sig)") <= hmax)
-            .select(F.col("r.id").alias("src"), F.col("id").alias("dst"))
-        )
-    )
-    return _attach_deps(joined.unionByName(star).distinct(), [cw])
+    """Hamming-verified SimHash edges with >= 1 new endpoint: the same
+    core as ``simhash_edges_from_sigs`` (``hamming_edges``) with the
+    stored index as the old side."""
+    return hamming_edges(new_sigs, old_sigs, "id", cfg, num_partitions)[0]
 
 
 def incremental_exact_edges(new_hashes: DataFrame, old_hashes: DataFrame) -> DataFrame:
@@ -568,49 +417,28 @@ class DedupIndex:
         new_sigs = spark.read.parquet(self._sig_dir(n))
         new_ids = new_sigs.select("id")
 
-        sim_edges = None
-        if n == 0:
-            lsh_edges, _hot = minhash_edges_from_sigs(
-                new_sigs.select("id", "minhash"), "id", self.cfg, num_partitions
-            )
-            # same operator as the n>0 branch with an empty old side — one
-            # copy of the min-over-window star shape, not two
-            nh = new_sigs.select("id", "text_md5")
-            exact = incremental_exact_edges(nh, nh.where(F.lit(False)))
-            edges = lsh_edges.unionByName(exact)
-            if self.use_simhash:
-                sim_edges = simhash_edges_from_sigs(
-                    new_sigs.select("id", "simhash"), "id", self.cfg, num_partitions
-                )
-                edges = edges.unionByName(sim_edges)
-            labels = connected_components(
-                edges.distinct(), vertices=new_ids, pre_deduped=True, **cc_kwargs
-            )
+        if n:
+            old_sigs, old_labels = self.signatures(spark, upto=n), self.labels(spark)
         else:
-            old_sigs = self.signatures(spark, upto=n)
-            old_labels = self.labels(spark)
-            lsh_edges, _hot = incremental_minhash_edges(
-                new_sigs.select("id", "minhash"),
-                old_sigs.select("id", "minhash"),
-                self.cfg,
-                num_partitions,
+            # the first increment is the batch run: an empty old side, which
+            # the optimizer prunes before planning
+            old_sigs = new_sigs.where(F.lit(False))
+            old_labels = new_ids.select("id", F.col("id").alias("cluster_id")).where(F.lit(False))
+        mh_edges, _hot = incremental_minhash_edges(
+            new_sigs.select("id", "minhash"), old_sigs.select("id", "minhash"), self.cfg, num_partitions
+        )
+        edges = mh_edges.unionByName(
+            incremental_exact_edges(new_sigs.select("id", "text_md5"), old_sigs.select("id", "text_md5"))
+        )
+        sim_edges = None
+        if self.use_simhash:
+            sim_edges = incremental_simhash_edges(
+                new_sigs.select("id", "simhash"), old_sigs.select("id", "simhash"), self.cfg, num_partitions
             )
-            exact = incremental_exact_edges(
-                new_sigs.select("id", "text_md5"),
-                old_sigs.select("id", "text_md5"),
-            )
-            edges = lsh_edges.unionByName(exact)
-            if self.use_simhash:
-                sim_edges = incremental_simhash_edges(
-                    new_sigs.select("id", "simhash"),
-                    old_sigs.select("id", "simhash"),
-                    self.cfg,
-                    num_partitions,
-                )
-                edges = edges.unionByName(sim_edges)
-            labels = fold_labels(old_labels, edges.distinct(), new_ids, **cc_kwargs)
+            edges = edges.unionByName(sim_edges)
+        labels = fold_labels(old_labels, edges.distinct(), new_ids, **cc_kwargs)
         labels.write.mode("overwrite").parquet(self._label_dir(n))
-        release_cached_deps(lsh_edges)
+        release_cached_deps(mh_edges)
         if sim_edges is not None:
             release_cached_deps(sim_edges)
         out = spark.read.parquet(self._label_dir(n))

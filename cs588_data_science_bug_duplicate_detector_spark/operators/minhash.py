@@ -29,6 +29,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..config import DedupConfig
 from ..functions import hashing
+from .buckets import bucket_window, pair_buckets, self_pairs
 
 
 def minhash_udf(cfg: DedupConfig):
@@ -134,30 +135,15 @@ def band_table(sigs: DataFrame, id_col: str, cfg: DedupConfig, sig_col: str = "m
 
 
 def capped_band_table(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """One window pass over the band table: + bucket_size, + root (min id)
-    per bucket. The cap split, the hot-bucket star edges, and the pair
-    self-join all derive from this single shuffled table.
+    """(band_key, id) + ``bucket_size`` + ``root`` (min id) per bucket: the
+    bucket-pairing core's window (``buckets.bucket_window``), from which
+    the cap split, the hot-bucket star edges and the pair self-join all
+    derive."""
+    return bucket_window(bands)
 
-    Measured-and-rejected alternative (round 5, 1M docs, local[32]):
-    ``groupBy(band_key).agg(collect_list(id))`` + JVM-side pair-combination
-    explode replaces window+self-join with one aggregation — 29.3s vs 36.9s
-    for the full detect tail, bit-identical edge set. Rejected because it
-    materializes each bucket as ONE in-memory array in a single aggregation
-    state: a pathological bucket at the 10^12-doc design point (a parked-
-    domain template with 10^9 members = an 8 GB array) OOMs the executor,
-    while WindowExec's ExternalAppendOnlyUnsafeRowArray spills the same
-    partition to disk and finishes. The window path trades ~20% of one
-    phase at bench scale for surviving the exact skew this module exists
-    to handle (see BENCH/BASELINE.md round-5 skew stress) — and the
-    singleton-bucket filter applied at this window's output (see
-    ``minhash_edges_from_sigs``) then beat the rejected shape outright
-    (21.3s vs its 29.3s) with the robustness kept."""
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("band_key")
-    return bands.withColumn("bucket_size", F.count("*").over(w)).withColumn(
-        "root", F.min("id").over(w)
-    )
+def _band_counts(pairs: DataFrame) -> DataFrame:
+    return pairs.groupBy("src", "dst").agg(F.count("*").alias("n_bands"))
 
 
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig, num_partitions: int | None = None) -> DataFrame:
@@ -169,14 +155,7 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig, num_partitions: int | No
     """
     if num_partitions:
         bands = bands.repartition(num_partitions, "band_key")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, ["band_key"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-        .agg(F.count("*").alias("n_bands"))
-    )
+    return _band_counts(self_pairs(bands.withColumn("is_new", F.lit(True)), []))
 
 
 def estimated_jaccard_col(sig_a, sig_b, num_perm: int):
@@ -286,91 +265,51 @@ def sweep_orphaned_deps() -> int:
     return swept
 
 
+def lsh_candidates(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupConfig,
+                   num_partitions: int | None = None, string_keys: bool = False) -> tuple:
+    """``buckets.pair_buckets`` over the band keys + MinHash's auto-accept
+    split -> (auto, cand, hot, deps), every pair with >= 1 new endpoint.
+
+    Hybrid verify: pairs colliding in >= ``auto_accept_bands`` bands (the
+    quadratic bulk — exact dups, template farms) are accepted outright as
+    ``auto``; only the statistically ambiguous low-match tail and the
+    hot-bucket star edges (``cand``) pay the ``verify_pairs`` join.
+    """
+    # Persist the new signatures: they feed THREE plan branches (band
+    # explode + the two verify joins), and without a persist each branch
+    # re-runs the Arrow signature UDF — the most expensive per-row work in
+    # the detector, paid 3x instead of 1x.
+    new_sigs.persist()
+    pairs, star, hot, deps = pair_buckets(
+        band_table(new_sigs, id_col, cfg, string_keys=string_keys),
+        band_table(old_sigs, id_col, cfg, string_keys=string_keys),
+        cfg.bucket_cap, cfg.bucket_salt, num_partitions,
+    )
+    # persist: the auto/ambiguous split reads the pair table twice —
+    # without it the whole bucket join runs twice
+    pairs = _band_counts(pairs).persist()
+    n = F.col("n_bands")
+    auto = pairs.where(n >= cfg.auto_accept_bands).select("src", "dst")
+    cand = pairs.where(n < cfg.auto_accept_bands).select("src", "dst").unionByName(star.distinct())
+    return auto, cand, hot, [new_sigs, *deps, pairs]
+
+
 def minhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
                             num_partitions: int | None = None,
                             string_keys: bool = False) -> tuple[DataFrame, DataFrame]:
     """sigs(id, minhash) -> (verified edges(src,dst), hot_bucket_summary).
 
+    ``lsh_candidates`` with an empty old side, then ``verify_pairs``.
     Edges include min-member star edges for capped hot buckets, so recall
     survives the cap. The returned edges carry ``_cached_deps`` (the
-    persisted band/pair tables) — callers should ``release_cached_deps``
-    after materializing.
-
-    Plan shape: ONE window pass over the band table computes bucket size
-    and bucket root together (count/min over partitionBy(band_key)), so
-    the cap split, the star edges, and the pair self-join all read the
-    same shuffled+persisted table — no separate size aggregation, no
-    driver-side broadcast barrier, and the self-join is co-partitioned on
-    band_key. (The earlier groupBy-sizes + broadcast-anti-join shape cost
-    ~3 extra stage barriers per run; per-phase profiling showed those
-    fixed costs were the main drag on N->4N scaling efficiency.)
+    persisted signature, bucket and pair tables) — callers should
+    ``release_cached_deps`` after materializing.
     """
-    # Persist the signature table: it feeds THREE plan branches (band
-    # explode + the two verify joins), and without a persist each branch
-    # re-runs the Arrow signature UDF over the full corpus — the most
-    # expensive per-row work in the detector, paid 3x instead of 1x.
-    # Released with the other deps via release_cached_deps.
-    sigs = sigs.persist()
-    bands = band_table(sigs, id_col, cfg, string_keys=string_keys)
-    if num_partitions:
-        bands = bands.repartition(num_partitions, "band_key")
-    # singleton buckets can produce no pair, no star edge, and no hot row —
-    # drop them right at the window output, BEFORE the persist and the
-    # self-join. At 1M docs half the 32M band rows are singletons and the
-    # detect tail went 36.9s -> 21.3s (-42%) with a bit-identical edge set;
-    # the win only grows with corpus uniqueness. The window itself still
-    # sees every row (sizes must count singletons) and keeps its spill-safe
-    # ExternalAppendOnlyUnsafeRowArray behavior on pathological buckets.
-    bw = (
-        capped_band_table(bands, cfg)
-        .where(F.col("bucket_size") >= 2)
-        .persist()
+    auto, cand, hot, deps = lsh_candidates(
+        sigs, sigs.where(F.lit(False)), id_col, cfg, num_partitions, string_keys
     )
-    ok = bw.where(F.col("bucket_size") <= cfg.bucket_cap).select("band_key", "id")
-    hot = (
-        bw.where(F.col("bucket_size") > cfg.bucket_cap)
-        .select("band_key", "bucket_size")
-        .distinct()
-    )
-    # hot-bucket star edges: linear in bucket size, verified like any pair
-    star = (
-        bw.where((F.col("bucket_size") > cfg.bucket_cap) & (F.col("id") != F.col("root")))
-        .select(F.col("root").alias("src"), F.col("id").alias("dst"))
-        .distinct()
-    )
-    # explicit salting of skewed buckets (cfg.bucket_salt > 1): hot-bucket
-    # members also pair within id-hashed sub-buckets — ~c^2/salt verified
-    # pairs per hot bucket recover member<->member recall the star-only
-    # path trades away; the salted self-join is co-partitioned on the
-    # salted key, never on the raw hot band_key
-    if cfg.bucket_salt > 1:
-        salted = bw.where(F.col("bucket_size") > cfg.bucket_cap).select(
-            F.xxhash64("band_key", F.pmod(F.xxhash64("id"), F.lit(cfg.bucket_salt))).alias(
-                "band_key"
-            ),
-            "id",
-        )
-        sp = (
-            salted.alias("a")
-            .join(salted.alias("b"), "band_key")
-            .where(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-            .distinct()
-        )
-        star = star.unionByName(sp)
-    # persist: the auto/ambiguous split reads the pair table twice — without
-    # it the whole LSH bucket join runs twice.
-    pairs = candidate_pairs(ok, cfg).persist()
-    # hybrid verify: high-band-match pairs (the quadratic bulk — exact dups,
-    # template farms) are accepted outright; only the statistically ambiguous
-    # low-match tail pays the signature-join shuffle.
-    auto = pairs.where(F.col("n_bands") >= cfg.auto_accept_bands).select("src", "dst")
-    ambiguous = pairs.where(F.col("n_bands") < cfg.auto_accept_bands).select("src", "dst")
-    verified = verify_pairs(
-        ambiguous.unionByName(star), sigs, id_col, cfg
-    ).select("src", "dst")
-    edges = _attach_deps(auto.unionByName(verified).distinct(), [sigs, bw, pairs])
-    return edges, hot
+    verified = verify_pairs(cand, sigs, id_col, cfg).select("src", "dst")
+    return _attach_deps(auto.unionByName(verified).distinct(), deps), hot
 
 
 def minhash_edges(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,

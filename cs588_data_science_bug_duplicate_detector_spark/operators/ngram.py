@@ -104,8 +104,8 @@ def ngram_jaccard_pairs(
     # higher-order lambda (the hot loop: a 500-member boilerplate co-bucket
     # is 125k interpreted struct builds per gram), and (b) it materialized
     # each co-bucket as one in-memory array in a single aggregation state —
-    # the exact OOM-at-10^12-docs shape operators/minhash.py's round-5
-    # comment rejects. The self-join streams the same quadratic volume
+    # the exact OOM-at-10^12-docs shape ``buckets.bucket_window``'s
+    # round-5 note rejects. The self-join streams the same quadratic volume
     # through codegen with spill-safe operators instead. Measured at sf1.0:
     # 22.1s -> ~5s, bit-identical result (oracle-checked).
     group_keys = ["gram"] + (["g"] if group_col else [])

@@ -18,6 +18,8 @@ from pyspark.sql.types import LongType
 
 from ..config import DedupConfig
 from ..functions import hashing
+from .buckets import pair_buckets
+from .minhash import _attach_deps, hot_bucket_stats
 
 
 @pandas_udf(LongType())
@@ -36,23 +38,36 @@ def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> Data
 
 
 def chunk_table(sigs: DataFrame, id_col: str, cfg: DedupConfig, sig_col: str = "simhash") -> DataFrame:
-    """(id, chunk_id, chunk_val) — one row per 16-bit chunk per doc."""
+    """(id, sig, band_key) — one row per chunk per doc, in the bucket-table
+    format of ``buckets.pair_buckets``. The pair (chunk_id, chunk_val)
+    folds into ONE exact long key ``chunk_id << width | chunk_val`` —
+    injective, so the buckets are exactly the per-chunk equi-join's."""
     width = cfg.simhash_bits // cfg.simhash_chunks
     mask = (1 << width) - 1
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("chunk_id"),
-                F.shiftrightunsigned(F.col(sig_col), i * width).bitwiseAND(F.lit(mask)).alias("chunk_val"),
-            )
-            for i in range(cfg.simhash_chunks)
-        ]
-    )
+    keys = F.array(*[
+        F.lit(i << width).cast("long").bitwiseOR(
+            F.shiftrightunsigned(F.col(sig_col), i * width).bitwiseAND(F.lit(mask)))
+        for i in range(cfg.simhash_chunks)
+    ])
     return (
         sigs.where(F.col(sig_col).isNotNull())  # content-less docs: never candidates
-        .select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig"), F.explode(chunks).alias("c"))
-        .select("id", "sig", F.col("c.chunk_id").alias("chunk_id"), F.col("c.chunk_val").alias("chunk_val"))
+        .select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig"), F.explode(keys).alias("band_key"))
     )
+
+
+def hamming_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupConfig,
+                  num_partitions: int | None = None) -> tuple[DataFrame, DataFrame]:
+    """``buckets.pair_buckets`` over the chunk keys + SimHash's verify rule
+    -> (edges, hot): pairs and star edges within ``cfg.simhash_hamming_max``
+    bits, a JVM-side popcount on the XOR of the carried ``sig`` payloads —
+    no join, no Python. Hot chunk buckets (boilerplate farms agreeing on a
+    chunk) are capped at ``cfg.simhash_chunk_cap`` like LSH buckets."""
+    pairs, star, hot, deps = pair_buckets(
+        chunk_table(new_sigs, id_col, cfg), chunk_table(old_sigs, id_col, cfg),
+        cfg.simhash_chunk_cap, 1, num_partitions,
+    )
+    near = F.expr("bit_count(src_sig ^ dst_sig)") <= F.lit(cfg.simhash_hamming_max)
+    return _attach_deps(pairs.unionByName(star).where(near).select("src", "dst").distinct(), deps), hot
 
 
 def simhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
@@ -60,62 +75,15 @@ def simhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
                             stats_out: dict | None = None) -> DataFrame:
     """sigs(id, simhash) -> verified Hamming<=cfg.simhash_hamming_max edges (src < dst).
 
-    Hot chunk buckets (boilerplate farms: hundreds of near-identical pages
-    agreeing on a 16-bit chunk) are capped like LSH buckets: min-member star
-    edges, Hamming-verified, linear instead of quadratic. Pass ``stats_out``
-    to surface the cap as lineage metrics (hot chunk count / capped rows /
-    max bucket) — computed from the persisted chunk table, no extra scan.
+    ``hamming_edges`` with an empty old side: min-member star edges for
+    hot chunk buckets, Hamming-verified, linear instead of quadratic. Pass
+    ``stats_out`` to surface the cap as lineage metrics (hot chunk count /
+    capped rows / max bucket) — computed from the persisted chunk table,
+    no extra scan. Release via ``minhash.release_cached_deps``.
     """
-    from pyspark.sql import Window
-
-    chunks = chunk_table(sigs, id_col, cfg)
-    if num_partitions:
-        chunks = chunks.repartition(num_partitions, "chunk_id", "chunk_val")
-    # one window pass: bucket size + bucket root (min id, with its sig for
-    # the Hamming verify) over the chunk key — no size aggregation round
-    # trip, no broadcast barrier; the self-join below is co-partitioned
-    w = Window.partitionBy("chunk_id", "chunk_val")
-    cw = (
-        chunks.withColumn("n", F.count("*").over(w))
-        .withColumn("r", F.min(F.struct("id", "sig")).over(w))
-        # singleton chunk buckets emit nothing (no pair, star, or hot row):
-        # drop them before the persist + self-join — same measured win as
-        # the LSH band path (operators/minhash.py, detect tail -33%)
-        .where(F.col("n") >= 2)
-        .persist()
-    )
-    if stats_out is not None:
-        row = (
-            cw.where(F.col("n") > cfg.simhash_chunk_cap)
-            .select("chunk_id", "chunk_val", "n")
-            .distinct()
-            .agg(
-                F.count("*").alias("hot_chunks"),
-                F.coalesce(F.sum("n"), F.lit(0)).alias("rows_in_hot_chunks"),
-                F.coalesce(F.max("n"), F.lit(0)).alias("max_chunk_size"),
-            )
-            .collect()[0]
-        )
-        stats_out.update({k: int(row[k]) for k in row.asDict()})
-    ok = cw.where(F.col("n") <= cfg.simhash_chunk_cap).select("chunk_id", "chunk_val", "id", "sig")
-    ham = F.expr("bit_count(a.sig ^ b.sig)")
-    a = ok.alias("a")
-    b = ok.alias("b")
-    joined = (
-        a.join(b, ["chunk_id", "chunk_val"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .where(ham <= F.lit(cfg.simhash_hamming_max))
-        .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-    )
-    star = (
-        cw.where((F.col("n") > cfg.simhash_chunk_cap) & (F.col("id") != F.col("r.id")))
-        .where(F.expr("bit_count(sig ^ r.sig)") <= F.lit(cfg.simhash_hamming_max))
-        .select(F.col("r.id").alias("src"), F.col("id").alias("dst"))
-    )
-    from .minhash import _attach_deps
-
-    # release via minhash.release_cached_deps after materializing
-    edges = _attach_deps(joined.unionByName(star).distinct(), [cw])
+    edges, hot = hamming_edges(sigs, sigs.where(F.lit(False)), id_col, cfg, num_partitions)
+    if stats_out is not None:  # hot_chunks, rows_in_hot_chunks, max_chunk_size
+        stats_out.update({k.replace("bucket", "chunk"): v for k, v in hot_bucket_stats(hot).items()})
     return edges
 
 

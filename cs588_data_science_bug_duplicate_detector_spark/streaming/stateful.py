@@ -3,11 +3,12 @@
 The batch detectors answer "which docs in THIS table are near-dups"; a
 crawl ingest needs the incremental question — "is this page a near-dup of
 ANYTHING already admitted" — without re-scanning the corpus per batch.
-This is the ``applyInPandasWithState`` analog of the batch LSH star-edge
-pass (operators/minhash.py:194): group the band-exploded stream by LSH
-``band_key``; the per-key state is a SINGLE long — the minimum doc id
-ever seen in that bucket (its root). Every later arrival in the bucket
-emits a candidate star edge ``(root, new_doc)``.
+This is the ``applyInPandasWithState`` analog of the star edges of the
+batch bucket-pairing core (``operators.buckets.pair_buckets``), kept as
+its own stateful operator rather than built on that core: group the
+band-exploded stream by LSH ``band_key``; the per-key state is a SINGLE
+long — the minimum doc id ever seen in that bucket (its root). Every
+later arrival in the bucket emits a candidate star edge ``(root, new_doc)``.
 
 Correctness: within a bucket, every doc is connected to the bucket root
 by an emitted edge (when a later batch brings a smaller id, the old root

@@ -4,6 +4,8 @@ evidence for the engine's key plan properties:
 - parquet scans push filters and prune columns (PushedFilters/ReadSchema)
 - no CartesianProduct in any production detector plan
 - the LSH pair self-join is co-partitioned on band_key (single exchange)
+- each batch detector (MinHash, SimHash) feeds its bucket window through
+  exactly one exchange: the fold's empty old side is pruned before planning
 - whole-stage codegen spans cover the column-expression operators
 - the only broadcast-nested-loop join is the documented brute-force ANN
   baseline (the scale path is the bucketed lsh_topk)
@@ -29,6 +31,15 @@ def formatted_plan(df) -> str:
     )
 
 
+def bucket_window_exchanges(edges) -> list[str]:
+    """Exchange operators below a detector's persisted bucket window (the
+    ``buckets.pair_buckets`` table in the edges' ``_cached_deps``)."""
+    bw = next(d for d in edges._cached_deps if "bucket_size" in d.columns)
+    tree = bw._jdf.queryExecution().executedPlan().toString()
+    assert "Window [" in tree and "Union" not in tree and "LeftSemi" not in tree, tree
+    return [l.strip(" :+-") for l in tree.splitlines() if "Exchange" in l]
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -36,7 +47,9 @@ def main() -> None:
     from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
     from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
         minhash_edges,
+        release_cached_deps,
     )
+    from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import simhash_edges
     from cs588_data_science_bug_duplicate_detector_spark.session import get_spark
 
     spark = get_spark("plan-audit", cores=8)
@@ -49,8 +62,12 @@ def main() -> None:
         "2. no CartesianProduct anywhere in the detector plans\n"
         "3. the LSH pair self-join reuses the band-table exchange (co-partitioned)\n"
         "4. the only BroadcastNestedLoopJoin is the documented brute-force ANN baseline\n"
-        "5. the incremental fold prunes the stored index (partition filter on inc,\n"
-        "   column-pruned signature scan) and semi-joins touched buckets BEFORE pairing\n"
+        "3b. each batch detector (MinHash, SimHash) feeds its bucket window through\n"
+        "   exactly ONE exchange — the empty old side of the shared bucket-pairing\n"
+        "   core is pruned before planning (no Union, no LeftSemi)\n"
+        "5. the incremental folds (MinHash and SimHash) prune the stored index\n"
+        "   (partition filter on inc, column-pruned signature scan) and semi-join\n"
+        "   touched buckets BEFORE pairing\n"
         "6. the decontamination gram join is broadcast-only (the corpus gram side\n"
         "   never shuffles for the join)\n\n"
     )
@@ -81,6 +98,22 @@ def main() -> None:
         "Excerpt (first 80 plan lines):\n\n"
     )
     out.write("```\n" + "\n".join(plan.strip().splitlines()[:80]) + "\n```\n\n")
+
+    # 3b. batch = fold with an empty old side: one exchange into each window
+    sh_edges = simhash_edges(docs, "doc_id", "text", DedupConfig())
+    out.write(
+        "## 2b. Batch detectors share the bucket-pairing core (operators/buckets.py)\n\n"
+        "`pair_buckets` runs the batch detectors as the incremental fold with an\n"
+        "empty old side. The empty branch is pruned before planning, so each bucket\n"
+        "window is fed by exactly one hash exchange on `band_key` (no Union, no\n"
+        "LeftSemi):\n\n```\n"
+    )
+    for name, e in (("minhash", edges), ("simhash", sh_edges)):
+        ex = bucket_window_exchanges(e)
+        assert len(ex) == 1 and "hashpartitioning(band_key" in ex[0], (name, ex)
+        out.write(f"{name}: {ex[0]}\n")
+        release_cached_deps(e)
+    out.write("```\n\n")
 
     # 4. ANN plans
     knn = E.q_embedding_knn(spark, SF)
@@ -167,6 +200,7 @@ def main() -> None:
         DedupIndex,
         _signed_increment,
         incremental_minhash_edges,
+        incremental_simhash_edges,
     )
 
     tmp = tempfile.mkdtemp(prefix="plan_inc_")
@@ -176,44 +210,39 @@ def main() -> None:
         new_sigs = _signed_increment(
             docs.where(F.col("doc_id") % 3 == 1), "doc_id", "text", DedupConfig()
         )
-        inc_edges, _ = incremental_minhash_edges(
-            new_sigs.select("id", "minhash"),
-            idx.signatures(spark, upto=1).select("id", "minhash"),
-            DedupConfig(),
+        old_sigs = idx.signatures(spark, upto=1)
+        mh_edges, _ = incremental_minhash_edges(
+            new_sigs.select("id", "minhash"), old_sigs.select("id", "minhash"), DedupConfig()
         )
-        plan_inc = formatted_plan(inc_edges)
-        assert "CartesianProduct" not in plan_inc
-        assert "LeftSemi" in plan_inc, plan_inc  # touched buckets only
-        # stored-index scan: partition-pruned on inc, column-pruned to
-        # (id, minhash) — text_md5 never read on the LSH branch
-        assert "PartitionFilters" in plan_inc and re.search(
-            r"PartitionFilters: \[[^\]]*inc", plan_inc
-        ), plan_inc
-        sig_schemas = [
-            l for l in plan_inc.splitlines() if "ReadSchema" in l and "minhash" in l
-        ]
-        assert sig_schemas and all(
-            "text_md5" not in l and "simhash" not in l for l in sig_schemas
-        ), plan_inc
+        sh_edges = incremental_simhash_edges(
+            new_sigs.select("id", "simhash"), old_sigs.select("id", "simhash"), DedupConfig()
+        )
         out.write(
-            "## 5. Incremental fold (operators/incremental.py)\n\n"
-            "New-increment band keys vs the stored signature index: the old side is\n"
-            "partition-pruned (`inc < n`) and column-pruned to (id, minhash), a\n"
+            "## 5. Incremental folds (operators/incremental.py)\n\n"
+            "New-increment bucket keys vs the stored signature index: the old side is\n"
+            "partition-pruned (`inc < n`) and column-pruned to (id, <signature>), a\n"
             "LEFT SEMI join drops untouched buckets BEFORE the window/pairing work,\n"
-            "and no CartesianProduct appears anywhere in the fold:\n\n"
+            "and no CartesianProduct appears anywhere in either fold:\n\n"
         )
-        inc_lines = []
-        for l in plan_inc.splitlines():
-            if "LeftSemi" in l or "PartitionFilters" in l:
-                t = l.strip().lstrip(": +-").strip()
-                if t not in inc_lines:
-                    inc_lines.append(t)
-        out.write("```\n" + "\n".join(inc_lines[:5]) + "\n```\n\n")
-        from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
-            release_cached_deps,
-        )
-
-        release_cached_deps(inc_edges)
+        for sig, other, e in (("minhash", "simhash", mh_edges), ("simhash", "minhash", sh_edges)):
+            plan_inc = formatted_plan(e)
+            assert "CartesianProduct" not in plan_inc
+            assert "LeftSemi" in plan_inc, plan_inc  # touched buckets only
+            # stored-index scan: partition-pruned on inc, column-pruned to
+            # (id, <sig>) — text_md5 and the other signature never read
+            assert re.search(r"PartitionFilters: \[[^\]]*inc", plan_inc), plan_inc
+            sig_schemas = [
+                l for l in plan_inc.splitlines() if "ReadSchema" in l and sig in l
+            ]
+            assert sig_schemas and all(
+                "text_md5" not in l and other not in l for l in sig_schemas
+            ), plan_inc
+            lines = [l.strip().lstrip(": +-").strip() for l in plan_inc.splitlines()]
+            evidence = [next(l for l in lines if "LeftSemi" in l),
+                        next(l for l in lines if re.match(r"PartitionFilters: \[[^\]]*inc", l)),
+                        sig_schemas[0].strip()]
+            out.write(f"{sig} fold:\n\n```\n" + "\n".join(evidence) + "\n```\n\n")
+            release_cached_deps(e)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -41,6 +41,10 @@ def main() -> None:
     ap.add_argument("--compact-at", type=int, default=12)
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
+    # compaction must land strictly inside the fold sequence: both the
+    # pre- and post-compaction means need at least one fold
+    if not 0 < args.compact_at < args.folds:
+        ap.error(f"--compact-at must satisfy 0 < compact-at < folds ({args.folds})")
 
     ensure_corpus(args.docs)
 
@@ -60,7 +64,8 @@ def main() -> None:
     )
     # residue split over 2*folds buckets: base = the upper half (~50%),
     # each fold adds ONE residue (~1/(2*folds) of the corpus) — planted
-    # dup clusters cross every boundary because doc ids are content hashes
+    # dup clusters cross every boundary because doc ids are URL hashes
+    # (xxhash64(url)), independent of the content that makes docs dups
     mod = 2 * args.folds
     res = F.pmod(F.col("doc_id"), F.lit(mod))
     base_docs = docs.where(res >= args.folds)

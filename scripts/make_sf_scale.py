@@ -116,6 +116,10 @@ def main(src: str, dst: str, factor: int) -> None:
     emb = rd("embeddings")
     n_vec = int(emb.vec_id.max()) + 1
     n_lab = int(emb.label.max()) + 1
+    # label is an int32 grouping column: refuse a factor whose shifted
+    # labels would silently wrap instead of casting past the range
+    if (factor - 1) * n_lab + int(emb.label.max()) > np.iinfo(np.int32).max:
+        raise ValueError(f"factor {factor} x {n_lab} labels overflows the int32 label column")
     dim = len(emb.embedding.iloc[0])
     mat = np.stack(emb.embedding.to_numpy()).astype(np.float64)
     reps = []

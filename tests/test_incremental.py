@@ -90,8 +90,10 @@ def test_incremental_matches_batch_on_planted_corpus(spark, tmp_path):
 
 def test_incremental_hot_bucket_and_blank_docs(spark, tmp_path):
     # bucket_salt exercises the salted sub-bucket pairing in BOTH the
-    # batch path and the fold — equality below covers their agreement
-    cfg = DedupConfig(bucket_cap=8, bucket_salt=4)
+    # batch path and the fold; simhash_chunk_cap pushes the farm past the
+    # SimHash chunk cap too, so both detectors' hot-bucket and new-root
+    # star edges run — equality below covers their agreement
+    cfg = DedupConfig(bucket_cap=8, bucket_salt=4, simhash_chunk_cap=8)
     base = " ".join(f"tok{i}" for i in range(120))
     rows = [(i, f"{base} variant{i}") for i in range(60)]  # boilerplate farm
     rows += [(100, None), (101, "   "), (102, "wholly unrelated text here")]
