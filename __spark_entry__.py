@@ -877,23 +877,11 @@ def q_streaming_batch_equiv(spark, sf_dir):
         # every planted (orig, copy) pair shares a STREAM label — only
         # possible if bucket roots survived across micro-batches
         pairs = planted.select(
-            (F.col("doc_id") - OFF).alias("qa"), F.col("doc_id").alias("qb")
+            (F.col("doc_id") - OFF).alias("a"), F.col("doc_id").alias("b")
         )
-        la = stream_labels.select(F.col("id").alias("qa"), F.col("cluster_id").alias("ca"))
-        lb = stream_labels.select(F.col("id").alias("qb"), F.col("cluster_id").alias("cb2"))
-        crossed = (
-            pairs.join(la, "qa").join(lb, "qb")
-            .agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    F.sum((F.col("ca") == F.col("cb2")).cast("int")), F.lit(0)
-                ).alias("ok"),
-            )
-            .select(
-                F.lit("cross_batch_planted_pairs_connected").alias("check_name"),
-                ((F.col("n") > 0) & (F.col("ok") == F.col("n"))).alias("passed"),
-            )
-        )
+        crossed = _pairs_connected_agg(
+            stream_labels, pairs, "minhash", "cross_batch_planted_pairs_connected"
+        ).drop("detector")
         # composed-sink invariants (round 5): drive the SAME 3-file stream
         # through the foreachBatch pair — signature_log_sink first (so
         # every doc's signature is logged before any edge verifies), then
@@ -951,21 +939,9 @@ def q_streaming_batch_equiv(spark, sf_dir):
         vlabels = connected_components(
             vlog.select("src", "dst"), vertices=docs.select("doc_id")
         )
-        va = vlabels.select(F.col("id").alias("qa"), F.col("cluster_id").alias("ca"))
-        vb = vlabels.select(F.col("id").alias("qb"), F.col("cluster_id").alias("cb2"))
-        vcrossed = (
-            pairs.join(va, "qa").join(vb, "qb")
-            .agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    F.sum((F.col("ca") == F.col("cb2")).cast("int")), F.lit(0)
-                ).alias("ok"),
-            )
-            .select(
-                F.lit("verified_log_planted_pairs_connected").alias("check_name"),
-                ((F.col("n") > 0) & (F.col("ok") == F.col("n"))).alias("passed"),
-            )
-        )
+        vcrossed = _pairs_connected_agg(
+            vlabels, pairs, "minhash", "verified_log_planted_pairs_connected"
+        ).drop("detector")
         res = (
             equal.unionByName(nonempty).unionByName(crossed)
             .unionByName(all_checked).unionByName(vcrossed)
@@ -1054,24 +1030,11 @@ def q_incremental_dedup(spark, sf_dir):
             ((F.col("n") > 0) & (F.col("mismatched") == 0)).alias("passed"),
         )
         pairs = planted.select(
-            (F.col("doc_id") - OFF).alias("qa"), F.col("doc_id").alias("qb")
+            (F.col("doc_id") - OFF).alias("a"), F.col("doc_id").alias("b")
         )
-        la = labels.select(F.col("id").alias("qa"), F.col("cluster_id").alias("ca"))
-        lb = labels.select(F.col("id").alias("qb"), F.col("cluster_id").alias("cb2"))
-        crossed = (
-            pairs.join(la, "qa")
-            .join(lb, "qb")
-            .agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    F.sum((F.col("ca") == F.col("cb2")).cast("int")), F.lit(0)
-                ).alias("ok"),
-            )
-            .select(
-                F.lit("cross_increment_planted_pairs_connected").alias("check_name"),
-                ((F.col("n") > 0) & (F.col("ok") == F.col("n"))).alias("passed"),
-            )
-        )
+        crossed = _pairs_connected_agg(
+            labels, pairs, "incremental", "cross_increment_planted_pairs_connected"
+        ).drop("detector")
         three = spark.createDataFrame(
             [("index_has_three_increments", idx.meta()["n_increments"] == 3)],
             "check_name string, passed boolean",

@@ -1,4 +1,4 @@
-"""Extra benchmarks for the optimization rounds (bench.py is FROZEN for
+"""Query benchmark for the optimization rounds (bench.py is FROZEN for
 measurement — this file is where iteration happens; see guide §1.4).
 
 Usage:
@@ -7,6 +7,15 @@ Usage:
 - times each named query (default: the full BENCH_QUERIES list) with the
   SAME methodology as bench.py (df.count(), min over passes) so numbers
   are directly comparable with the frozen harness;
+- ``count_samples`` keeps every pass's time per query (median / spread
+  of repeated runs; the label cache is cleared between passes, so a
+  repeat times the compute, not a cache hit);
+- each timed run is a stage span of ``perfbench/harness.py``'s
+  ``Tracer``: ``count_stages`` holds the status-store counters of each
+  query's fastest pass (jobs, stages, tasks, executor run time
+  ``exec_s``, shuffle write and spill MB, ``busy`` = exec_s / (wall x
+  cores)). The span's end is stamped before its counters are read, so
+  they add nothing to the timing;
 - ``--noop`` additionally times a noop-sink materialization (computes
   every column of every row — guide §1.4) per query;
 - ``--explain OUTDIR`` writes ``<query>.txt`` with .explain("formatted")
@@ -15,98 +24,87 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entrymod
-from bench import BENCH_QUERIES
-from cs588_data_science_bug_duplicate_detector_spark.session import get_spark
-
 
 def main() -> None:
-    args = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    passes, noop, explain_dir = 1, False, None
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        a = args[i]
-        if a == "--sf":
-            i += 1
-            sf_dir = args[i]
-        elif a == "--passes":
-            i += 1
-            passes = int(args[i])
-        elif a == "--noop":
-            noop = True
-        elif a == "--explain":
-            i += 1
-            explain_dir = args[i]
-        else:
-            names.append(a)
-        i += 1
-    if not names:
-        names = list(BENCH_QUERIES)
+    ap = argparse.ArgumentParser(description="Time queries() entries the way bench.py does.")
+    ap.add_argument("--sf", default=sf_dir, help="scale-factor data directory")
+    ap.add_argument("--passes", type=int, default=1, help="timed passes; the min is reported")
+    ap.add_argument("--noop", action="store_true", help="also time a noop-sink write per query")
+    ap.add_argument("--explain", metavar="OUTDIR", help="write each query's formatted plan here")
+    ap.add_argument("queries", nargs="*", metavar="query", help="default: bench.BENCH_QUERIES")
+    args = ap.parse_args()
 
+    import __spark_entry__ as entrymod
+    from bench import BENCH_QUERIES
+    from cs588_data_science_bug_duplicate_detector_spark.session import get_spark
+    from perfbench.harness import Tracer
+
+    names = args.queries or list(BENCH_QUERIES)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("bench-extra", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
     # same warmup contract as bench.py
-    import re
-
-    warm_dir = re.sub(r"sf[\d.]+/?$", "sf0.001", sf_dir)
+    warm_dir = re.sub(r"sf[\d.]+/?$", "sf0.001", args.sf)
     if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
+        warm_dir = args.sf
     qs["minhash_clusters_fast"](spark, warm_dir).count()
     entrymod.clear_label_cache()
 
-    if explain_dir:
-        os.makedirs(explain_dir, exist_ok=True)
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
         for name in names:
-            df = qs[name](spark, sf_dir)
+            df = qs[name](spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(os.path.join(explain_dir, f"{name}.txt"), "w") as f:
+            with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(plan)
             print(f"explain written: {name}")
         entrymod.clear_label_cache()
 
-    timings: dict[str, float] = {}
-    noops: dict[str, float] = {}
-    for p in range(passes):
+    modes = {"count": lambda df: df.count()}
+    if args.noop:
+        modes["noop"] = lambda df: df.write.format("noop").mode("overwrite").save()
+    tr = Tracer("bench_extra", cpus)
+    best = {m: {} for m in modes}
+    samples = {m: {} for m in modes}
+    stages = {m: {} for m in modes}
+    for p in range(args.passes):
         if p:
             entrymod.clear_label_cache()
         for name in names:
-            spark.sparkContext.setJobDescription(f"bench_extra: {name} (count)")
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.count()
-            t = round(time.time() - t0, 3)
-            timings[name] = min(timings.get(name, t), t)
-            if noop:
-                spark.sparkContext.setJobDescription(f"bench_extra: {name} (noop)")
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                t = round(time.time() - t0, 3)
-                noops[name] = min(noops.get(name, t), t)
-            spark.sparkContext.setJobDescription(None)
+            for mode, run in modes.items():
+                with tr.span(f"{name} ({mode})", spark.sparkContext) as s:
+                    run(qs[name](spark, args.sf))
+                t = round(s["end"] - s["start"], 3)
+                samples[mode].setdefault(name, []).append(t)
+                if t <= best[mode].get(name, t):
+                    best[mode][name] = t
+                    stages[mode][name] = {k: round(v, 3) for k, v in s["counters"].items()}
 
     out = {
-        "sf_dir": sf_dir,
+        "sf_dir": args.sf,
         "cpus": cpus,
-        "passes": passes,
-        "count_timings": timings,
-        "total": round(sum(timings.values()), 3),
+        "passes": args.passes,
+        "count_timings": best["count"],
+        "total": round(sum(best["count"].values()), 3),
     }
-    if noop:
-        out["noop_timings"] = noops
+    for mode in modes:
+        if mode != "count":
+            out[f"{mode}_timings"] = best[mode]
+        out[f"{mode}_samples"] = samples[mode]
+        out[f"{mode}_stages"] = stages[mode]
     spark.stop()
     print(json.dumps(out))
 

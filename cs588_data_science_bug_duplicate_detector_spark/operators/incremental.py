@@ -90,9 +90,8 @@ from .minhash import (
     release_cached_deps,
     verify_pairs,
     with_dual_signatures,
-    with_minhash,
 )
-from .simhash import hamming_edges, with_simhash
+from .simhash import hamming_edges
 
 
 def _signed_increment(docs: DataFrame, id_col: str, text_col: str,
@@ -100,23 +99,14 @@ def _signed_increment(docs: DataFrame, id_col: str, text_col: str,
     """(id, minhash, simhash, text_md5): everything the index stores per
     doc — both hash signatures come from ONE Arrow pass
     (``with_dual_signatures``: one JVM->Python text transfer, one shared
-    tokenization).
+    tokenization; char-shingle MinHash under ``shingle_mode="char"``,
+    exactly as the batch pipeline signs).
 
     ``text_md5`` is NULL for content-less docs (NULL/whitespace text) for
     the same reason ``exact_dup_edges`` filters them: "no content" must
     never group as "same content".
     """
-    if cfg.shingle_mode == "char":
-        # char-shingle MinHash (CJK/unsegmented scripts) — the dual-pass
-        # kernel is token-only, so compute each signature with the SAME
-        # kernels the batch detectors use (SimHash stays token-based in
-        # the batch path too); stored signatures must be bit-identical to
-        # what a from-scratch run computes or the equality contract breaks
-        sigs = with_simhash(
-            with_minhash(docs.select(id_col, text_col), text_col, cfg), text_col
-        )
-    else:
-        sigs = with_dual_signatures(docs.select(id_col, text_col), text_col, cfg)
+    sigs = with_dual_signatures(docs.select(id_col, text_col), text_col, cfg)
     return sigs.select(
         F.col(id_col).alias("id"),
         "minhash",

@@ -11,8 +11,14 @@ Plan notes (round 6): grams are built once by an Arrow-batched pandas
 kernel (``ngram_udf`` — the interpreted slice+concat lambda per gram was
 the per-row hot loop), exploded as xxhash64 longs, and co-bucket pairs
 come from a co-partitioned SELF-JOIN whose two branches share ONE
-exchange (ReusedExchange), so the gram table is computed and shuffled
-once while pair generation stays inside whole-stage codegen. The input
+exchange, so the gram table is computed and shuffled once for the pairs
+while pair generation stays inside whole-stage codegen. The sharing is an
+AQE stage reuse: it shows only in the final plan printed after an action
+(``plans/r06/ngram_jaccard_pairs_final.txt``, sf0.01: ReusedExchange (11)
+reuses the gram Exchange (8)), not in the static plan
+(``plans/r06/ngram_jaccard_pairs_after.txt``). The per-doc gram counts
+are NOT served from it: they rescan and re-run the gram UDF (Scan (21) ->
+ArrowEvalPython (25) in the same plan). The input
 is also explicitly spread across the cluster first: a single parquet
 file otherwise serializes the whole gram computation into one task.
 """
@@ -96,11 +102,12 @@ def ngram_jaccard_pairs(
         F.explode(F.transform("grams", lambda s: F.xxhash64(s))).alias("gram"),
     )
     # Co-bucket pairs via a co-partitioned SELF-JOIN of the exploded gram
-    # table: both join branches are the identical subplan, so Spark plans
-    # ONE exchange + ReusedExchange — the gram computation and shuffle are
-    # paid once, and pair generation runs inside whole-stage codegen. The
-    # round-5 groupBy+collect_list+nested-transform shape avoided the
-    # second shuffle too, but (a) its pair builder was an INTERPRETED
+    # table: both join branches are the identical subplan, so AQE runs ONE
+    # exchange and reuses its stage for the other branch (ReusedExchange in
+    # the final plan, see the module docstring) — the gram computation and
+    # shuffle are paid once for the pairs, and pair generation runs inside
+    # whole-stage codegen. The round-5 groupBy+collect_list+nested-transform
+    # shape avoided the second shuffle too, but (a) its pair builder was an INTERPRETED
     # higher-order lambda (the hot loop: a 500-member boilerplate co-bucket
     # is 125k interpreted struct builds per gram), and (b) it materialized
     # each co-bucket as one in-memory array in a single aggregation state —
@@ -114,10 +121,11 @@ def ngram_jaccard_pairs(
     # Pair rows carry ONLY (src, dst): the co-bucket volume is quadratic
     # (tens of millions of rows at sf1.0), so every byte per row is paid
     # millions of times — n_grams is functionally dependent on the id and
-    # re-attaches after the count from a per-id aggregate of the SAME
-    # reused exchange (guide §2.3 "shuffle keys and metadata instead of
-    # payloads"). AQE sees the tiny sizes table at runtime and plans a
-    # broadcast join for the attach.
+    # re-attaches after the count from a per-id aggregate (guide §2.3
+    # "shuffle keys and metadata instead of payloads"). That aggregate is
+    # planned from its own scan + gram UDF pass, not from the pairs'
+    # exchange. AQE sees the tiny sizes table at runtime and plans a
+    # broadcast join for the attach (one broadcast, reused for both ends).
     # SHUFFLE_HASH hint: sort-merge would sort both 10M-row sides before
     # merging; a per-partition hash build skips both sorts (~20% off the
     # join stage at sf1.0). Safe here: this operator is the documented

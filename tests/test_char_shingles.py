@@ -33,3 +33,21 @@ def test_char_mode_finds_cjk_near_dups(spark):
 def test_token_mode_excludes_unsegmented_docs(spark):
     # zero ASCII tokens -> NULL signatures -> no candidates, no mega-merge
     assert _edges(spark, DedupConfig()) == set()
+
+
+def test_pipeline_char_mode_clusters_cjk_near_dups(spark, tmp_path):
+    # the default detector set signs through the one-pass dual kernel,
+    # which must honour char mode exactly as the MinHash-only path does
+    from cs588_data_science_bug_duplicate_detector_spark.plans.pipeline import run_pipeline
+
+    pages = spark.createDataFrame(
+        [("u/a", ZH_A), ("u/b", ZH_B), ("u/c", ZH_C)], "url string, text string"
+    )
+    for detectors in (("minhash",), ("minhash", "simhash")):
+        run = run_pipeline(
+            spark, pages, str(tmp_path / "_".join(detectors)),
+            DedupConfig(shingle_mode="char"), detectors=detectors,
+        )
+        label = {r["url"]: r["cluster_id"] for r in run.labels.collect()}
+        assert label["u/a"] == label["u/b"], detectors
+        assert label["u/c"] != label["u/a"], detectors
