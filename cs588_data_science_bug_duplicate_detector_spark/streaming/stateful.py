@@ -23,7 +23,11 @@ Scale: state is one long per ACTIVE band bucket, expired after
 timestamp, the default semantics when ``ts_col`` is given) or wall clock
 — bounded by the active-crawl horizon, not corpus size; an unbounded
 10^12-doc crawl never accretes unbounded state. The shuffle is the band
-explode (bands × docs rows of two longs), identical to batch banding.
+explode (bands × docs rows of two longs), identical to batch banding. The
+operator runs ONCE per micro-batch: ``verified_edges_sink`` persists the
+batch's candidate edges before reading them, so the pandas state function
+and the state-store load/commit are paid once per trigger, not once per
+read of the foreachBatch frame.
 
 Reference parity: the reference has no streaming at all; this extends the
 candidate-pair semantics of preprocess_data.py:107-114 to an unbounded
@@ -256,6 +260,14 @@ def verified_edges_sink(
     promises. Callers wanting verified-only edges filter
     ``est_jaccard IS NOT NULL``.
 
+    The micro-batch is materialized ONCE: its distinct ``(src, dst)`` pairs
+    are persisted and every read in the sink (the endpoint projections, the
+    verifiable/unverifiable split) derives from that frame, released in a
+    ``finally``. foreachBatch hands the sink an un-persisted ``batch_df``
+    over the micro-batch's executed plan, so each read of it would re-run
+    the stateful operator — the pandas state function over every band
+    bucket plus a state-store load and commit of every partition.
+
     Verification is batch-local and stateless. foreachBatch itself only
     guarantees at-least-once invocation (a micro-batch replayed after a
     failure runs the sink again), so the write is made idempotent PER
@@ -301,7 +313,7 @@ def verified_edges_sink(
             return sigs()
         return sigs
 
-    def _latest_endpoint_sigs(batch_df: DataFrame, sig_df: DataFrame) -> DataFrame:
+    def _latest_endpoint_sigs(edges: DataFrame, sig_df: DataFrame) -> DataFrame:
         """Restrict the signature table to this batch's edge endpoints
         (broadcast semi-join — the batch is small, the log is not), then
         keep ONE row per doc. A recrawled page is logged once per batch it
@@ -314,8 +326,8 @@ def verified_edges_sink(
         from pyspark.sql import Window
 
         endpoints = (
-            batch_df.select(F.col("src").alias(id_col))
-            .unionByName(batch_df.select(F.col("dst").alias(id_col)))
+            edges.select(F.col("src").alias(id_col))
+            .unionByName(edges.select(F.col("dst").alias(id_col)))
             .distinct()
         )
         rel = sig_df.join(F.broadcast(endpoints), id_col, "semi")
@@ -334,32 +346,33 @@ def verified_edges_sink(
         if not layout_checked:
             _check_layout()
             layout_checked.append(True)
-        sig_df = _latest_endpoint_sigs(batch_df, _resolve_sigs(batch_df))
-        known = sig_df.select(F.col(id_col).alias("_kid"))
-        # edges with BOTH endpoint sigs present -> exact-Jaccard verify;
-        # the rest pass through unverified (est_jaccard NULL) — see docstring
-        checkable = (
-            batch_df.join(known, batch_df.src == F.col("_kid"), "semi")
-            .join(known, batch_df.dst == F.col("_kid"), "semi")
-        )
-        unverifiable = (
-            batch_df.exceptAll(checkable)
-            .select("src", "dst", F.lit(None).cast("double").alias("est_jaccard"))
-        )
-        verified = verify_pairs(checkable, sig_df, id_col, cfg)
-        (
-            # the same (src, dst) star edge can arrive from two band buckets
-            # in one micro-batch; the batch path applies .distinct(), so the
-            # edge log must too or its counts inflate for log consumers
-            # (round-5 ADVICE) — est_jaccard is a pure function of the pair,
-            # so (src, dst) dedup alone is exact
-            verified.unionByName(unverifiable)
-            .dropDuplicates(["src", "dst"])
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        # the same (src, dst) star edge can arrive from two band buckets in
+        # one micro-batch; the batch path applies .distinct(), so the edge
+        # log must too or its counts inflate for log consumers. Every read
+        # below goes through this one persisted frame (see docstring).
+        edges = batch_df.select("src", "dst").distinct().persist()
+        try:
+            sig_df = _latest_endpoint_sigs(edges, _resolve_sigs(batch_df))
+            known = sig_df.select(F.col(id_col).alias("_kid"))
+            # edges with BOTH endpoint sigs present -> exact-Jaccard verify;
+            # the rest pass through unverified (est_jaccard NULL) — see docstring
+            checkable = (
+                edges.join(known, edges.src == F.col("_kid"), "semi")
+                .join(known, edges.dst == F.col("_kid"), "semi")
+            )
+            unverifiable = edges.join(checkable, ["src", "dst"], "left_anti").withColumn(
+                "est_jaccard", F.lit(None).cast("double")
+            )
+            verified = verify_pairs(checkable, sig_df, id_col, cfg)
+            (
+                verified.unionByName(unverifiable)
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(out_dir)
+            )
+        finally:
+            edges.unpersist()
 
     return _write

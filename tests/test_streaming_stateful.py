@@ -108,6 +108,15 @@ def test_verified_edges_sink_foreachbatch(spark, tmp_path):
     sigs = with_minhash(docs.select("doc_id", "text"), "text", cfg).select(
         "doc_id", "minhash"
     )
+    # the sink persists each micro-batch; it must release it on every exit.
+    # Compare RDD ids, not counts: the map holds its values weakly, so other
+    # tests' unreferenced cached RDDs can drop out of it meanwhile.
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keys())
+
+    def new_cached():
+        return set(jsc.getPersistentRDDs().keys()) - cached
+
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
     q = (
         streaming_candidate_edges(stream, cfg, state_ttl_ms=None)
@@ -117,6 +126,7 @@ def test_verified_edges_sink_foreachbatch(spark, tmp_path):
         .start()
     )
     assert q.awaitTermination(120), "availableNow replay failed to terminate"
+    assert not new_cached()
     got = {(r["src"], r["dst"]) for r in spark.read.parquet(out).collect()}
     assert (10, 11) in got
     assert not any(20 in p for p in got)
@@ -127,9 +137,62 @@ def test_verified_edges_sink_foreachbatch(spark, tmp_path):
     sink = verified_edges_sink(sigs, "doc_id", cfg, out)
     cand = spark.createDataFrame([(10, 11)], "src long, dst long")
     sink(cand, 99)
+    assert not new_cached()
     n1 = spark.read.parquet(out).count()
     sink(cand, 99)  # replay of the same batch
     assert spark.read.parquet(out).count() == n1
+
+    # a write that raises (out_dir is a plain file) fails only after the
+    # persisted batch was materialized — the finally must still release it
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    plain = tmp_path / "plain_file"
+    plain.write_text("not a directory")
+    with pytest.raises(Py4JJavaError, match="not a directory"):
+        verified_edges_sink(sigs, "doc_id", cfg, str(plain))(cand, 0)
+    assert not new_cached()
+
+
+def test_verified_edges_sink_runs_stateful_operator_once(spark, tmp_path):
+    """foreachBatch hands the sink an un-persisted frame over the
+    micro-batch's executed plan: every read of it re-runs the stateful
+    operator and re-commits its state store. The sink materializes the batch
+    once, so one micro-batch updates each band bucket's state exactly once
+    (an operator run per read would multiply both counts by the reads)."""
+    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
+        band_table,
+        with_minhash,
+    )
+    from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
+        verified_edges_sink,
+    )
+
+    cfg = DedupConfig()
+    src = str(tmp_path / "src")
+    rows = [(i, _text("a")) for i in range(1, 5)]
+    rows += [(100 + i, _text(f"d{i}x")) for i in range(8)]
+    docs = spark.createDataFrame(rows, DOC_SCHEMA)
+    docs.coalesce(1).write.parquet(src)
+    sigs = with_minhash(docs, "text", cfg)
+    n_keys = band_table(sigs, "doc_id", cfg).select("band_key").distinct().count()
+
+    q = (
+        streaming_candidate_edges(
+            spark.readStream.schema(DOC_SCHEMA).parquet(src), cfg, state_ttl_ms=None
+        )
+        .writeStream.foreachBatch(verified_edges_sink(
+            sigs.select("doc_id", "minhash"), "doc_id", cfg, str(tmp_path / "out")
+        ))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "availableNow replay failed to terminate"
+    assert len(q.recentProgress) == 1
+    state = q.lastProgress["stateOperators"][0]
+    assert state["numRowsTotal"] == n_keys
+    assert state["numRowsUpdated"] == n_keys
 
 
 def test_streaming_edge_log_cc_equals_batch_clustering(spark, tmp_path):
