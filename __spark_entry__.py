@@ -27,10 +27,7 @@ from cs588_data_science_bug_duplicate_detector_spark.functions.text import (
 from cs588_data_science_bug_duplicate_detector_spark.operators import exact as exact_ops
 from cs588_data_science_bug_duplicate_detector_spark.operators.ann import brute_force_topk, lsh_topk
 from cs588_data_science_bug_duplicate_detector_spark.operators.cc import connected_components
-from cs588_data_science_bug_duplicate_detector_spark.operators.metrics import (
-    retrieval_metrics,
-    retrieval_metrics_1d,
-)
+from cs588_data_science_bug_duplicate_detector_spark.operators.metrics import retrieval_metrics_1d
 from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
     minhash_edges_from_sigs,
     release_cached_deps,
@@ -787,6 +784,7 @@ def q_streaming_batch_equiv(spark, sf_dir):
     import shutil
     import tempfile
 
+    from cs588_data_science_bug_duplicate_detector_spark.operators.buckets import bucket_window
     from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
         band_table,
         with_minhash,
@@ -842,9 +840,8 @@ def q_streaming_batch_equiv(spark, sf_dir):
         # min-id star edges (exactly the connectivity the stream preserves)
         sigs = with_minhash(docs, "text", CFG)
         bands = band_table(sigs.select("doc_id", "minhash"), "doc_id", CFG)
-        wb = Window.partitionBy("band_key")
         star = (
-            bands.withColumn("root", F.min("id").over(wb))
+            bucket_window(bands)
             .where(F.col("id") != F.col("root"))
             .select(F.col("root").alias("src"), F.col("id").alias("dst"))
             .distinct()

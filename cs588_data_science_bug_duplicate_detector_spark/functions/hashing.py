@@ -350,7 +350,3 @@ def dual_signatures(
         minhash_signatures(texts, shingle_k, a, b, token_flats=flats),
         simhash_signatures(texts, token_flats=flats),
     )
-
-
-def hamming64(x: int, y: int) -> int:
-    return bin((x ^ y) & 0xFFFFFFFFFFFFFFFF).count("1")

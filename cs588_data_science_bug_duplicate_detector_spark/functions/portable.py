@@ -168,9 +168,7 @@ def portable_minhash_signatures(
     return out
 
 
-def with_portable_minhash(
-    df: DataFrame, text_col: str, cfg: DedupConfig, out_col: str = "minhash"
-) -> DataFrame:
+def with_portable_minhash(df: DataFrame, text_col: str, cfg: DedupConfig) -> DataFrame:
     """Portable MinHash signature column (array<long>, cfg.num_perm slots).
 
     Same (id, minhash) contract as operators.minhash.with_minhash, so the
@@ -192,7 +190,7 @@ def with_portable_minhash(
         out[toks.str.len() == 0] = None
         return out
 
-    return df.withColumn(out_col, pandas_udf(_f, ArrayType(LongType()))(F.col(text_col)))
+    return df.withColumn("minhash", pandas_udf(_f, ArrayType(LongType()))(F.col(text_col)))
 
 
 def portable_simhash_signatures(texts: pd.Series) -> np.ndarray:
@@ -237,10 +235,10 @@ def _portable_simhash_udf(texts: pd.Series) -> pd.Series:
     return out
 
 
-def with_portable_simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
+def with_portable_simhash(df: DataFrame, text_col: str) -> DataFrame:
     """Portable 64-bit SimHash (long): one Arrow-batched kernel pass,
     bit-identical to the eager Python oracle and the DuckDB SQL."""
-    return df.withColumn(out_col, _portable_simhash_udf(F.col(text_col)))
+    return df.withColumn("simhash", _portable_simhash_udf(F.col(text_col)))
 
 
 # ---------------------------------------------------------------------------

@@ -94,16 +94,6 @@ def language_guess(c: Column | str) -> Column:
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def marked_section(c: Column | str, marker: str) -> Column:
-    """Extract the text after ``marker`` (F3 substring probe ≙
-    /root/reference/inference_comparison.py:241-247: ``"Visual Context:" in
-    text`` -> find -> slice -> strip). NULL when the marker is absent."""
-    col = F.col(c) if isinstance(c, str) else c
-    pos = F.instr(col, marker)
-    section = F.substring(col, pos + F.lit(len(marker)), F.lit(2**30))
-    return F.when(pos > 0, _strip(section))
-
-
 def quality_score(c: Column | str) -> Column:
     """[0,1] heuristic doc-quality score: length band + alpha ratio + stopword ratio."""
     col = F.col(c) if isinstance(c, str) else c

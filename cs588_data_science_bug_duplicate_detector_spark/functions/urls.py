@@ -4,8 +4,8 @@ Webtext pipelines dedupe by canonicalized URL before any content pass —
 the same page arrives from a crawl frontier as ``http://WWW.Site.org/p/1/
 ?utm_source=feed#top`` and ``https://site.org/p/1`` — and a raw-string
 key misses all of it. The reference has no URL handling (its corpus is
-pre-keyed); this operator exists for the streaming/incremental ingest
-paths (``streaming/ingest.py`` dedupes by url key).
+pre-keyed); the driver's ``url_dedup_groups`` query groups pages by
+this key.
 
 Everything is ``regexp_replace`` chains deliberately restricted to RE2-
 compatible syntax (capture groups + alternation, no lookarounds), so the

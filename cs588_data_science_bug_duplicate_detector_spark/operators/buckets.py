@@ -60,8 +60,7 @@ def self_pairs(rows: DataFrame, payload: list) -> DataFrame:
     )
 
 
-def pair_buckets(new: DataFrame, old: DataFrame, cap: int, salt: int,
-                 num_partitions: int | None = None) -> tuple:
+def pair_buckets(new: DataFrame, old: DataFrame, cap: int, salt: int) -> tuple:
     """Bucket rows ``(band_key, id, *payload)`` -> ``(pairs, star, hot, deps)``.
 
     - ``pairs``: every (src < dst) pair of an under-cap bucket with >= 1
@@ -89,8 +88,6 @@ def pair_buckets(new: DataFrame, old: DataFrame, cap: int, salt: int,
     rows = new.withColumn("is_new", F.lit(True)).unionByName(
         old.join(touched, "band_key", "left_semi").withColumn("is_new", F.lit(False))
     )
-    if num_partitions:
-        rows = rows.repartition(num_partitions, "band_key")
     # singleton buckets emit nothing (no pair, star, or hot row): drop them
     # at the window output, before the persist and the self-join — at 1M
     # docs half the band rows are singletons and the detect tail went

@@ -113,29 +113,29 @@ def connected_components(
     )
     if not pre_deduped:
         init = init.distinct()
-    # ALWAYS checkpoint the init set (even off a caller-persisted DF): the
-    # round plans self-union the edges, and Spark's relation-dedup rewrites
-    # expression ids in the union branches, which can MISS the outer cache
-    # and silently recompute the whole upstream detect pipeline per round
-    # (measured: 43s vs 2.6s for round 0 at 400k docs).
-    e, prev = _ckpt_with_summary(init)
-    # Size the loop's shuffle width to the ACTUAL edge count (known from
-    # the init summary): the localCheckpoint materialization bypasses
-    # AQE's partition coalescing, so a small edge set otherwise schedules
-    # the session default (2x cores) of near-empty tasks per exchange,
-    # 4-6 exchanges per round — pure fixed latency in the serial section.
-    # Only ever LOWERS toward 8 for small inputs; at production edge
-    # volumes the session setting stands untouched. Restored after the
-    # loop (session conf is shared state).
     sess = edges.sparkSession
     prev_sp = sess.conf.get("spark.sql.shuffle.partitions", None)
-    try:
-        default_sp = int(prev_sp) if prev_sp else 200
-    except ValueError:
-        default_sp = 200
-    loop_sp = min(default_sp, max(8, (prev[0] // 2_000_000) + 1))
     converged = False
     try:
+        # ALWAYS checkpoint the init set (even off a caller-persisted DF): the
+        # round plans self-union the edges, and Spark's relation-dedup rewrites
+        # expression ids in the union branches, which can MISS the outer cache
+        # and silently recompute the whole upstream detect pipeline per round
+        # (measured: 43s vs 2.6s for round 0 at 400k docs).
+        e, prev = _ckpt_with_summary(init)
+        # Size the loop's shuffle width to the ACTUAL edge count (known from
+        # the init summary): the localCheckpoint materialization bypasses
+        # AQE's partition coalescing, so a small edge set otherwise schedules
+        # the session default (2x cores) of near-empty tasks per exchange,
+        # 4-6 exchanges per round — pure fixed latency in the serial section.
+        # Only ever LOWERS toward 8 for small inputs; at production edge
+        # volumes the session setting stands untouched. Restored after the
+        # loop (session conf is shared state).
+        try:
+            default_sp = int(prev_sp) if prev_sp else 200
+        except ValueError:
+            default_sp = 200
+        loop_sp = min(default_sp, max(8, (prev[0] // 2_000_000) + 1))
         if loop_sp < default_sp:
             sess.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
         for it in range(max_iter):
@@ -153,18 +153,18 @@ def connected_components(
             sess.conf.set("spark.sql.shuffle.partitions", prev_sp)
         else:
             sess.conf.unset("spark.sql.shuffle.partitions")
+        if reliable and checkpoint_dir is not None:
+            # restore the caller's global setting, also when a round
+            # raised; if there was none, point at the stable tempdir
+            # fallback — leaving the global dir aimed into this caller's
+            # (possibly soon-deleted) workdir would misdirect the next
+            # reliable caller that doesn't pass its own dir
+            import os
+            import tempfile
 
-    if reliable and checkpoint_dir is not None:
-        # restore the caller's global setting; if there was none, point at
-        # the stable tempdir fallback — leaving the global dir aimed into
-        # this caller's (possibly soon-deleted) workdir would misdirect the
-        # next reliable caller that doesn't pass its own dir
-        import os
-        import tempfile
-
-        sc.setCheckpointDir(
-            prev_ckpt_dir or os.path.join(tempfile.gettempdir(), "dupdetect-ckpt")
-        )
+            sc.setCheckpointDir(
+                prev_ckpt_dir or os.path.join(tempfile.gettempdir(), "dupdetect-ckpt")
+            )
     if not converged:
         # Labels derived from a still-evolving edge set would split true
         # components ACROSS cluster ids with no downstream signal — fail

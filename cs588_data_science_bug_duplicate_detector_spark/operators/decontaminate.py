@@ -59,22 +59,3 @@ def contamination_report(
         F.countDistinct("eval_id").alias("n_eval_docs"),
         F.min("eval_id").alias("first_eval_id"),
     )
-
-
-def decontaminated(
-    docs: DataFrame,
-    evals: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_id_col: str = "eval_id",
-    eval_text_col: str = "text",
-    n: int = 13,
-    hashed_keys: bool = True,
-) -> DataFrame:
-    """The clean corpus: ``docs`` minus every contaminated document."""
-    report = contamination_report(
-        docs, evals, id_col, text_col, eval_id_col, eval_text_col, n, hashed_keys
-    )
-    return docs.join(
-        report.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
-    )

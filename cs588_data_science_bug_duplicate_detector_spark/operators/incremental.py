@@ -120,14 +120,13 @@ def incremental_minhash_edges(
     new_sigs: DataFrame,
     old_sigs: DataFrame,
     cfg: DedupConfig,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Verified LSH edges with >= 1 new endpoint, plus hot-bucket summary:
     the same core as ``minhash_edges_from_sigs`` (``lsh_candidates``) with
     the stored index as the old side. Old-vs-old pairs are excluded BY
     CONSTRUCTION — the previous run already adjudicated them and their
     verdict rides in via the carried labels."""
-    auto, cand, hot, deps = lsh_candidates(new_sigs, old_sigs, "id", cfg, num_partitions)
+    auto, cand, hot, deps = lsh_candidates(new_sigs, old_sigs, "id", cfg)
     # prune the stored signatures to the candidate endpoints BEFORE the
     # verify joins: the endpoint set is O(touched), small enough to
     # broadcast, while the stored index is the largest payload of a fold
@@ -141,12 +140,11 @@ def incremental_simhash_edges(
     new_sigs: DataFrame,
     old_sigs: DataFrame,
     cfg: DedupConfig,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Hamming-verified SimHash edges with >= 1 new endpoint: the same
     core as ``simhash_edges_from_sigs`` (``hamming_edges``) with the
     stored index as the old side."""
-    return hamming_edges(new_sigs, old_sigs, "id", cfg, num_partitions)[0]
+    return hamming_edges(new_sigs, old_sigs, "id", cfg)[0]
 
 
 def incremental_exact_edges(new_hashes: DataFrame, old_hashes: DataFrame) -> DataFrame:
@@ -281,7 +279,7 @@ class DedupIndex:
             raise ValueError(f"empty index at {self.root}")
         return spark.read.parquet(self._label_dir(n - 1))
 
-    def compact(self, spark: SparkSession, target_partitions: int | None = None) -> int:
+    def compact(self, spark: SparkSession) -> int:
         """Merge all completed increment dirs into one (``inc=0``).
 
         Daily increments leave one small parquet dir each; after a year
@@ -315,10 +313,7 @@ class DedupIndex:
             return 0
         staged = self._staged_dir
         shutil.rmtree(staged, ignore_errors=True)
-        df = self.signatures(spark, upto=n)
-        if target_partitions:
-            df = df.repartition(target_partitions)
-        df.write.mode("overwrite").parquet(staged)
+        self.signatures(spark, upto=n).write.mode("overwrite").parquet(staged)
         # WAL intent: the staged copy is complete; from here the swap can
         # always be finished (or re-finished) by _recover_compaction
         meta["compact"] = {"merged": existing}
@@ -372,7 +367,6 @@ class DedupIndex:
 
     # --- the one write path ---
     def add_increment(self, docs: DataFrame, id_col: str, text_col: str,
-                      num_partitions: int | None = None,
                       cc_kwargs: dict | None = None) -> DataFrame:
         """Sign, pair, and fold one increment; returns the updated labels.
 
@@ -415,7 +409,7 @@ class DedupIndex:
             old_sigs = new_sigs.where(F.lit(False))
             old_labels = new_ids.select("id", F.col("id").alias("cluster_id")).where(F.lit(False))
         mh_edges, _hot = incremental_minhash_edges(
-            new_sigs.select("id", "minhash"), old_sigs.select("id", "minhash"), self.cfg, num_partitions
+            new_sigs.select("id", "minhash"), old_sigs.select("id", "minhash"), self.cfg
         )
         edges = mh_edges.unionByName(
             incremental_exact_edges(new_sigs.select("id", "text_md5"), old_sigs.select("id", "text_md5"))
@@ -423,7 +417,7 @@ class DedupIndex:
         sim_edges = None
         if self.use_simhash:
             sim_edges = incremental_simhash_edges(
-                new_sigs.select("id", "simhash"), old_sigs.select("id", "simhash"), self.cfg, num_partitions
+                new_sigs.select("id", "simhash"), old_sigs.select("id", "simhash"), self.cfg
             )
             edges = edges.unionByName(sim_edges)
         labels = fold_labels(old_labels, edges.distinct(), new_ids, **cc_kwargs)

@@ -95,28 +95,6 @@ def retrieval_metrics(pairs: DataFrame, k_values: tuple = (1, 5, 10, 20)) -> Dat
     return _finalize_metrics(per_query_metrics(pairs, k_values), k_values)
 
 
-def format_metrics_block(rows: list, k_values: tuple = (1, 5, 10, 20)) -> str:
-    """Driver-side pretty block (SURVEY.md M5 ≙ MetricsCalculator.format_metrics,
-    /root/reference/src/metrics.py:221-256). ``rows`` is the collected output
-    of retrieval_metrics (one row per k)."""
-    by_k = {int(r["k"]): r for r in rows}
-    lines = ["\nRetrieval Metrics:", "=" * 50, "\nRecall@k:"]
-    for k in k_values:
-        if k in by_k:
-            lines.append(f"  Recall@{k:2d}: {by_k[k]['recall_at_k']:.4f}")
-    if by_k:
-        any_row = next(iter(by_k.values()))
-        lines.append(f"\nMRR: {any_row['mrr']:.4f}")
-    lines.append("\nMAP@k:")
-    for k in k_values:
-        if k in by_k:
-            lines.append(f"  MAP@{k:2d}: {by_k[k]['map_at_k']:.4f}")
-    if by_k:
-        lines.append(f"\nNumber of queries: {int(any_row['num_queries'])}")
-    lines.append("=" * 50)
-    return "\n".join(lines)
-
-
 # ---------------------------------------------------------------------------
 # 1-D candidate-score specialization (guide §1.2: fix the algorithm first)
 # ---------------------------------------------------------------------------
@@ -362,12 +340,3 @@ def retrieval_metrics_1d(
         docs, k_values, id_col, group_col, value_col, label_col, n_salt
     )
     return _finalize_metrics(per_query, k_values)
-
-
-def relevance_pairs(labels: DataFrame, id_col: str = "id", cluster_col: str = "cluster_id") -> DataFrame:
-    """Self equi-join on cluster id, excluding self-pairs (SURVEY.md J2/P6
-    ≙ /root/reference/src/metrics.py:180-200): the ground-truth relevant
-    set for each query doc."""
-    a = labels.select(F.col(id_col).alias("query_id"), F.col(cluster_col).alias("c"))
-    b = labels.select(F.col(id_col).alias("cand_id"), F.col(cluster_col).alias("c"))
-    return a.join(b, "c").where(F.col("query_id") != F.col("cand_id")).drop("c")

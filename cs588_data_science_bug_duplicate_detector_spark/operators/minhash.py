@@ -10,11 +10,11 @@ Scale notes:
 - signatures: one Arrow-batched pandas UDF, numpy segment reductions
   (functions/hashing.py) — the only Python hot path.
 - banding: pure column exprs (slice + xxhash64), whole-stage codegen.
-- bucket join: explicit repartition on (band_id, band_hash); hot buckets
-  (boilerplate farms) are capped at cfg.bucket_cap with the drop LOGGED
-  (a capped bucket of size c still yields c-1 star edges via its min
-  member, so connectivity inside the bucket is preserved while the
-  O(c^2) pair blowup is not).
+- bucket join: one window exchange on the folded band_key (buckets.py);
+  hot buckets (boilerplate farms) are capped at cfg.bucket_cap with the
+  drop LOGGED (a capped bucket of size c still yields c-1 star edges via
+  its min member, so connectivity inside the bucket is preserved while
+  the O(c^2) pair blowup is not).
 - verify: estimated Jaccard from signature agreement — needs only the two
   128-slot signatures, no re-tokenization shuffle of full text.
 """
@@ -64,8 +64,8 @@ def minhash_udf(cfg: DedupConfig):
     return pandas_udf(_minhash_batch, ArrayType(LongType()))
 
 
-def with_minhash(df: DataFrame, text_col: str, cfg: DedupConfig, out_col: str = "minhash") -> DataFrame:
-    return df.withColumn(out_col, minhash_udf(cfg)(F.col(text_col)))
+def with_minhash(df: DataFrame, text_col: str, cfg: DedupConfig) -> DataFrame:
+    return df.withColumn("minhash", minhash_udf(cfg)(F.col(text_col)))
 
 
 def with_dual_signatures(df: DataFrame, text_col: str, cfg: DedupConfig) -> DataFrame:
@@ -108,7 +108,7 @@ def with_dual_signatures(df: DataFrame, text_col: str, cfg: DedupConfig) -> Data
     )
 
 
-def band_table(sigs: DataFrame, id_col: str, cfg: DedupConfig, sig_col: str = "minhash",
+def band_table(sigs: DataFrame, id_col: str, cfg: DedupConfig,
                string_keys: bool = False, keep_cols: tuple = ()) -> DataFrame:
     """(id, band_key): one row per band per doc, JVM-side only.
 
@@ -127,18 +127,18 @@ def band_table(sigs: DataFrame, id_col: str, cfg: DedupConfig, sig_col: str = "m
             ":",
             b.cast("string"),
             F.array_join(
-                F.slice(F.col(sig_col), b * F.lit(cfg.rows_per_band) + 1, cfg.rows_per_band), ","
+                F.slice(F.col("minhash"), b * F.lit(cfg.rows_per_band) + 1, cfg.rows_per_band), ","
             ),
         )
     else:
         key = lambda b: F.xxhash64(
             b,
-            F.slice(F.col(sig_col), b * F.lit(cfg.rows_per_band) + 1, cfg.rows_per_band),
+            F.slice(F.col("minhash"), b * F.lit(cfg.rows_per_band) + 1, cfg.rows_per_band),
         )
     bands = F.transform(F.sequence(F.lit(0), F.lit(cfg.bands - 1)), key)
     # NULL signatures = content-less docs (zero tokens): never candidates
     return (
-        sigs.where(F.col(sig_col).isNotNull())
+        sigs.where(F.col("minhash").isNotNull())
         .select(
             F.col(id_col).alias("id"),
             F.explode(bands).alias("band_key"),
@@ -159,15 +159,13 @@ def _band_counts(pairs: DataFrame) -> DataFrame:
     return pairs.groupBy("src", "dst").agg(F.count("*").alias("n_bands"))
 
 
-def candidate_pairs(bands: DataFrame, cfg: DedupConfig, num_partitions: int | None = None) -> DataFrame:
+def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Bucket equi-join -> (src < dst, n_bands) candidate pairs.
 
     ``n_bands`` (how many of the 32 bands collided) is a free by-product of
     the dedup aggregation and doubles as a coarse similarity estimate:
     P(band collision) = J^rows_per_band.
     """
-    if num_partitions:
-        bands = bands.repartition(num_partitions, "band_key")
     return _band_counts(self_pairs(bands.withColumn("is_new", F.lit(True)), []))
 
 
@@ -180,8 +178,7 @@ def estimated_jaccard_col(sig_a, sig_b, num_perm: int):
     return matches.cast("double") / F.lit(float(num_perm))
 
 
-def verify_pairs(pairs: DataFrame, sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                 sig_col: str = "minhash") -> DataFrame:
+def verify_pairs(pairs: DataFrame, sigs: DataFrame, id_col: str, cfg: DedupConfig) -> DataFrame:
     """Attach estimated Jaccard; keep pairs >= cfg.verify_threshold.
 
     Signatures travel through the two joins as array<int> (low 31 bits per
@@ -192,7 +189,7 @@ def verify_pairs(pairs: DataFrame, sigs: DataFrame, id_col: str, cfg: DedupConfi
     """
     s = sigs.select(
         F.col(id_col).alias("id"),
-        F.transform(F.col(sig_col), lambda x: x.bitwiseAND(F.lit(0x7FFFFFFF)).cast("int")).alias("sig"),
+        F.transform(F.col("minhash"), lambda x: x.bitwiseAND(F.lit(0x7FFFFFFF)).cast("int")).alias("sig"),
     )
     scored = (
         pairs.join(s.withColumnRenamed("sig", "sig_a"), pairs.src == s.id)
@@ -217,29 +214,8 @@ def hot_bucket_stats(hot: DataFrame) -> dict:
     return {k: int(v) for k, v in row.asDict().items()}
 
 
-# Safety net for the ``_cached_deps`` contract: the attribute is a dynamic
-# field, so ANY derivation (``edges.select(...)``, ``.filter(...)``) returns
-# a new DataFrame without it — a caller who keeps only the derived frame can
-# never release the persisted band/pair tables, and cacheManager holds them
-# by strong reference for the session's lifetime. Every attach therefore
-# also registers (weakref-to-owner, deps) here; ``sweep_orphaned_deps``
-# unpersists deps whose owner was garbage-collected unreleased.
-import weakref as _weakref
-
-_DEPS_REGISTRY: dict[int, tuple] = {}
-
-
 def _attach_deps(df: DataFrame, deps: list) -> DataFrame:
-    stale = _DEPS_REGISTRY.get(id(df))
-    if stale is not None and stale[0]() is None:
-        # id() reuse after GC: release the dead owner's deps before overwriting
-        for dep in stale[1]:
-            try:
-                dep.unpersist()
-            except Exception:
-                pass
     df._cached_deps = deps
-    _DEPS_REGISTRY[id(df)] = (_weakref.ref(df), list(deps))
     return df
 
 
@@ -250,36 +226,15 @@ def release_cached_deps(df: DataFrame) -> None:
     long-lived sessions (bench loops, multi-split pipelines) otherwise
     accumulate cached band/pair blocks until LRU pressure.
     """
-    entry = _DEPS_REGISTRY.pop(id(df), None)
-    deps = entry[1] if entry is not None else getattr(df, "_cached_deps", [])
-    for dep in deps:
+    for dep in getattr(df, "_cached_deps", []):
         try:
             dep.unpersist()
         except Exception:
             pass
 
 
-def sweep_orphaned_deps() -> int:
-    """Unpersist deps whose owner DataFrame was GC'd without
-    ``release_cached_deps`` (the attribute contract is easy to drop — see
-    ``_DEPS_REGISTRY``). Returns the number of owners swept. Cheap; safe to
-    call at any pipeline/bench quiescent point."""
-    swept = 0
-    for k in list(_DEPS_REGISTRY):
-        ref, deps = _DEPS_REGISTRY[k]
-        if ref() is None:
-            for dep in deps:
-                try:
-                    dep.unpersist()
-                except Exception:
-                    pass
-            del _DEPS_REGISTRY[k]
-            swept += 1
-    return swept
-
-
 def lsh_candidates(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                   num_partitions: int | None = None, string_keys: bool = False) -> tuple:
+                   string_keys: bool = False) -> tuple:
     """``buckets.pair_buckets`` over the band keys + MinHash's auto-accept
     split -> (auto, cand, hot, deps), every pair with >= 1 new endpoint.
 
@@ -296,7 +251,7 @@ def lsh_candidates(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: D
     pairs, star, hot, deps = pair_buckets(
         band_table(new_sigs, id_col, cfg, string_keys=string_keys),
         band_table(old_sigs, id_col, cfg, string_keys=string_keys),
-        cfg.bucket_cap, cfg.bucket_salt, num_partitions,
+        cfg.bucket_cap, cfg.bucket_salt,
     )
     # persist: the auto/ambiguous split reads the pair table twice —
     # without it the whole bucket join runs twice
@@ -308,7 +263,6 @@ def lsh_candidates(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: D
 
 
 def minhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                            num_partitions: int | None = None,
                             string_keys: bool = False) -> tuple[DataFrame, DataFrame]:
     """sigs(id, minhash) -> (verified edges(src,dst), hot_bucket_summary).
 
@@ -319,14 +273,14 @@ def minhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
     ``release_cached_deps`` after materializing.
     """
     auto, cand, hot, deps = lsh_candidates(
-        sigs, sigs.where(F.lit(False)), id_col, cfg, num_partitions, string_keys
+        sigs, sigs.where(F.lit(False)), id_col, cfg, string_keys
     )
     verified = verify_pairs(cand, sigs, id_col, cfg).select("src", "dst")
     return _attach_deps(auto.unionByName(verified).distinct(), deps), hot
 
 
-def minhash_edges(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,
-                  num_partitions: int | None = None) -> tuple[DataFrame, DataFrame]:
+def minhash_edges(docs: DataFrame, id_col: str, text_col: str,
+                  cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
     """Full detector-1 dataflow: docs -> verified candidate edges."""
     sigs = with_minhash(docs.select(id_col, text_col), text_col, cfg)
-    return minhash_edges_from_sigs(sigs, id_col, cfg, num_partitions)
+    return minhash_edges_from_sigs(sigs, id_col, cfg)

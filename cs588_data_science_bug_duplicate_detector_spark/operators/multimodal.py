@@ -8,8 +8,7 @@ tested) — with grid-mean image features, banded-RMS audio features, and
 nearest-neighbor resize as genuine numpy kernels. Formats needing codecs
 outside the stdlib (JPEG/MP3/video containers) raise ``DecoderUnavailable``
 (swapping in PIL/librosa/av changes only the per-format branch in
-``decode_media``, nothing in the dataflow). A deterministic fake-feature
-path remains for dataflow tests that don't care about pixels.
+``_decode_payload``, nothing in the dataflow).
 """
 
 from __future__ import annotations
@@ -22,15 +21,11 @@ import wave
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, mime string, "
     "width int, height int, duration_ms int"
 )
-
-FEATURES_SCHEMA = "media_id long, kind string, n_bytes long, feature array<float>"
-FRAMES_SCHEMA = "media_id long, frame_idx int, frame_payload binary"
 
 FEATURE_DIM = 16
 
@@ -242,8 +237,8 @@ def _decode_payload(kind: str, mime: str | None, payload: bytes):
     mislabeled, not decodable — it falls through to DecoderUnavailable
     instead of surfacing a format decoder's internal ValueError/wave.Error
     (which exception a caller sees would otherwise depend on scheduling).
-    Add a codec here (e.g. JPEG via PIL) and extract_features,
-    media_metadata, and the driver oracle constants all pick it up."""
+    Add a codec here (e.g. JPEG via PIL) and media_metadata and the
+    driver oracle constants both pick it up."""
     mime = (mime or "").lower()
     if kind == "image" and payload[:2] == b"BM":
         return "image", decode_bmp(payload)
@@ -258,74 +253,6 @@ def _decode_payload(kind: str, mime: str | None, payload: bytes):
     )
 
 
-def decode_media(kind: str, mime: str | None, payload: bytes) -> np.ndarray:
-    """Real decode -> FEATURE_DIM feature. Raises DecoderUnavailable for
-    formats needing external codecs."""
-    family, data = _decode_payload(kind, mime, payload)
-    return image_grid_feature(data) if family == "image" else audio_band_feature(data)
-
-
-def _fake_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in for a decoded-media embedding: bytes of
-    sha256(payload) scaled to [0,1). Stable across processes."""
-    h = hashlib.sha256(payload or b"").digest()
-    raw = np.frombuffer((h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype=np.uint32)
-    return (raw % 1000).astype(np.float32) / 1000.0
-
-
-def extract_features(media: DataFrame, use_real_decoder: bool = False) -> DataFrame:
-    """media -> (media_id, kind, n_bytes, feature[16]) via mapInPandas.
-
-    Arrow batches stream through Python once; no per-row spark calls.
-    """
-
-    def run(batches):
-        for pdf in batches:
-            if use_real_decoder:
-                feats = [
-                    decode_media(k, m, p)
-                    for k, m, p in zip(pdf["kind"], pdf["mime"], pdf["payload"])
-                ]
-            else:
-                feats = [_fake_feature(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(lambda b: len(b) if b is not None else 0),
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000, use_real_decoder: bool = False) -> DataFrame:
-    """video rows -> (media_id, frame_idx, frame_payload) one row per sampled
-    frame. The fake path emits deterministic byte slices standing in for
-    decoded frames; the row-explosion dataflow is the real contract."""
-
-    def run(batches):
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame_payload": []}
-            for mid, payload, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                if use_real_decoder:
-                    raise DecoderUnavailable("real frame decode requires av/ffmpeg")
-                n_frames = max(1, int((dur or 0) // every_ms))
-                b = payload or b""
-                for i in range(n_frames):
-                    lo = (i * 97) % max(1, len(b))
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame_payload"].append(b[lo : lo + 64])
-            yield pd.DataFrame(out)
-
-    videos = media.where(F.col("kind") == "video")
-    return videos.mapInPandas(run, schema=FRAMES_SCHEMA)
-
-
 METADATA_SCHEMA = (
     "media_id long, kind string, n_bytes long, width int, height int, "
     "n_samples int, feat_mean double"
@@ -334,13 +261,14 @@ METADATA_SCHEMA = (
 
 def decode_metadata_row(kind: str, mime: str | None, payload: bytes) -> tuple[int, int, int, float]:
     """One payload -> (width, height, n_samples, feat_mean) through the real
-    codecs (magic-byte dispatch, same contract as ``decode_media``). Images
+    codecs (magic-byte dispatch in ``_decode_payload``). Images
     report (w, h, 0); audio (0, 0, n_samples). ``feat_mean`` is the float64
     mean of the decoded FEATURE_DIM feature rounded to 6 — a content-
     sensitive scalar that breaks if any stage of decode (row order, BGR
-    swap, filter reversal, PCM scaling) is wrong. Dispatch is shared with
-    ``decode_media`` (``_decode_payload``) so the two consumers can never
-    disagree on which payloads are decodable."""
+    swap, filter reversal, PCM scaling) is wrong. The distributed
+    ``media_metadata`` pass and the driver-side ``demo_payload_expected``
+    both decode through here, so they can never disagree on which payloads
+    are decodable."""
     family, data = _decode_payload(kind, mime, payload)
     if family == "image":
         h, w = data.shape[:2]
@@ -387,8 +315,6 @@ def demo_payload_expected(n: int = 7) -> list[tuple]:
     implementations over payloads that cross the Arrow boundary, so a
     byte-level corruption anywhere in the binary-column plumbing breaks
     the driver's value hash."""
-    import hashlib
-
     rows = []
     for idx, kind, mime, payload, _dur in demo_payloads(n):
         w, h, ns, fm = decode_metadata_row(kind, mime, payload)
@@ -420,21 +346,3 @@ def demo_payloads(n: int = 7) -> list[tuple[int, str, str, bytes, int]]:
             out.append((idx, "audio", "audio/wav", encode_wav(samples), 100))
     return out
 
-
-def media_dedup_edges(media: DataFrame) -> DataFrame:
-    """Exact-payload dedup for media columns: md5 over binary, star edges.
-
-    NULL and zero-byte payloads are excluded for the same reason
-    ``operators/exact._has_content`` excludes blank text: every failed
-    media fetch stores the same empty payload, and md5(b'') would weld
-    all of them into one giant fake duplicate cluster. "No content" is
-    not "same content"."""
-    h = media.where(
-        F.col("payload").isNotNull() & (F.length("payload") > 0)
-    ).select(F.col("media_id").alias("id"), F.md5("payload").alias("h"))
-    roots = h.groupBy("h").agg(F.min("id").alias("root"), F.count("*").alias("n"))
-    return (
-        h.join(roots.where(F.col("n") > 1), "h")
-        .where(F.col("id") != F.col("root"))
-        .select(F.col("root").alias("src"), F.col("id").alias("dst"))
-    )

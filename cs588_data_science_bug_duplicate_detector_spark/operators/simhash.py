@@ -33,11 +33,11 @@ def _simhash_udf(texts: pd.Series) -> pd.Series:
     return out
 
 
-def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
-    return df.withColumn(out_col, _simhash_udf(F.col(text_col)))
+def with_simhash(df: DataFrame, text_col: str) -> DataFrame:
+    return df.withColumn("simhash", _simhash_udf(F.col(text_col)))
 
 
-def chunk_table(sigs: DataFrame, id_col: str, cfg: DedupConfig, sig_col: str = "simhash") -> DataFrame:
+def chunk_table(sigs: DataFrame, id_col: str, cfg: DedupConfig) -> DataFrame:
     """(id, sig, band_key) — one row per chunk per doc, in the bucket-table
     format of ``buckets.pair_buckets``. The pair (chunk_id, chunk_val)
     folds into ONE exact long key ``chunk_id << width | chunk_val`` —
@@ -46,17 +46,17 @@ def chunk_table(sigs: DataFrame, id_col: str, cfg: DedupConfig, sig_col: str = "
     mask = (1 << width) - 1
     keys = F.array(*[
         F.lit(i << width).cast("long").bitwiseOR(
-            F.shiftrightunsigned(F.col(sig_col), i * width).bitwiseAND(F.lit(mask)))
+            F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask)))
         for i in range(cfg.simhash_chunks)
     ])
     return (
-        sigs.where(F.col(sig_col).isNotNull())  # content-less docs: never candidates
-        .select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig"), F.explode(keys).alias("band_key"))
+        sigs.where(F.col("simhash").isNotNull())  # content-less docs: never candidates
+        .select(F.col(id_col).alias("id"), F.col("simhash").alias("sig"), F.explode(keys).alias("band_key"))
     )
 
 
-def hamming_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                  num_partitions: int | None = None) -> tuple[DataFrame, DataFrame]:
+def hamming_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str,
+                  cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
     """``buckets.pair_buckets`` over the chunk keys + SimHash's verify rule
     -> (edges, hot): pairs and star edges within ``cfg.simhash_hamming_max``
     bits, a JVM-side popcount on the XOR of the carried ``sig`` payloads —
@@ -64,14 +64,13 @@ def hamming_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: De
     chunk) are capped at ``cfg.simhash_chunk_cap`` like LSH buckets."""
     pairs, star, hot, deps = pair_buckets(
         chunk_table(new_sigs, id_col, cfg), chunk_table(old_sigs, id_col, cfg),
-        cfg.simhash_chunk_cap, 1, num_partitions,
+        cfg.simhash_chunk_cap, 1,
     )
     near = F.expr("bit_count(src_sig ^ dst_sig)") <= F.lit(cfg.simhash_hamming_max)
     return _attach_deps(pairs.unionByName(star).where(near).select("src", "dst").distinct(), deps), hot
 
 
 def simhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                            num_partitions: int | None = None,
                             stats_out: dict | None = None) -> DataFrame:
     """sigs(id, simhash) -> verified Hamming<=cfg.simhash_hamming_max edges (src < dst).
 
@@ -81,14 +80,13 @@ def simhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
     capped rows / max bucket) — computed from the persisted chunk table,
     no extra scan. Release via ``minhash.release_cached_deps``.
     """
-    edges, hot = hamming_edges(sigs, sigs.where(F.lit(False)), id_col, cfg, num_partitions)
+    edges, hot = hamming_edges(sigs, sigs.where(F.lit(False)), id_col, cfg)
     if stats_out is not None:  # hot_chunks, rows_in_hot_chunks, max_chunk_size
         stats_out.update({k.replace("bucket", "chunk"): v for k, v in hot_bucket_stats(hot).items()})
     return edges
 
 
-def simhash_edges(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,
-                  num_partitions: int | None = None) -> DataFrame:
+def simhash_edges(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) -> DataFrame:
     """docs -> verified Hamming<=cfg.simhash_hamming_max edges (src < dst)."""
     sigs = with_simhash(docs.select(id_col, text_col), text_col)
-    return simhash_edges_from_sigs(sigs, id_col, cfg, num_partitions)
+    return simhash_edges_from_sigs(sigs, id_col, cfg)

@@ -128,14 +128,14 @@ def run_pipeline(
         "detector_stats": {},
     }
 
-    def stage(name: str, input_fp: str, build, extra_meta: dict | None = None):
+    def stage(name: str, input_fp: str, build, extra_meta=None):
         t0 = time.time()
         if resume and io.valid_checkpoint(name, input_fp):
             stats["stages"][name] = {"resumed": True, "sec": 0.0}
             return io.read(spark, name)
         df = build()
         io.write(df, name)
-        extra = extra_meta() if callable(extra_meta) else (extra_meta or {})
+        extra = extra_meta() if extra_meta else {}
         release_cached_deps(df)
         out = io.read(spark, name)
         # per-partition lineage (north_rule): row histogram from the parquet

@@ -1,4 +1,4 @@
-"""Source readers/sinks with explicit schemas (SURVEY.md S1-S6).
+"""Source reader with explicit schemas (SURVEY.md S1-S2).
 
 The reference infers schemas via pandas CSV inference
 (/root/reference/preprocess_data.py:276); production paths here always pass
@@ -20,31 +20,8 @@ BUG_REPORTS_DDL = (
 # Split membership tables (preprocess_data.py:282-284)
 SPLIT_DDL = "Issue_id long, Duplicate string"
 
-PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
-
 
 def read_csv(spark: SparkSession, path: str, ddl: str, **options) -> DataFrame:
     opts = {"header": "true", "multiLine": "true", "escape": '"'}
     opts.update(options)
     return spark.read.schema(ddl).options(**opts).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, ddl: str, **options) -> DataFrame:
-    return spark.read.schema(ddl).options(**options).json(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    # escape='"' matches read_csv (RFC-4180 quote doubling); Spark's default
-    # writer escape is backslash, which its own reader then misparses
-    df.write.mode(mode).option("header", "true").option("escape", '"').csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def validate_columns(df: DataFrame, required: list[str]) -> None:
-    """Fail fast on missing columns (≙ /root/reference/src/data.py:57-60)."""
-    missing = [c for c in required if c not in df.columns]
-    if missing:
-        raise ValueError(f"missing required columns: {missing}; got {df.columns}")

@@ -32,16 +32,11 @@ class TableIO:
         return os.path.join(self.root, f"{name}._meta.json")
 
     # --- data ---
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None) -> None:
+    def write(self, df: DataFrame, name: str) -> None:
         if self.fmt == "iceberg":
-            writer = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
-            writer.createOrReplace() if mode == "overwrite" else writer.append()
+            df.writeTo(f"{self.catalog}.{name}").using("iceberg").createOrReplace()
             return
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._path(name))
+        df.write.mode("overwrite").parquet(self._path(name))
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         if self.fmt == "iceberg":

@@ -243,7 +243,6 @@ def verified_edges_sink(
       so signatures appended by a companion signature-log sink are visible
       to later batches. A DataFrame snapshot canNOT do this — its file
       index is frozen at creation, so fresh docs would never verify;
-    - a **callable** ``() -> DataFrame`` for custom refresh logic;
     - a **DataFrame** for a genuinely static corpus (bounded replays,
       tests).
 
@@ -309,8 +308,6 @@ def verified_edges_sink(
             # fresh read per batch -> fresh file listing, so a companion
             # signature-log sink's appends are visible to this batch
             return batch_df.sparkSession.read.parquet(sigs)
-        if callable(sigs):
-            return sigs()
         return sigs
 
     def _latest_endpoint_sigs(edges: DataFrame, sig_df: DataFrame) -> DataFrame:

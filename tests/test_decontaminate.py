@@ -1,11 +1,10 @@
 """Decontamination (operators/decontaminate.py): planted 13-gram overlap,
-key-mode equivalence, clean-corpus anti-join."""
+key-mode equivalence."""
 
 from pyspark.sql import functions as F
 
 from cs588_data_science_bug_duplicate_detector_spark.operators.decontaminate import (
     contamination_report,
-    decontaminated,
 )
 
 SPAN = "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima mike"  # 13 tokens
@@ -41,12 +40,6 @@ def test_hashed_and_string_keys_agree(spark):
     a = sorted(map(tuple, contamination_report(docs, evals, hashed_keys=True).collect()))
     b = sorted(map(tuple, contamination_report(docs, evals, hashed_keys=False).collect()))
     assert a == b
-
-
-def test_decontaminated_removes_exactly_the_flagged(spark):
-    docs, evals = _frames(spark)
-    clean = decontaminated(docs, evals)
-    assert sorted(r["doc_id"] for r in clean.collect()) == [3, 4, 5]
 
 
 def test_no_eval_overlap_empty_report(spark):

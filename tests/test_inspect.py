@@ -1,5 +1,4 @@
-"""Single-doc inspection (reference inference_comparison parity) and the
-M5 pretty-print metrics block."""
+"""Single-doc inspection (reference inference_comparison parity)."""
 
 from pyspark.sql import functions as F
 
@@ -7,10 +6,6 @@ from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
 from cs588_data_science_bug_duplicate_detector_spark.operators.inspect import (
     inspect_doc,
     retrieve_top_k,
-)
-from cs588_data_science_bug_duplicate_detector_spark.operators.metrics import (
-    format_metrics_block,
-    retrieval_metrics,
 )
 
 
@@ -46,19 +41,6 @@ def test_inspect_doc_marks_truth(spark):
     assert "✓ DUPLICATE" in out
     assert "Known Duplicates: 2" in out
     assert "Duplicates found in top-5: 2/2 (100.0%)" in out
-
-
-def test_format_metrics_block(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2, 0.9, True), (1, 3, 0.5, False), (2, 1, 0.8, True), (2, 3, 0.7, False)],
-        "query_id long, cand_id long, score double, is_dup boolean",
-    )
-    rows = retrieval_metrics(pairs, (1, 5)).collect()
-    block = format_metrics_block(rows, (1, 5))
-    assert "Retrieval Metrics:" in block
-    assert "Recall@ 1: 1.0000" in block
-    assert "MRR: 1.0000" in block
-    assert "Number of queries: 2" in block
 
 
 def test_compare_configs_side_by_side(spark):

@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 
 from cs588_data_science_bug_duplicate_detector_spark.operators.metrics import (
-    relevance_pairs,
     retrieval_metrics,
 )
 
@@ -100,11 +99,3 @@ def test_perfect_and_empty_rankings(spark):
     assert got[1]["mrr"] == pytest.approx((1.0 + 0.5) / 2)
     assert got[1]["map_at_k"] == pytest.approx((1.0 + 0.0) / 2)
     assert got[5]["map_at_k"] == pytest.approx((1.0 + 0.5) / 2)
-
-
-def test_relevance_pairs_excludes_self(spark):
-    labels = spark.createDataFrame(
-        [(1, 100), (2, 100), (3, 100), (4, 200)], "id long, cluster_id long"
-    )
-    got = {(r["query_id"], r["cand_id"]) for r in relevance_pairs(labels).collect()}
-    assert got == {(1, 2), (1, 3), (2, 1), (2, 3), (3, 1), (3, 2)}

@@ -129,35 +129,3 @@ def test_bucket_salting_recovers_hot_bucket_pairs(spark):
     assert plain <= salted                   # never regresses
     # the 0.5-similarity distractor/root must not gain edges from salting
     assert not any(1 in p for p in salted)
-
-
-def test_sweep_orphaned_deps_reclaims_dropped_owner(spark):
-    """The _cached_deps attribute is dropped by any DataFrame derivation;
-    an owner GC'd without release_cached_deps must still be reclaimable —
-    cacheManager holds persisted deps by strong reference, so GC alone
-    never frees them."""
-    import gc
-
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
-        _DEPS_REGISTRY,
-        minhash_edges_from_sigs,
-        sweep_orphaned_deps,
-    )
-
-    sweep_orphaned_deps()  # clear any leftovers from earlier tests
-    sigs = spark.createDataFrame(
-        [(1, [1, 2, 3, 4, 5, 6, 7, 8]), (2, [1, 2, 3, 4, 5, 6, 7, 8])],
-        "doc_id long, minhash array<long>",
-    )
-    cfg = DedupConfig(num_perm=8, bands=2, rows_per_band=4)
-    e, _hot = minhash_edges_from_sigs(sigs, "doc_id", cfg)
-    # a caller keeps only a derived frame -> the attribute (and release
-    # handle) is gone
-    derived = e.select("src", "dst")
-    n_before = len(_DEPS_REGISTRY)
-    assert n_before >= 1
-    del e
-    gc.collect()
-    assert sweep_orphaned_deps() >= 1
-    assert len(_DEPS_REGISTRY) < n_before
-    assert derived.count() >= 0  # derived frame still computable post-sweep

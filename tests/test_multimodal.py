@@ -1,16 +1,12 @@
-"""Multimodal plumbing: schemas, Arrow batch shapes, deterministic fake
-features, frame-sampling row explosion, exact media dedup."""
+"""Multimodal plumbing: the stdlib codecs, the one magic-byte decode
+dispatch, and the distributed metadata pass."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from cs588_data_science_bug_duplicate_detector_spark.operators.multimodal import (
-    FEATURE_DIM,
     MEDIA_SCHEMA,
-    DecoderUnavailable,
-    extract_features,
-    media_dedup_edges,
-    sample_frames,
+    media_metadata,
 )
 
 
@@ -27,61 +23,15 @@ def media(spark):
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def test_extract_features_shape_and_determinism(spark, media):
-    out = extract_features(media)
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert set(rows) == {1, 2, 3, 4, 5, 6}
-    for r in rows.values():
-        assert len(r["feature"]) == FEATURE_DIM
-        assert all(0.0 <= x < 1.0 for x in r["feature"])
-    assert rows[1]["feature"] == rows[2]["feature"]  # same payload, same feature
-    assert rows[1]["feature"] != rows[3]["feature"]
-    again = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    assert again == {k: r["feature"] for k, r in rows.items()}
-
-
 def test_real_decoder_is_explicit_stub(spark, media):
     # every fixture row is undecodable in-container, and EVERY format path
     # (incl. a RIFF-but-not-WAVE audio payload) maps to DecoderUnavailable —
     # so the surfaced exception is deterministic regardless of which task
     # fails first (this assertion was scheduling-order-flaky before the
-    # full-signature WAV dispatch fix in decode_media)
+    # full-signature WAV dispatch fix in _decode_payload)
     with pytest.raises(Exception) as exc_info:
-        extract_features(media, use_real_decoder=True).collect()
+        media_metadata(media).collect()
     assert "DecoderUnavailable" in str(exc_info.value) or "decoding requires" in str(exc_info.value)
-
-
-def test_sample_frames_explosion(spark, media):
-    frames = sample_frames(media, every_ms=1000)
-    by_id = {}
-    for r in frames.collect():
-        by_id.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert set(by_id) == {5, 6}          # only video rows
-    assert sorted(by_id[5]) == [0, 1, 2, 3]  # 4500ms @ 1000ms
-    assert by_id[6] == [0]               # min 1 frame
-    assert frames.where(F.col("media_id") == 5).count() == 4
-
-
-def test_media_dedup_edges(spark, media):
-    edges = {(r["src"], r["dst"]) for r in media_dedup_edges(media).collect()}
-    assert edges == {(1, 2)}
-
-
-def test_media_dedup_ignores_empty_and_null_payloads(spark):
-    """Every failed media fetch stores the same empty payload; md5(b'')
-    must not weld them into one fake duplicate cluster (same invariant as
-    exact-text dedup: no content is not same content)."""
-    rows = [
-        (1, "image", b"", "image/png", None, None, None),
-        (2, "image", b"", "image/png", None, None, None),
-        (3, "video", None, "video/mp4", None, None, None),
-        (4, "video", None, "video/mp4", None, None, None),
-        (5, "image", b"real", "image/png", None, None, None),
-        (6, "image", b"real", "image/png", None, None, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    edges = {(r["src"], r["dst"]) for r in media_dedup_edges(media).collect()}
-    assert edges == {(5, 6)}
 
 
 # --- real codecs (stdlib+numpy: 24-bit BMP, PCM WAV) -----------------------
@@ -133,48 +83,16 @@ def test_resize_and_grid_feature():
     assert np.allclose(f[:8], 1.0) and np.allclose(f[8:], 0.0)  # top rows bright
 
 
-def test_extract_features_real_decoder_dataflow(spark):
-    import numpy as np
-
-    from cs588_data_science_bug_duplicate_detector_spark.operators.multimodal import (
-        DecoderUnavailable,
-        decode_media,
-        encode_bmp,
-        encode_wav,
-        extract_features,
-    )
-
-    rng = np.random.default_rng(9)
-    bmp = encode_bmp(rng.integers(0, 256, size=(12, 12, 3), dtype=np.uint8))
-    wav = encode_wav((rng.standard_normal(4000) * 10000).astype(np.int16))
-    rows = [
-        (1, "image", bytearray(bmp), "image/bmp", 12, 12, None),
-        (2, "audio", bytearray(wav), "audio/wav", None, None, 250),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, mime string, width int, height int, duration_ms int",
-    )
-    got = {r["media_id"]: r for r in extract_features(media, use_real_decoder=True).collect()}
-    assert len(got[1]["feature"]) == 16 and len(got[2]["feature"]) == 16
-    assert got[1]["n_bytes"] == len(bmp)
-    # compressed formats still fail loudly, not silently
-    try:
-        decode_media("image", "image/jpeg", b"\xff\xd8\xff")
-        raise AssertionError("expected DecoderUnavailable")
-    except DecoderUnavailable:
-        pass
-
-
 def test_decode_media_empty_mime_dispatches_on_magic_bytes():
     """mime='' with an unrecognized payload must raise DecoderUnavailable
     (the documented contract), never fall into a format decoder's internal
-    ValueError/wave.Error; mime='' with real magic bytes still decodes."""
+    ValueError/wave.Error; mime='' with real magic bytes still decodes, and
+    a compressed format fails loudly even under its own mime."""
     import numpy as np
 
     from cs588_data_science_bug_duplicate_detector_spark.operators.multimodal import (
         DecoderUnavailable,
-        decode_media,
+        decode_metadata_row,
         encode_bmp,
         encode_wav,
     )
@@ -182,15 +100,20 @@ def test_decode_media_empty_mime_dispatches_on_magic_bytes():
     for kind in ("image", "audio"):
         for payload in (b"\xff\xd8\xff jpeg junk", b"ID3\x03 mp3 junk"):
             try:
-                decode_media(kind, "", payload)
+                decode_metadata_row(kind, "", payload)
                 raise AssertionError(f"expected DecoderUnavailable for {kind}")
             except DecoderUnavailable:
                 pass
+    try:
+        decode_metadata_row("image", "image/jpeg", b"\xff\xd8\xff")
+        raise AssertionError("expected DecoderUnavailable for JPEG")
+    except DecoderUnavailable:
+        pass
     rng = np.random.default_rng(3)
     bmp = encode_bmp(rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8))
     wav = encode_wav((rng.standard_normal(100) * 1000).astype(np.int16))
-    assert decode_media("image", "", bmp).shape == (16,)
-    assert decode_media("audio", None, wav).shape == (16,)
+    assert decode_metadata_row("image", "", bmp)[:3] == (4, 4, 0)
+    assert decode_metadata_row("audio", None, wav)[:3] == (0, 0, 100)
 
 
 def test_png_round_trip_and_filter_reversal():
@@ -281,13 +204,13 @@ def test_png_dispatch_and_unsupported_variants():
         _png_chunk,
         _PNG_SIG,
         DecoderUnavailable,
-        decode_media,
+        decode_metadata_row,
         encode_png,
     )
 
     img = np.full((4, 4, 3), 128, dtype=np.uint8)
-    feat = decode_media("image", "", encode_png(img))  # magic-byte dispatch
-    assert feat.shape == (16,)
+    # magic-byte dispatch; a uniform 128 image has feature mean 128/255
+    assert decode_metadata_row("image", "", encode_png(img)) == (4, 4, 0, round(128 / 255, 6))
     # palette (color type 3) is honestly unsupported
     raw = zlib.compress(b"\x00" + bytes(4))
     pal = (
@@ -297,7 +220,7 @@ def test_png_dispatch_and_unsupported_variants():
         + _png_chunk(b"IEND", b"")
     )
     try:
-        decode_media("image", "image/png", pal)
+        decode_metadata_row("image", "image/png", pal)
         raise AssertionError("expected DecoderUnavailable")
     except DecoderUnavailable:
         pass

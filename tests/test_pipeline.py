@@ -334,6 +334,7 @@ def test_pipeline_cc_uses_reliable_checkpoints_and_survives_kill(
         raise AssertionError("expected mid-CC kill")
     except Killed:
         pass
+    assert "_cc_kill" not in spark.sparkContext._jsc.sc().getCheckpointDir().get()
     assert os.path.isdir(kill_dir) and os.listdir(kill_dir)
 
     # the pipeline re-run over the same workdir completes and matches

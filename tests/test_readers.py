@@ -1,17 +1,13 @@
-"""Source readers/sinks (SURVEY.md S1-S6): explicit-schema CSV/JSON
-round-trips with the reference's quirky inputs (embedded newlines, quoted
-fields, NULL-ish tokens), plus required-column validation."""
+"""Source reader (SURVEY.md S1-S2): explicit-schema CSV reads of the
+reference's quirky inputs (embedded newlines, quoted fields, NULL-ish
+tokens), written as RFC-4180 CSV by Python's ``csv`` module."""
 
-import pytest
+import csv
 
 from cs588_data_science_bug_duplicate_detector_spark.sources.readers import (
     BUG_REPORTS_DDL,
     SPLIT_DDL,
     read_csv,
-    read_json,
-    validate_columns,
-    write_csv,
-    write_json,
 )
 
 ROWS = [
@@ -21,13 +17,17 @@ ROWS = [
 ]
 
 
-def _raw(spark):
-    return spark.createDataFrame(ROWS, BUG_REPORTS_DDL)
+def _write_csv(path, ddl, rows):
+    header = [col.split()[0] for col in ddl.split(", ")]
+    with open(path, "w", newline="", encoding="utf-8") as fh:
+        writer = csv.writer(fh, lineterminator="\n")
+        writer.writerow(header)
+        writer.writerows(rows)
 
 
 def test_csv_roundtrip_with_newlines_and_quotes(spark, tmp_path):
-    p = str(tmp_path / "reports_csv")
-    write_csv(_raw(spark), p)
+    p = str(tmp_path / "reports.csv")
+    _write_csv(p, BUG_REPORTS_DDL, ROWS)
     back = read_csv(spark, p, BUG_REPORTS_DDL)
     got = {r["Issue_id"]: r for r in back.collect()}
     assert set(got) == {1, 2}
@@ -36,24 +36,8 @@ def test_csv_roundtrip_with_newlines_and_quotes(spark, tmp_path):
     assert got[1]["Duplicate"] == "2;3"
 
 
-def test_json_roundtrip(spark, tmp_path):
-    p = str(tmp_path / "reports_json")
-    write_json(_raw(spark), p)
-    back = read_json(spark, p, BUG_REPORTS_DDL)
-    got = {r["Issue_id"]: r for r in back.collect()}
-    assert got[1]["Title"] == "Crash on start"
-    assert got[2]["Enhanced_Description"] == "Enhanced"
-
-
 def test_explicit_schema_not_inferred(spark, tmp_path):
-    p = str(tmp_path / "split_csv")
-    write_csv(spark.createDataFrame([(7, "8;9")], SPLIT_DDL), p)
+    p = str(tmp_path / "split.csv")
+    _write_csv(p, SPLIT_DDL, [(7, "8;9")])
     back = read_csv(spark, p, SPLIT_DDL)
     assert [f.dataType.simpleString() for f in back.schema.fields] == ["bigint", "string"]
-
-
-def test_validate_columns(spark):
-    df = _raw(spark)
-    validate_columns(df, ["Issue_id", "Duplicate"])
-    with pytest.raises(ValueError, match="missing required columns"):
-        validate_columns(df, ["bug_id", "duplicate_cluster_id"])

@@ -1,19 +1,15 @@
-"""Structured Streaming ingest: watermarked url-dedup, in-stream signatures
-identical to batch, event-time windowed crawl stats."""
+"""Structured Streaming: the signature UDFs run inside a streaming query
+and emit signatures identical to batch."""
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
 from cs588_data_science_bug_duplicate_detector_spark.datagen import generate_pages_pdf
 from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import with_minhash
-from cs588_data_science_bug_duplicate_detector_spark.streaming.ingest import (
-    crawl_stats,
-    deduped_pages,
-    read_pages_stream,
-    signed_pages,
-)
+from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import with_simhash
+
+PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 @pytest.fixture(scope="module")
@@ -24,10 +20,8 @@ def stream_dir(spark, tmp_path_factory):
     recrawl = pages.head(10).copy()
     recrawl["warc_ts"] = recrawl["warc_ts"] + pd.Timedelta(minutes=1)
     both = pd.concat([pages, recrawl], ignore_index=True)
-    spark.createDataFrame(
-        both, schema="url string, warc_ts timestamp, html binary, text string, lang string"
-    ).write.mode("overwrite").parquet(d)
-    return d, len(pages)
+    spark.createDataFrame(both, schema=PAGES_DDL).write.mode("overwrite").parquet(d)
+    return d
 
 
 def _run_stream(df, tmpdir, name):
@@ -43,41 +37,15 @@ def _run_stream(df, tmpdir, name):
     return q
 
 
-def test_stream_dedup_by_url(spark, stream_dir, tmp_path):
-    d, n_unique = stream_dir
-    stream = read_pages_stream(spark, d)
-    _run_stream(deduped_pages(stream), str(tmp_path), "dedup_t")
-    out = spark.sql("SELECT url FROM dedup_t")
-    assert out.count() == n_unique
-    assert out.distinct().count() == n_unique
-
-
 def test_stream_signatures_match_batch(spark, stream_dir, tmp_path):
-    d, _ = stream_dir
+    d = stream_dir
     cfg = DedupConfig()
-    stream = read_pages_stream(spark, d)
-    _run_stream(signed_pages(stream, cfg), str(tmp_path), "signed_t")
+    stream = spark.readStream.schema(PAGES_DDL).parquet(d)
+    _run_stream(with_simhash(with_minhash(stream, "text", cfg), "text"), str(tmp_path), "signed_t")
     got = {
         r["url"]: (tuple(r["minhash"]), r["simhash"])
         for r in spark.sql("SELECT url, minhash, simhash FROM signed_t").collect()
     }
-    batch = with_minhash(spark.read.parquet(d), "text", cfg)
-    from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import with_simhash
-
-    batch = with_simhash(batch, "text")
+    batch = with_simhash(with_minhash(spark.read.parquet(d), "text", cfg), "text")
     for r in batch.select("url", "minhash", "simhash").collect():
         assert got[r["url"]] == (tuple(r["minhash"]), r["simhash"])
-
-
-def test_crawl_stats_windows(spark, stream_dir, tmp_path):
-    d, _ = stream_dir
-    stream = read_pages_stream(spark, d)
-    _run_stream(crawl_stats(stream, window="10 minutes"), str(tmp_path), "stats_t")
-    out = spark.sql("SELECT * FROM stats_t")
-    rows = out.collect()
-    # append mode emits only watermark-closed windows; the open tail is held
-    # back, so totals are <= the corpus and windows are 10min-aligned
-    assert len(rows) > 0
-    for r in rows:
-        assert (r["window_end"] - r["window_start"]).total_seconds() == 600
-        assert r["n_pages"] > 0

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from cs588_data_science_bug_duplicate_detector_spark.functions.cleanup import clean_text
 from cs588_data_science_bug_duplicate_detector_spark.functions.gopher import gopher_columns
 from cs588_data_science_bug_duplicate_detector_spark.functions.pii import mask_pii
-from cs588_data_science_bug_duplicate_detector_spark.streaming.ingest import read_pages_stream
 
 NBSP, ZW = chr(0x00A0), chr(0x200B)
 
@@ -43,7 +42,10 @@ def _transform(df):
 
 def test_cleanup_pii_gopher_run_in_stream_and_match_batch(spark, tmp_path):
     d = _src(spark, tmp_path)
-    stream = _transform(read_pages_stream(spark, d))
+    stream = _transform(
+        spark.readStream.schema("url string, warc_ts timestamp, html binary, text string, lang string")
+        .parquet(d)
+    )
     assert stream.isStreaming
     q = (
         stream.writeStream.format("memory")

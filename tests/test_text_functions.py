@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from cs588_data_science_bug_duplicate_detector_spark.functions.text import (
     language_guess,
-    marked_section,
     parse_id_list,
     quality_score,
     tagged_concat,
@@ -85,27 +84,6 @@ def test_token_count_and_language_guess(spark):
     assert out[3][1] == "de"
     assert out[4] == (0, "und")
     assert out[5][1] == "und"
-
-
-def test_marked_section_probe(spark):
-    """F3 substring probe semantics (inference_comparison.py:241-247)."""
-    rows = [
-        (1, "[DESCRIPTION] broken\nVisual Context: a red button \n"),
-        (2, "no marker here"),
-        (3, None),
-        (4, "Visual Context:"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    got = {
-        r["id"]: r["vc"]
-        for r in df.select(
-            "id", marked_section("text", "Visual Context:").alias("vc")
-        ).collect()
-    }
-    assert got[1] == "a red button"
-    assert got[2] is None
-    assert got[3] is None
-    assert got[4] == ""
 
 
 def test_quality_score_orders_sensibly(spark):

@@ -1,9 +1,6 @@
 """Canonical-URL normalization (functions/urls.py): Spark and the
 generated DuckDB twin must agree byte-for-byte on every normalization
-rule, and the streaming ingest's canonicalized dedup must collapse
-frontier noise to one admission."""
-
-import datetime
+rule."""
 
 import duckdb
 import pytest
@@ -54,41 +51,3 @@ def test_duckdb_twin_matches_spark(spark):
         ).fetchall()
     ]
     assert duck == [e for _, e in CASES]
-
-
-def test_streaming_canonical_dedup(spark, tmp_path):
-    """Five dirty variants of one page arrive in-stream; canonicalized
-    dedup admits exactly one (raw dedup would admit all five)."""
-    ts = datetime.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        ("https://WWW.Site.org/p/1", ts, None, "body one", "en"),
-        ("https://site.org/p/1/?utm_source=feed", ts, None, "body one", "en"),
-        ("https://site.org:443/p/1#top", ts, None, "body one", "en"),
-        ("https://site.org/p/1/", ts, None, "body one", "en"),
-        ("https://site.org/p/1?fbclid=z", ts, None, "body one", "en"),
-        ("https://site.org/p/2", ts, None, "body two", "en"),
-    ]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    ).coalesce(1).write.parquet(src)
-
-    from cs588_data_science_bug_duplicate_detector_spark.streaming.ingest import (
-        deduped_pages,
-        read_pages_stream,
-    )
-
-    out = deduped_pages(read_pages_stream(spark, src), canonicalize=True)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("canon_dedup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    admitted = spark.sql("SELECT url, text FROM canon_dedup_test").collect()
-    texts = sorted(r.text for r in admitted)
-    assert texts == ["body one", "body two"]
-    # original (uncanonicalized) url column survives
-    assert all(r.url.startswith("http") for r in admitted)
