@@ -306,7 +306,7 @@ ver AS (
   FROM amb p JOIN sig sa ON sa.doc_id = p.src JOIN sig sb ON sb.doc_id = p.dst
   WHERE {n_eq} / {float(cfg.num_perm)} >= {cfg.verify_threshold}),
 cdocs AS (SELECT doc_id, text FROM docs
-          WHERE text IS NOT NULL AND regexp_replace(text, '^\s+|\s+$', '', 'g') <> ''),
+          WHERE text IS NOT NULL AND regexp_replace(text, '^\\s+|\\s+$', '', 'g') <> ''),
 exg AS (SELECT md5(text) AS h, MIN(doc_id) AS root, COUNT(*) AS n FROM cdocs GROUP BY md5(text)),
 ex AS (
   SELECT g.root AS src, d.doc_id AS dst

@@ -189,7 +189,9 @@ def fold_labels(old_labels: DataFrame, new_edges: DataFrame,
 
     The previous partition enters CC as star edges (cluster_id ->
     member), so its contribution is one edge per non-root member — CC
-    never re-reads historical edge sets and converges in ~2 rounds.
+    never re-reads historical edge sets. Up to ``cc._LOCAL_MAX_EDGES``
+    carried + new edges it labels them on the driver; above, the star
+    loop converges in ~2 rounds.
     """
     carried = old_labels.where(F.col("id") != F.col("cluster_id")).select(
         F.col("cluster_id").alias("src"), F.col("id").alias("dst")

@@ -203,9 +203,11 @@ def verify_pairs(pairs: DataFrame, sigs: DataFrame, id_col: str, cfg: DedupConfi
 
 
 def hot_bucket_stats(hot: DataFrame) -> dict:
-    """Summarize the hot-bucket table for stage lineage metrics. Cheap when
-    the underlying band table is still persisted — call BEFORE
-    release_cached_deps."""
+    """Summarize the hot-bucket table for stage lineage metrics: one
+    collect. Cheap only while the persisted bucket table is filled — call
+    AFTER the write that materializes the edges (else this job runs the
+    bucket window itself, serially, ahead of that write) and BEFORE
+    release_cached_deps, as ``run_pipeline``'s ``edges_meta`` does."""
     row = hot.agg(
         F.count("*").alias("hot_buckets"),
         F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("rows_in_hot_buckets"),

@@ -19,7 +19,7 @@ from pyspark.sql.types import LongType
 from ..config import DedupConfig
 from ..functions import hashing
 from .buckets import pair_buckets
-from .minhash import _attach_deps, hot_bucket_stats
+from .minhash import _attach_deps
 
 
 @pandas_udf(LongType())
@@ -70,20 +70,14 @@ def hamming_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str,
     return _attach_deps(pairs.unionByName(star).where(near).select("src", "dst").distinct(), deps), hot
 
 
-def simhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                            stats_out: dict | None = None) -> DataFrame:
+def simhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig) -> DataFrame:
     """sigs(id, simhash) -> verified Hamming<=cfg.simhash_hamming_max edges (src < dst).
 
     ``hamming_edges`` with an empty old side: min-member star edges for
-    hot chunk buckets, Hamming-verified, linear instead of quadratic. Pass
-    ``stats_out`` to surface the cap as lineage metrics (hot chunk count /
-    capped rows / max bucket) — computed from the persisted chunk table,
-    no extra scan. Release via ``minhash.release_cached_deps``.
+    hot chunk buckets, Hamming-verified, linear instead of quadratic.
+    Release via ``minhash.release_cached_deps``.
     """
-    edges, hot = hamming_edges(sigs, sigs.where(F.lit(False)), id_col, cfg)
-    if stats_out is not None:  # hot_chunks, rows_in_hot_chunks, max_chunk_size
-        stats_out.update({k.replace("bucket", "chunk"): v for k, v in hot_bucket_stats(hot).items()})
-    return edges
+    return hamming_edges(sigs, sigs.where(F.lit(False)), id_col, cfg)[0]
 
 
 def simhash_edges(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) -> DataFrame:

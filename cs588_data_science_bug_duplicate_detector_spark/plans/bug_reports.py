@@ -18,7 +18,8 @@ Re-expresses /root/reference/preprocess_data.py `main()`/`process_split`
   + dataset stats (A1-A3)                                  :211-224
 
 Per-row Python in the reference becomes column expressions; the in-memory
-union-find becomes the distributed large-star/small-star CC — label VALUES
+union-find becomes ``operators/cc.py`` (a driver-side union-find for small
+edge sets, the distributed large-star/small-star CC above) — label VALUES
 differ (reference uses an arbitrary union root, we use the min member) but
 the partition is identical, which is what every downstream consumer uses.
 """

@@ -1,9 +1,13 @@
 """Connected components vs the union-find oracle on adversarial graph shapes
 (FIXTURES.md §3): path, star, bridged cliques, self-loops, duplicate and
-reversed edges, isolated vertices."""
+reversed edges, isolated vertices. Small edge sets take the driver-side
+union-find; a test of the star loop forces it by lowering the bound."""
+
+import random
 
 import pytest
 
+from cs588_data_science_bug_duplicate_detector_spark.operators import cc
 from cs588_data_science_bug_duplicate_detector_spark.operators.cc import (
     connected_components,
     union_find_oracle,
@@ -33,14 +37,49 @@ def _labels_from_spark(spark, edges, vertices):
     }
 
 
-@pytest.mark.parametrize("shape", sorted(SHAPES))
-def test_cc_matches_union_find(spark, shape):
-    edges = SHAPES[shape]
+def _random_int64_multigraph(seed):
+    """Duplicates, reversed edges and self-loops over negative, zero and
+    extreme int64 ids."""
+    rng = random.Random(seed)
+    pool = [-(2**63), 2**63 - 1, -(2**63) + 1, 2**63 - 2, -1, 0, 1]
+    pool += [rng.randint(-(2**63), 2**63 - 1) for _ in range(25)]
+    pool += [rng.randint(-20, 20) for _ in range(15)]
+    return [(rng.choice(pool), rng.choice(pool)) for _ in range(90)]
+
+
+GRAPHS = {
+    **SHAPES,
+    "random_int64_multigraph": _random_int64_multigraph(7),
+    "empty": [],
+    "self_loops_only": [(3, 3), (9, 9), (3, 3)],
+}
+
+
+def _both_forms(spark, edges, vertices):
+    """(dtypes, labels) with and without ``vertices``."""
+    e = spark.createDataFrame(edges, "src long, dst long")
+    v = spark.createDataFrame([(x,) for x in vertices], "id long")
+    return [
+        (labels.dtypes, {r["id"]: r["cluster_id"] for r in labels.collect()})
+        for labels in (connected_components(e, vertices=v), connected_components(e))
+    ]
+
+
+@pytest.mark.parametrize("shape", sorted(GRAPHS))
+def test_cc_matches_union_find(spark, monkeypatch, shape):
+    """The driver-side union-find and the star loop (forced through the
+    bound) give the oracle's labels, column names and types."""
+    edges = GRAPHS[shape]
     vertices = sorted({x for e in edges for x in e} | {999})  # 999 isolated
-    got = _labels_from_spark(spark, edges, vertices)
-    oracle = union_find_oracle(edges, vertices)
-    assert got == oracle
+    driver = _both_forms(spark, edges, vertices)
+    monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", -1)
+    assert _both_forms(spark, edges, vertices) == driver
+    (types, got), (types_nv, got_nv) = driver
+    assert types == types_nv == [("id", "bigint"), ("cluster_id", "bigint")]
+    assert got == union_find_oracle(edges, vertices)
     assert got[999] == 999  # isolated vertex is its own singleton cluster
+    # without vertices only endpoints of non-self-loop edges are labeled
+    assert got_nv == union_find_oracle([(s, d) for s, d in edges if s != d])
 
 
 def test_cc_min_member_convention(spark):
@@ -48,11 +87,12 @@ def test_cc_min_member_convention(spark):
     assert got == {3: 3, 7: 3, 9: 3}
 
 
-def test_cc_unconverged_raises_instead_of_silent_partial_labels(spark):
+def test_cc_unconverged_raises_instead_of_silent_partial_labels(spark, monkeypatch):
     """Exhausting max_iter before the edge set stabilizes must fail loudly:
     labels from a still-evolving edge set silently split true components
     across cluster ids and downstream canonical selection keeps multiple
     'representatives' per cluster with no signal anything went wrong."""
+    monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", -1)  # only the loop iterates
     chain = [(i, i + 1) for i in range(1, 9)]
     e = spark.createDataFrame(chain, "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -67,6 +107,22 @@ def test_cc_empty_edges(spark):
     v = spark.createDataFrame([(1,), (2,)], "id long")
     got = {r["id"]: r["cluster_id"] for r in connected_components(e, vertices=v).collect()}
     assert got == {1: 1, 2: 2}
+
+
+def test_driver_path_bound(spark, monkeypatch):
+    """At the bound the driver labels the edges and no round runs; one
+    distinct edge over it, the star loop runs and reports its rounds."""
+    monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", 3)
+    at_bound = [(1, 2), (2, 3), (3, 4), (1, 2), (5, 5)]  # 3 distinct non-loop edges
+    over = at_bound + [(4, 5)]
+    for edges, loops in ((at_bound, False), (over, True)):
+        rounds = []
+        e = spark.createDataFrame(edges, "src long, dst long")
+        got = connected_components(e, on_iteration=lambda it, n: rounds.append(n))
+        assert {r["id"]: r["cluster_id"] for r in got.collect()} == union_find_oracle(
+            [(s, d) for s, d in edges if s != d]
+        )
+        assert bool(rounds) == loops
 
 
 # --- property-based: random graphs vs the union-find oracle ----------------

@@ -2,7 +2,6 @@
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from cs588_data_science_bug_duplicate_detector_spark.functions import hashing
 

@@ -1,7 +1,5 @@
 """Single-doc inspection (reference inference_comparison parity)."""
 
-from pyspark.sql import functions as F
-
 from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
 from cs588_data_science_bug_duplicate_detector_spark.operators.inspect import (
     inspect_doc,

@@ -8,7 +8,6 @@ from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
 from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
     band_table,
     capped_band_table,
-    candidate_pairs,
     minhash_edges,
     verify_pairs,
     with_minhash,

@@ -2,8 +2,6 @@
 (/root/reference/preprocess_data.py:20-90): tagged concat skips blank/null
 fields; id-list parse drops ''/'NULL'/unparsable tokens and dedups."""
 
-from pyspark.sql import functions as F
-
 from cs588_data_science_bug_duplicate_detector_spark.functions.text import (
     language_guess,
     parse_id_list,

@@ -3,8 +3,6 @@ generated DuckDB twin must agree byte-for-byte on every normalization
 rule."""
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 from cs588_data_science_bug_duplicate_detector_spark.functions.urls import (
     canonical_url,
