@@ -9,17 +9,22 @@ This module maintains a persisted index (MinHash + SimHash signatures +
 exact-text md5 per doc — the full production detector set — plus current
 cluster labels) and, per increment:
 
-1. signs ONLY the new documents (one Arrow pass — the Python hot path is
-   proportional to the increment, never the corpus);
-2. discovers candidate pairs with >= 1 NEW endpoint: new band keys /
-   simhash chunk keys / text md5s are joined against the stored index,
-   and because all three key families are pure functions of
+1. signs ONLY the new documents with the pipeline's signer,
+   ``sign_docs`` (one Arrow pass for both hash signatures, plus the
+   text md5 — the Python hot path is proportional to the increment,
+   never the corpus);
+2. discovers candidate pairs with >= 1 NEW endpoint with the pipeline's
+   edge union, ``detect_edges``, called with the stored index as the old
+   side: new band keys / simhash chunk keys / text md5s are joined
+   against it, and because all three key families are pure functions of
    content+config, an old bucket that contains no new member cannot
    produce a new pair — those buckets are dropped by a key semi-join
    before any pairing happens;
-3. folds the new verified edges into the previous labels: old clusters
-   enter connected-components as star edges (cluster_id -> member), so
-   the CC input is O(|old docs| + |new edges|), not O(all edges ever).
+3. folds the new edges into the previous labels (``fold_labels``): old
+   clusters enter connected-components as star edges (cluster_id ->
+   member), so the CC input is O(|old docs| + |new edges|), not
+   O(all edges ever). The batch pipeline skips this step: its CC reads
+   the whole edge checkpoint.
 
 Scale notes (the 1000-executor story):
 - Per-increment Python/signature cost: O(|increment|). Old docs are
@@ -35,14 +40,18 @@ Scale notes (the 1000-executor story):
   stored signature table can additionally be bucketed by band-key prefix
   (Iceberg bucket transform) to skip the shuffle entirely; the Parquet
   backend here keeps the seam simple.
-- The MinHash and SimHash folds and the batch detectors run ONE
-  bucket-pairing core, ``operators.buckets.pair_buckets`` (batch is the
-  fold with an empty old side), so the touched-bucket semi-join, the
-  singleton drop, the cap split and the star rules exist once: capped
-  buckets contribute star edges to the bucket root (linear, not
-  quadratic) for new members only, plus root -> every old member when
-  the root itself is new — old members' intra-bucket connectivity is
-  already captured by the carried labels.
+- Batch is the fold with an empty old side for the whole detect step:
+  ``run_pipeline`` runs ``sign_docs`` and ``detect_edges`` on its
+  ``signatures`` checkpoint with ``old = new.where(F.lit(False))``,
+  which the optimizer prunes before planning. Each detector has one
+  rule — ``exact.exact_edges``, ``minhash.lsh_edges``,
+  ``simhash.hamming_edges`` — and the two hash rules share the
+  bucket-pairing core ``operators.buckets.pair_buckets``, so the
+  touched-bucket semi-join, the singleton drop, the cap split and the
+  star rules exist once: capped buckets contribute star edges to the
+  bucket root (linear, not quadratic) for new members only, plus root
+  -> every old member when the root itself is new — old members'
+  intra-bucket connectivity is already captured by the carried labels.
 - Labels-as-star-edges keeps the CC input shallow: the previous
   partition collapses to one edge per non-root member, so incremental CC
   converges in ~2 rounds regardless of how many increments accumulated.
@@ -77,110 +86,88 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.text import _nonblank
 from .cc import connected_components
+from .exact import exact_edges, text_md5_col
 from .minhash import (
     _attach_deps,
-    lsh_candidates,
+    lsh_edges,
     release_cached_deps,
-    verify_pairs,
     with_dual_signatures,
+    with_minhash,
 )
-from .simhash import hamming_edges
+from .simhash import hamming_edges, with_simhash
+
+# the signature column each signature-based detector reads, in the
+# pipeline's detector order
+SIG_COLUMN = {"exact": "text_md5", "minhash": "minhash", "simhash": "simhash"}
 
 
-def _signed_increment(docs: DataFrame, id_col: str, text_col: str,
-                      cfg: DedupConfig) -> DataFrame:
-    """(id, minhash, simhash, text_md5): everything the index stores per
-    doc — both hash signatures come from ONE Arrow pass
+def sign_docs(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,
+              detectors) -> DataFrame:
+    """(id_col, + one column per signature detector in ``detectors``):
+    what the pipeline's ``signatures`` checkpoint and the index's ``sigs``
+    store per doc.
+
+    MinHash and SimHash together come from ONE Arrow pass
     (``with_dual_signatures``: one JVM->Python text transfer, one shared
-    tokenization; char-shingle MinHash under ``shingle_mode="char"``,
-    exactly as the batch pipeline signs).
-
-    ``text_md5`` is NULL for content-less docs (NULL/whitespace text) for
-    the same reason ``exact_dup_edges`` filters them: "no content" must
-    never group as "same content".
+    tokenization; char-shingle MinHash under ``shingle_mode="char"``).
+    ``text_md5`` (``exact.text_md5_col``) is NULL for content-less docs.
     """
-    sigs = with_dual_signatures(docs.select(id_col, text_col), text_col, cfg)
-    return sigs.select(
-        F.col(id_col).alias("id"),
-        "minhash",
-        "simhash",
-        F.when(_nonblank(F.col(text_col)), F.md5(F.col(text_col).cast("binary")))
-        .alias("text_md5"),
-    )
+    df = docs.select(id_col, text_col)
+    if {"minhash", "simhash"} <= set(detectors):
+        df = with_dual_signatures(df, text_col, cfg)
+    elif "minhash" in detectors:
+        df = with_minhash(df, text_col, cfg)
+    elif "simhash" in detectors:
+        df = with_simhash(df, text_col)
+    if "exact" in detectors:
+        df = df.withColumn("text_md5", text_md5_col(text_col))
+    return df.drop(text_col)
 
 
-def incremental_minhash_edges(
-    new_sigs: DataFrame,
-    old_sigs: DataFrame,
-    cfg: DedupConfig,
-) -> tuple[DataFrame, DataFrame]:
-    """Verified LSH edges with >= 1 new endpoint, plus hot-bucket summary:
-    the same core as ``minhash_edges_from_sigs`` (``lsh_candidates``) with
-    the stored index as the old side. Old-vs-old pairs are excluded BY
-    CONSTRUCTION — the previous run already adjudicated them and their
-    verdict rides in via the carried labels."""
-    auto, cand, hot, deps = lsh_candidates(new_sigs, old_sigs, "id", cfg)
-    # prune the stored signatures to the candidate endpoints BEFORE the
-    # verify joins: the endpoint set is O(touched), small enough to
-    # broadcast, while the stored index is the largest payload of a fold
-    ends = cand.select(F.col("src").alias("id")).unionByName(cand.select(F.col("dst").alias("id")))
-    sigs = new_sigs.unionByName(old_sigs.join(ends.distinct(), "id", "left_semi"))
-    verified = verify_pairs(cand, sigs, "id", cfg).select("src", "dst")
-    return _attach_deps(auto.unionByName(verified).distinct(), deps), hot
+def detect_edges(new: DataFrame, old: DataFrame, cfg: DedupConfig,
+                 detectors) -> tuple[DataFrame, dict]:
+    """Signed (id, ...) docs, new and old -> ((src, dst, detector) edges
+    with >= 1 new endpoint, {detector: hot-bucket frame}) for the
+    signature detectors in ``detectors``; batch passes an empty old side.
+
+    The edges carry the ``_cached_deps`` of every detector: release them
+    once, after materializing.
+    """
+    parts, deps, hot = [], [], {}
+    for det, col in SIG_COLUMN.items():
+        if det not in detectors:
+            continue
+        n, o = new.select("id", col), old.select("id", col)
+        if det == "exact":
+            e = exact_edges(n, o)
+        else:
+            e, hot[det] = (lsh_edges if det == "minhash" else hamming_edges)(n, o, "id", cfg)
+        deps.extend(getattr(e, "_cached_deps", []))
+        parts.append(e.withColumn("detector", F.lit(det)))
+    return _attach_deps(reduce(DataFrame.unionByName, parts), deps), hot
 
 
-def incremental_simhash_edges(
-    new_sigs: DataFrame,
-    old_sigs: DataFrame,
-    cfg: DedupConfig,
-) -> DataFrame:
-    """Hamming-verified SimHash edges with >= 1 new endpoint: the same
-    core as ``simhash_edges_from_sigs`` (``hamming_edges``) with the
-    stored index as the old side."""
+def incremental_minhash_edges(new_sigs: DataFrame, old_sigs: DataFrame,
+                              cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
+    """Verified LSH edges with >= 1 new endpoint, plus hot-bucket summary."""
+    return lsh_edges(new_sigs, old_sigs, "id", cfg)
+
+
+def incremental_simhash_edges(new_sigs: DataFrame, old_sigs: DataFrame,
+                              cfg: DedupConfig) -> DataFrame:
+    """Hamming-verified SimHash edges with >= 1 new endpoint."""
     return hamming_edges(new_sigs, old_sigs, "id", cfg)[0]
 
 
-def incremental_exact_edges(new_hashes: DataFrame, old_hashes: DataFrame) -> DataFrame:
-    """Exact-dup star edges with >= 1 new endpoint.
-
-    Inputs are (id, text_md5); NULL hashes (content-less docs) never
-    group. Same min-over-window shape as ``exact_dup_edges``, restricted
-    to md5 groups touched by the increment.
-    """
-    new_h = new_hashes.where(F.col("text_md5").isNotNull()).withColumn(
-        "is_new", F.lit(True)
-    )
-    touched = new_h.select("text_md5").distinct()
-    old_h = (
-        old_hashes.where(F.col("text_md5").isNotNull())
-        .join(touched, "text_md5", "left_semi")
-        .withColumn("is_new", F.lit(False))
-    )
-    w = Window.partitionBy("text_md5")
-    rows = (
-        new_h.unionByName(old_h)
-        .withColumn("root", F.min("id").over(w))
-        .withColumn("old_min", F.min(F.when(~F.col("is_new"), F.col("id"))).over(w))
-    )
-    return (
-        rows.where(F.col("is_new") & (F.col("id") != F.col("root")))
-        .select(F.col("root").alias("src"), F.col("id").alias("dst"))
-        .unionByName(
-            rows.where(
-                F.col("is_new")
-                & (F.col("id") == F.col("root"))
-                & F.col("old_min").isNotNull()
-            ).select(F.col("id").alias("src"), F.col("old_min").alias("dst"))
-        )
-        .distinct()
-    )
+# exact-dup star edges with >= 1 new endpoint, from (id, text_md5)
+incremental_exact_edges = exact_edges
 
 
 def fold_labels(old_labels: DataFrame, new_edges: DataFrame,
@@ -212,7 +199,7 @@ class DedupIndex:
 
         root/
           meta.json            config fingerprint + increment count
-          sigs/inc=N/          (id, minhash, simhash, text_md5) per increment
+          sigs/inc=N/          (id, minhash[, simhash], text_md5) per increment
           labels/v{N}/         full label snapshot after increment N
 
     ``meta.json`` is written LAST via atomic rename, so a crash mid-
@@ -234,6 +221,7 @@ class DedupIndex:
         # the index identity — mixing detector sets across increments
         # breaks the inductive carried-labels invariant.
         self.use_simhash = use_simhash
+        self.detectors = ("exact", "minhash", "simhash") if use_simhash else ("exact", "minhash")
         os.makedirs(root, exist_ok=True)
 
     # --- layout helpers ---
@@ -265,15 +253,15 @@ class DedupIndex:
 
     # --- reads ---
     def signatures(self, spark: SparkSession, upto: int | None = None) -> DataFrame:
-        """All stored (id, minhash, simhash, text_md5); ``upto`` bounds the
-        increment index (exclusive) via partition pruning on ``inc``."""
+        """All stored (id, text_md5, minhash[, simhash]); ``upto`` bounds
+        the increment index (exclusive) via partition pruning on ``inc``."""
         self._recover_compaction()
         df = spark.read.option("basePath", os.path.join(self.root, "sigs")).parquet(
             os.path.join(self.root, "sigs")
         )
         if upto is not None:
             df = df.where(F.col("inc") < upto)
-        return df.select("id", "minhash", "simhash", "text_md5")
+        return df.select("id", *(SIG_COLUMN[d] for d in self.detectors))
 
     def labels(self, spark: SparkSession) -> DataFrame:
         n = self.meta()["n_increments"]
@@ -377,12 +365,17 @@ class DedupIndex:
         carried-star-edges + new edges.
 
         ``cc_kwargs`` forwards to ``connected_components`` — pass
-        ``{"reliable": True, "checkpoint_dir": ...}`` on a real cluster so
-        executor loss mid-fold replays from the round checkpoint instead
-        of restarting the CC loop (same knob the pipeline wires when a
-        workdir is present).
+        ``{"reliable": True}`` on a real cluster so executor loss mid-fold
+        replays from the round checkpoint instead of restarting the CC
+        loop (same knob the pipeline wires when a workdir is present).
+        Without a ``checkpoint_dir`` those checkpoints land under the
+        index root, not on a node-local tempdir, and are removed once the
+        labels are written.
         """
-        cc_kwargs = cc_kwargs or {}
+        cc_kwargs = dict(cc_kwargs or {})
+        own_ckpt = None
+        if cc_kwargs.get("reliable") and cc_kwargs.get("checkpoint_dir") is None:
+            own_ckpt = cc_kwargs["checkpoint_dir"] = os.path.join(self.root, "_cc_checkpoints")
         spark = docs.sparkSession
         self._recover_compaction()
         meta = self.meta()
@@ -397,9 +390,9 @@ class DedupIndex:
                 f"use_simhash={meta.get('use_simhash', True)}"
             )
         n = meta["n_increments"]
-        _signed_increment(docs, id_col, text_col, self.cfg).write.mode(
-            "overwrite"
-        ).parquet(self._sig_dir(n))
+        sign_docs(
+            docs.select(F.col(id_col).alias("id"), text_col), "id", text_col, self.cfg, self.detectors
+        ).write.mode("overwrite").parquet(self._sig_dir(n))
         new_sigs = spark.read.parquet(self._sig_dir(n))
         new_ids = new_sigs.select("id")
 
@@ -410,23 +403,12 @@ class DedupIndex:
             # the optimizer prunes before planning
             old_sigs = new_sigs.where(F.lit(False))
             old_labels = new_ids.select("id", F.col("id").alias("cluster_id")).where(F.lit(False))
-        mh_edges, _hot = incremental_minhash_edges(
-            new_sigs.select("id", "minhash"), old_sigs.select("id", "minhash"), self.cfg
-        )
-        edges = mh_edges.unionByName(
-            incremental_exact_edges(new_sigs.select("id", "text_md5"), old_sigs.select("id", "text_md5"))
-        )
-        sim_edges = None
-        if self.use_simhash:
-            sim_edges = incremental_simhash_edges(
-                new_sigs.select("id", "simhash"), old_sigs.select("id", "simhash"), self.cfg
-            )
-            edges = edges.unionByName(sim_edges)
-        labels = fold_labels(old_labels, edges.distinct(), new_ids, **cc_kwargs)
+        edges, _hot = detect_edges(new_sigs, old_sigs, self.cfg, self.detectors)
+        labels = fold_labels(old_labels, edges, new_ids, **cc_kwargs)
         labels.write.mode("overwrite").parquet(self._label_dir(n))
-        release_cached_deps(mh_edges)
-        if sim_edges is not None:
-            release_cached_deps(sim_edges)
+        release_cached_deps(edges)
+        if own_ckpt:
+            shutil.rmtree(own_ckpt, ignore_errors=True)
         out = spark.read.parquet(self._label_dir(n))
         n_docs = out.count()
         # count the materialized parquet, not the incoming plan (no recompute)

@@ -235,15 +235,20 @@ def release_cached_deps(df: DataFrame) -> None:
             pass
 
 
-def lsh_candidates(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                   string_keys: bool = False) -> tuple:
-    """``buckets.pair_buckets`` over the band keys + MinHash's auto-accept
-    split -> (auto, cand, hot, deps), every pair with >= 1 new endpoint.
+def lsh_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupConfig,
+              string_keys: bool = False) -> tuple[DataFrame, DataFrame]:
+    """``buckets.pair_buckets`` over the band keys + MinHash's verify rule
+    -> (edges, hot), every edge with >= 1 new endpoint. Batch is the call
+    with an empty old side (``minhash_edges_from_sigs``).
 
     Hybrid verify: pairs colliding in >= ``auto_accept_bands`` bands (the
-    quadratic bulk — exact dups, template farms) are accepted outright as
-    ``auto``; only the statistically ambiguous low-match tail and the
-    hot-bucket star edges (``cand``) pay the ``verify_pairs`` join.
+    quadratic bulk — exact dups, template farms) are accepted outright;
+    only the statistically ambiguous low-match tail and the hot-bucket
+    star edges pay the ``verify_pairs`` join. Edges include min-member
+    star edges for capped hot buckets, so recall survives the cap. The
+    returned edges carry ``_cached_deps`` (the persisted signature, bucket
+    and pair tables) — callers should ``release_cached_deps`` after
+    materializing.
     """
     # Persist the new signatures: they feed THREE plan branches (band
     # explode + the two verify joins), and without a persist each branch
@@ -261,24 +266,20 @@ def lsh_candidates(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: D
     n = F.col("n_bands")
     auto = pairs.where(n >= cfg.auto_accept_bands).select("src", "dst")
     cand = pairs.where(n < cfg.auto_accept_bands).select("src", "dst").unionByName(star.distinct())
-    return auto, cand, hot, [new_sigs, *deps, pairs]
+    # prune the old signatures to the candidate endpoints BEFORE the
+    # verify joins: the endpoint set is O(touched), small enough to
+    # broadcast, while a stored index is the largest payload of a fold
+    ends = cand.select(F.col("src").alias(id_col)).unionByName(cand.select(F.col("dst").alias(id_col)))
+    sigs = new_sigs.unionByName(old_sigs.join(ends.distinct(), id_col, "left_semi"))
+    verified = verify_pairs(cand, sigs, id_col, cfg).select("src", "dst")
+    return _attach_deps(auto.unionByName(verified).distinct(), [new_sigs, *deps, pairs]), hot
 
 
 def minhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
                             string_keys: bool = False) -> tuple[DataFrame, DataFrame]:
-    """sigs(id, minhash) -> (verified edges(src,dst), hot_bucket_summary).
-
-    ``lsh_candidates`` with an empty old side, then ``verify_pairs``.
-    Edges include min-member star edges for capped hot buckets, so recall
-    survives the cap. The returned edges carry ``_cached_deps`` (the
-    persisted signature, bucket and pair tables) — callers should
-    ``release_cached_deps`` after materializing.
-    """
-    auto, cand, hot, deps = lsh_candidates(
-        sigs, sigs.where(F.lit(False)), id_col, cfg, string_keys
-    )
-    verified = verify_pairs(cand, sigs, id_col, cfg).select("src", "dst")
-    return _attach_deps(auto.unionByName(verified).distinct(), deps), hot
+    """sigs(id, minhash) -> (verified edges(src,dst), hot_bucket_summary):
+    ``lsh_edges`` with an empty old side."""
+    return lsh_edges(sigs, sigs.where(F.lit(False)), id_col, cfg, string_keys)
 
 
 def minhash_edges(docs: DataFrame, id_col: str, text_col: str,

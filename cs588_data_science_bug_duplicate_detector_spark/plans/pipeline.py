@@ -30,16 +30,8 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 from ..functions.extract import with_extracted_text
 from ..operators.cc import connected_components
-from ..operators.exact import exact_dup_edges
-from ..operators.minhash import (
-    _attach_deps,
-    hot_bucket_stats,
-    minhash_edges_from_sigs,
-    release_cached_deps,
-    with_dual_signatures,
-    with_minhash,
-)
-from ..operators.simhash import hamming_edges, with_simhash
+from ..operators.incremental import SIG_COLUMN, detect_edges, sign_docs
+from ..operators.minhash import _attach_deps, hot_bucket_stats, release_cached_deps
 from ..operators.suffix import suffix_edges
 from ..sources.tableio import TableIO
 
@@ -120,6 +112,8 @@ def run_pipeline(
     if unknown or not detectors:
         what = f"unknown detectors {sorted(unknown)!r}" if unknown else "empty detector set"
         raise ValueError(f"{what}; choose a non-empty subset of {ALL_DETECTORS}")
+    # one spelling per set: a repeated name must not change the stage salts
+    detectors = tuple(d for d in ALL_DETECTORS if d in detectors)
     det_salt = ",".join(sorted(detectors))
     stats: dict = {
         "stages": {},
@@ -217,21 +211,14 @@ def run_pipeline(
 
     # --- stage 2: signatures ----------------------------------------------
     # detector set folded into the salt: resuming with a different set must
-    # recompute, never reuse edges/signatures built for the old set
-    docs_fp = _fingerprint(documents, "doc_id, text", cfg, f"documents[{det_salt}]")
-
-    def build_signatures():
-        df = documents.select("doc_id", "text")
-        if {"minhash", "simhash"} <= set(detectors):
-            df = with_dual_signatures(df, "text", cfg)  # one Arrow pass for both
-        elif "minhash" in detectors:
-            df = with_minhash(df, "text", cfg)
-        elif "simhash" in detectors:
-            df = with_simhash(df, "text")
-        return df.drop("text")
-
-    needs_signatures = bool({"minhash", "simhash"} & set(detectors))
-    signatures = stage("signatures", docs_fp, build_signatures) if needs_signatures else None
+    # recompute, never reuse edges/signatures built for the old set. The
+    # "signatures.v2" prefix names the layout that carries text_md5 for
+    # exact: a checkpoint written without it is recomputed, not misread.
+    docs_fp = _fingerprint(documents, "doc_id, text", cfg, f"signatures.v2[{det_salt}]")
+    signatures = (
+        stage("signatures", docs_fp, lambda: sign_docs(documents, "doc_id", "text", cfg, detectors))
+        if set(detectors) & set(SIG_COLUMN) else None
+    )
 
     # --- stage 3: candidate edges -------------------------------------------
     from pyspark.sql import Observation
@@ -241,31 +228,18 @@ def run_pipeline(
     hot: dict = {}  # detector -> its hot-bucket frame, summarized in edges_meta
 
     def build_edges():
-        parts = []
-        deps = []
-        if "exact" in detectors:
-            parts.append(
-                exact_dup_edges(documents, "doc_id", "text").withColumn("detector", F.lit("exact"))
-            )
-        if "minhash" in detectors:
-            e, hot["minhash"] = minhash_edges_from_sigs(
-                signatures.select("doc_id", "minhash"), "doc_id", cfg
-            )
-            deps.extend(getattr(e, "_cached_deps", []))
-            parts.append(e.withColumn("detector", F.lit("minhash")))
-        if "simhash" in detectors:
-            sigs = signatures.select("doc_id", "simhash")
-            e, hot["simhash"] = hamming_edges(sigs, sigs.where(F.lit(False)), "doc_id", cfg)
-            deps.extend(getattr(e, "_cached_deps", []))
-            parts.append(e.withColumn("detector", F.lit("simhash")))
+        edges, deps = None, []
+        if signatures is not None:
+            # the fold's edge union with an empty old side
+            sigs = signatures.withColumnRenamed("doc_id", "id")
+            edges, found = detect_edges(sigs, sigs.where(F.lit(False)), cfg, detectors)
+            hot.update(found)
+            deps = edges._cached_deps
         if "suffix" in detectors:
             e = suffix_edges(documents, "doc_id", "text", cfg, observation=suffix_obs)
-            deps.extend(getattr(e, "_cached_deps", []))
-            parts.append(e.withColumn("detector", F.lit("suffix")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return _attach_deps(out, deps)
+            e = e.withColumn("detector", F.lit("suffix"))
+            edges = e if edges is None else edges.unionByName(e)
+        return _attach_deps(edges, deps)
 
     def edges_meta():
         # runs after the stage write, before release_cached_deps: the hot

@@ -4,13 +4,16 @@ evidence for the engine's key plan properties:
 - parquet scans push filters and prune columns (PushedFilters/ReadSchema)
 - no CartesianProduct in any production detector plan
 - the LSH pair self-join is co-partitioned on band_key (single exchange)
-- each batch detector (MinHash, SimHash) feeds its bucket window through
+- each batch detector (MinHash, SimHash, exact) feeds its window through
   exactly one exchange: the fold's empty old side is pruned before planning
 - whole-stage codegen spans cover the column-expression operators
 - the only broadcast-nested-loop join is the documented brute-force ANN
   baseline (the scale path is the bucketed lsh_topk)
 
 Usage: python scripts/audit_plans.py   (writes PLANS.md at the repo root)
+
+Spark expression ids (``#<n>``) and ``plan_id=`` values are normalized
+before writing, so a rerun on unchanged plans leaves PLANS.md unchanged.
 """
 
 from __future__ import annotations
@@ -31,13 +34,22 @@ def formatted_plan(df) -> str:
     )
 
 
-def bucket_window_exchanges(edges) -> list[str]:
-    """Exchange operators below a detector's persisted bucket window (the
-    ``buckets.pair_buckets`` table in the edges' ``_cached_deps``)."""
-    bw = next(d for d in edges._cached_deps if "bucket_size" in d.columns)
-    tree = bw._jdf.queryExecution().executedPlan().toString()
-    assert "Window [" in tree and "Union" not in tree and "LeftSemi" not in tree, tree
-    return [l.strip(" :+-") for l in tree.splitlines() if "Exchange" in l]
+# the key each batch detector's window partitions on
+WINDOW_KEYS = {"minhash": "band_key", "simhash": "band_key", "exact": "text_md5"}
+
+
+def batch_window_exchange(name: str, edges) -> str:
+    """Invariant 3b: the one exchange below a batch detector's window, the
+    persisted ``buckets.pair_buckets`` table in the edges' ``_cached_deps``
+    for MinHash/SimHash, the edges plan itself for exact. Asserts it is the
+    only one, hash-partitioned on the window key, with no Union and no
+    LeftSemi (the empty old side is pruned before planning)."""
+    deps = [d for d in getattr(edges, "_cached_deps", []) if "bucket_size" in d.columns]
+    tree = (deps[0] if deps else edges)._jdf.queryExecution().executedPlan().toString()
+    assert "Window [" in tree and "Union" not in tree and "LeftSemi" not in tree, (name, tree)
+    ex = [l.strip(" :+-") for l in tree.splitlines() if "Exchange" in l]
+    assert len(ex) == 1 and f"hashpartitioning({WINDOW_KEYS[name]}" in ex[0], (name, ex)
+    return ex[0]
 
 
 def main() -> None:
@@ -45,6 +57,7 @@ def main() -> None:
 
     import __spark_entry__ as E
     from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
+    from cs588_data_science_bug_duplicate_detector_spark.operators.exact import exact_dup_edges
     from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
         minhash_edges,
         release_cached_deps,
@@ -62,9 +75,9 @@ def main() -> None:
         "2. no CartesianProduct anywhere in the detector plans\n"
         "3. the LSH pair self-join reuses the band-table exchange (co-partitioned)\n"
         "4. the only BroadcastNestedLoopJoin is the documented brute-force ANN baseline\n"
-        "3b. each batch detector (MinHash, SimHash) feeds its bucket window through\n"
-        "   exactly ONE exchange — the empty old side of the shared bucket-pairing\n"
-        "   core is pruned before planning (no Union, no LeftSemi)\n"
+        "3b. each batch detector (MinHash, SimHash, exact) feeds its window through\n"
+        "   exactly ONE exchange — the empty old side of the shared detector rules\n"
+        "   is pruned before planning (no Union, no LeftSemi)\n"
         "5. the incremental folds (MinHash and SimHash) prune the stored index\n"
         "   (partition filter on inc, column-pruned signature scan) and semi-join\n"
         "   touched buckets BEFORE pairing\n"
@@ -101,17 +114,16 @@ def main() -> None:
 
     # 3b. batch = fold with an empty old side: one exchange into each window
     sh_edges = simhash_edges(docs, "doc_id", "text", DedupConfig())
+    ex_edges = exact_dup_edges(docs, "doc_id", "text")
     out.write(
-        "## 2b. Batch detectors share the bucket-pairing core (operators/buckets.py)\n\n"
-        "`pair_buckets` runs the batch detectors as the incremental fold with an\n"
-        "empty old side. The empty branch is pruned before planning, so each bucket\n"
-        "window is fed by exactly one hash exchange on `band_key` (no Union, no\n"
-        "LeftSemi):\n\n```\n"
+        "## 2b. Batch detectors are the fold with an empty old side\n\n"
+        "MinHash and SimHash run the bucket-pairing core (`operators/buckets.py`),\n"
+        "exact runs `exact.exact_edges`, each as the incremental fold with an empty\n"
+        "old side. The empty branch is pruned before planning, so each window is\n"
+        "fed by exactly one hash exchange on its key (no Union, no LeftSemi):\n\n```\n"
     )
-    for name, e in (("minhash", edges), ("simhash", sh_edges)):
-        ex = bucket_window_exchanges(e)
-        assert len(ex) == 1 and "hashpartitioning(band_key" in ex[0], (name, ex)
-        out.write(f"{name}: {ex[0]}\n")
+    for name, e in (("minhash", edges), ("simhash", sh_edges), ("exact", ex_edges)):
+        out.write(f"{name}: {batch_window_exchange(name, e)}\n")
         release_cached_deps(e)
     out.write("```\n\n")
 
@@ -198,17 +210,18 @@ def main() -> None:
 
     from cs588_data_science_bug_duplicate_detector_spark.operators.incremental import (
         DedupIndex,
-        _signed_increment,
         incremental_minhash_edges,
         incremental_simhash_edges,
+        sign_docs,
     )
 
     tmp = tempfile.mkdtemp(prefix="plan_inc_")
     try:
         idx = DedupIndex(f"{tmp}/idx", DedupConfig())
         idx.add_increment(docs.where(F.col("doc_id") % 3 == 0), "doc_id", "text")
-        new_sigs = _signed_increment(
-            docs.where(F.col("doc_id") % 3 == 1), "doc_id", "text", DedupConfig()
+        new_sigs = sign_docs(
+            docs.where(F.col("doc_id") % 3 == 1).select(F.col("doc_id").alias("id"), "text"),
+            "id", "text", DedupConfig(), idx.detectors,
         )
         old_sigs = idx.signatures(spark, upto=1)
         mh_edges, _ = incremental_minhash_edges(
@@ -256,8 +269,9 @@ def main() -> None:
     pyops = sorted({l.strip().split("(")[0].lstrip("+- ").strip() for l in plan.splitlines() if "Python" in l})
     out.write("```\n" + "\n".join(pyops) + "\n```\n")
 
+    text = re.sub(r"plan_id=\d+", "plan_id=<n>", re.sub(r"#\d+", "#<n>", out.getvalue()))
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write(out.getvalue())
+        f.write(text)
     print("PLANS.md written; all plan invariants hold")
     spark.stop()
 

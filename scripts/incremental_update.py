@@ -36,7 +36,8 @@ def main() -> None:
     ap.add_argument("--no-simhash", action="store_true",
                     help="exact + MinHash only (must match the index's detector set)")
     ap.add_argument("--reliable-cc", action="store_true",
-                    help="reliable CC round checkpoints (survives executor loss)")
+                    help="reliable CC round checkpoints under <index>/_cc_checkpoints, "
+                         "removed after the fold (survives executor loss)")
     ap.add_argument("--compact", action="store_true",
                     help="merge completed increment dirs after the fold")
     args = ap.parse_args()

@@ -119,7 +119,7 @@ def test_incremental_hot_bucket_and_blank_docs(spark, tmp_path):
 def test_incremental_char_shingle_mode(spark, tmp_path):
     """CJK-style unsegmented text: the index must store the same
     char-shingle MinHash signatures the batch detector computes (the
-    dual-signature kernel is token-only, so _signed_increment branches)."""
+    dual-signature kernel branches on ``shingle_mode``)."""
     cfg = DedupConfig(shingle_mode="char")
     base = "吾輩は猫である名前はまだ無い何でも薄暗いじめじめした所でニャーニャー泣いていた事だけは記憶している" * 3
     rows = [(i, base + f"追記{i % 4}") for i in range(12)]
@@ -258,3 +258,84 @@ def test_compact_crash_recovery(spark, tmp_path):
     # and folds after a recovered compaction still equal the batch run
     labels = idx.add_increment(docs.where(F.col("doc_id") % 4 == 3), "doc_id", "text")
     _assert_labels_equal(labels, _batch_labels(docs, cfg))
+
+
+def test_reliable_cc_checkpoints_under_index_root_and_removed(spark, tmp_path, monkeypatch):
+    """``{"reliable": True}`` without a checkpoint_dir checkpoints under the
+    index root, not the node-local tempdir fallback, and the fold removes
+    its checkpoints once the labels are written."""
+    import os
+    import tempfile
+
+    from cs588_data_science_bug_duplicate_detector_spark.operators import cc
+
+    def files(top):
+        return {os.path.join(d, f) for d, _, fs in os.walk(top) for f in fs}
+
+    # force the star loop: under the driver-side bound no round checkpoints
+    monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", -1)
+    fallback = os.path.join(tempfile.gettempdir(), "dupdetect-ckpt")
+    before = files(fallback)
+    docs = spark.createDataFrame(
+        [(i, f"shared body text number {i % 3} for the copies") for i in range(9)],
+        "doc_id long, text string",
+    )
+    root = tmp_path / "idx"
+    idx = DedupIndex(str(root), DedupConfig())
+    for i in range(2):
+        labels = idx.add_increment(docs.where(F.col("doc_id") % 2 == i), "doc_id", "text",
+                                   cc_kwargs={"reliable": True})
+    assert labels.select("cluster_id").distinct().count() == 3
+    assert not os.path.exists(root / "_cc_checkpoints")
+    assert files(fallback) == before
+
+
+def test_exact_rule_matches_md5_oracle(spark):
+    """Exact dups against an oracle that shares no code with the rule:
+    hashlib md5 groups of the non-blank texts, labeled by union-find, as
+    partitions of ``exact_dup_edges`` (batch) and of a 3-increment
+    ``incremental_exact_edges`` fold."""
+    import hashlib
+
+    from cs588_data_science_bug_duplicate_detector_spark.operators.cc import union_find_oracle
+    from cs588_data_science_bug_duplicate_detector_spark.operators.exact import text_md5_col
+    from cs588_data_science_bug_duplicate_detector_spark.operators.incremental import (
+        incremental_exact_edges,
+    )
+
+    rows = [  # (doc_id, increment, text)
+        (20, 0, "alpha page"), (30, 0, "alpha page"), (40, 1, "alpha page"),
+        # a new doc whose smaller id becomes the root of an old group
+        (50, 0, "beta page"), (60, 0, "beta page"), (5, 1, "beta page"), (7, 2, "beta page"),
+        # copies that only meet across increments
+        (70, 0, "gamma"), (8, 2, "gamma"), (90, 1, "delta"), (91, 2, "delta"),
+        (1, 0, "unique one"), (2, 1, "unique two"),
+        # content-less docs never group
+        (100, 0, None), (101, 1, None), (102, 0, "   "), (103, 2, "   "),
+        (104, 1, "\n"), (105, 2, "\n"), (106, 0, "\n\n"), (107, 2, " \t\n"),
+    ]
+    ids = [r[0] for r in rows]
+    groups = {}
+    for i, _inc, t in rows:
+        if t is not None and t.strip():
+            groups.setdefault(hashlib.md5(t.encode()).hexdigest(), []).append(i)
+    oracle = union_find_oracle([(min(m), x) for m in groups.values() for x in m], ids)
+    assert oracle[5] == 5 and oracle[60] == 5 and oracle[7] == 5  # new root of an old group
+    assert all(oracle[i] == i for i in range(100, 108))
+
+    docs = spark.createDataFrame(rows, "doc_id long, inc int, text string")
+    batch = exact_dup_edges(docs, "doc_id", "text").collect()
+    assert union_find_oracle(batch, ids) == oracle
+
+    hashes = docs.select(F.col("doc_id").alias("id"), "inc", text_md5_col("text").alias("text_md5"))
+    folded = []
+    for n in range(3):
+        new = hashes.where(F.col("inc") == n).drop("inc")
+        old = hashes.where(F.col("inc") < n).drop("inc")
+        out = incremental_exact_edges(new, old).collect()
+        # every edge has a new endpoint and none repeats within a fold
+        new_ids = {r[0] for r in rows if r[1] == n}
+        assert all(r["src"] in new_ids or r["dst"] in new_ids for r in out)
+        assert len(out) == len(set(out))
+        folded += out
+    assert union_find_oracle(folded, ids) == oracle

@@ -131,6 +131,47 @@ def test_detector_set_change_invalidates_edge_checkpoint(spark, pages, tmp_path_
     assert run2.stats["stages"]["documents"]["resumed"]  # detector-independent stage
 
 
+def test_repeated_detector_names_resume_the_same_checkpoints(spark, pages, tmp_path_factory):
+    """A repeated detector name is the same detector set: same stage salts,
+    so the other spelling resumes every stage, and stats list it once."""
+    wd = str(tmp_path_factory.mktemp("pipe_dup_det"))
+    pages_df, _, _ = pages
+    run1 = run_pipeline(spark, pages_df, wd, DedupConfig(), detectors=("minhash", "minhash"))
+    assert run1.stats["detectors"] == ["minhash"]
+    run2 = run_pipeline(spark, pages_df, wd, DedupConfig(), detectors=("minhash",))
+    assert all(s["resumed"] for s in run2.stats["stages"].values())
+    assert _label_map(run2.labels) == _label_map(run1.labels)
+
+
+def test_signatures_without_text_md5_are_recomputed(spark, pages, tmp_path_factory):
+    """A workdir from before exact read text_md5 from the signatures
+    checkpoint (no text_md5 column, stage salt ``documents[...]``) resumes
+    its documents but recomputes signatures and edges instead of failing."""
+    from cs588_data_science_bug_duplicate_detector_spark.operators.incremental import sign_docs
+    from cs588_data_science_bug_duplicate_detector_spark.sources.tableio import TableIO
+
+    wd = str(tmp_path_factory.mktemp("pipe_old_sigs"))
+    pages_df, _, _ = pages
+    dets = ("exact", "minhash")
+    run1 = run_pipeline(spark, pages_df, wd, DedupConfig(), detectors=dets)
+    io = TableIO(wd)
+    old = sign_docs(io.read(spark, "documents"), "doc_id", "text", DedupConfig(), ("minhash",))
+    io.write(old, "signatures")
+    assert "text_md5" not in io.read(spark, "signatures").columns
+    for name in ("signatures", "candidate_edges"):
+        meta = io.read_meta(name)
+        assert meta["input_fingerprint"].startswith("signatures.v2[exact,minhash]:")
+        meta["input_fingerprint"] = meta["input_fingerprint"].replace("signatures.v2[", "documents[", 1)
+        io.write_meta(name, meta)
+
+    run2 = run_pipeline(spark, pages_df, wd, DedupConfig(), detectors=dets)
+    stages = run2.stats["stages"]
+    assert stages["documents"]["resumed"]
+    assert not stages["signatures"]["resumed"] and not stages["candidate_edges"]["resumed"]
+    assert "text_md5" in io.read(spark, "signatures").columns
+    assert _label_map(run2.labels) == _label_map(run1.labels)
+
+
 def test_content_change_invalidates_checkpoints(spark, pages, tmp_path_factory):
     """Same urls, different text -> new fingerprints (content-bearing
     checksum, not just the key column)."""
