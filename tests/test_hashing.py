@@ -1,7 +1,10 @@
 """Unit tests for the vectorized hashing kernels against eager oracles."""
 
+import hashlib
+
 import numpy as np
 import pandas as pd
+import pytest
 
 from cs588_data_science_bug_duplicate_detector_spark.functions import hashing
 
@@ -124,19 +127,6 @@ def test_empty_and_edge_inputs():
     assert np.array_equal(sig[0], sig[1])  # null == empty text
 
 
-def test_dual_signatures_match_individual_kernels():
-    import numpy as np
-    import pandas as pd
-
-    from cs588_data_science_bug_duplicate_detector_spark.functions import hashing
-
-    texts = pd.Series(["a b c d e f g", "", "x y", "a b c d e f g h i j k l m"])
-    a, b = hashing.minhash_perms(16, 42)
-    mh, sh = hashing.dual_signatures(texts, 5, a, b)
-    assert np.array_equal(mh, hashing.minhash_signatures(texts, 5, a, b))
-    assert np.array_equal(sh, hashing.simhash_signatures(texts))
-
-
 def test_blocked_minhash_reduce_matches_unblocked():
     """The cache-blocked permutation reduction must be bit-identical to the
     naive full-array loop across block boundaries: docs that straddle the
@@ -173,3 +163,116 @@ def test_kernel_version_changes_config_fingerprint(monkeypatch):
     fp = DedupConfig().fingerprint()
     monkeypatch.setattr(hashing, "KERNEL_VERSION", hashing.KERNEL_VERSION + 1)
     assert DedupConfig().fingerprint() != fp
+
+
+def _golden_batch() -> pd.Series:
+    """The fixed batch behind the pinned signature digests: NULL, empty,
+    whitespace-only, zero tokens but not blank, CJK (no ASCII tokens),
+    docs shorter than shingle_k (in tokens and in chars), a near-dup
+    pair, and long docs whose shingles and tokens straddle _REDUCE_BLOCK
+    (one is larger than a whole block). Tokens come from a pure-Python
+    LCG so the batch never depends on a library's random stream."""
+    x = 20261019
+
+    def doc(n_tokens: int) -> str:
+        nonlocal x
+        out = []
+        for _ in range(n_tokens):
+            x = (x * 1103515245 + 12345) % 2**31
+            out.append(f"t{x % 2500}")
+        return " ".join(out)
+
+    base = doc(300)
+    near = base.replace(base.split()[150], "CHANGED", 1)
+    return pd.Series(
+        [None, "", " \t\n", "!!!", "日本語の文書です。重複検出のテスト。日本語の文書です。",
+         "two words", "Four tokens, exactly here!", "abc", base, near,
+         doc(9000), doc(15000), doc(12000), doc(40000), doc(7), "The QUICK brown-fox; jumps!"],
+        dtype=object,
+    )
+
+
+def _digest(col) -> str:
+    h = hashlib.sha256()
+    for v in col:
+        h.update(b"N" if v is None else b"V" + np.asarray(v, dtype=np.int64).tobytes())
+    return h.hexdigest()
+
+
+# sha256 of each kernel's batch output over _golden_batch() (None -> "N",
+# else "V" + the int64 bytes). A change that moves any value must bump
+# KERNEL_VERSION and re-record these in the same commit.
+GOLDEN = {
+    "minhash": "ba25ab893b3836597d6adb092c59610d77ae8fc11437d126d65d1c53fc020a72",
+    "minhash_char": "b04d09d734896d4e272cdead5b0eb6a91147a93294db1c61f7332ddac924eb75",
+    "simhash": "bc4b4f708e660bd723879634793205f8f264c343fd254dfa78c9d776f1193017",
+    "portable_minhash": "2d0ce201b25ad42572e136eeebe2553e27c71dcbd009194ff6bc35d65fb220f1",
+    "portable_simhash": "03103256cff6214919f2504714b3f6fd406ce7bb9187daa86efcc3a4c0c3039d",
+}
+
+
+def _sign(family: str, mode: str, kernels: tuple, texts: pd.Series) -> dict:
+    """{kernel: the batch function's output column} for one signing request."""
+    from dataclasses import replace
+
+    from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
+    from cs588_data_science_bug_duplicate_detector_spark.functions import portable
+    from cs588_data_science_bug_duplicate_detector_spark.operators import minhash, simhash
+
+    cfg = replace(DedupConfig(), shingle_mode=mode)
+    if family == "portable":
+        if kernels == ("simhash",):
+            return {"simhash": portable._portable_simhash_udf.func(texts)}
+        a, b = (np.asarray(p, dtype=np.int64) for p in portable.perms31(cfg.num_perm, cfg.seed))
+        toks = hashing.tokenize_series(texts)
+        out = pd.Series(list(portable.portable_minhash_signatures(texts, cfg.shingle_k, a, b, token_lists=toks)))
+        out[toks.str.len() == 0] = None
+        return {"minhash": out}
+    if kernels == ("minhash",):
+        return {"minhash": minhash.minhash_udf(cfg).func(texts)}
+    if kernels == ("simhash",):
+        return {"simhash": simhash._simhash_udf.func(texts)}
+    # both kernels: with_dual_signatures' batch body
+    a, b = hashing.minhash_perms(cfg.num_perm, cfg.seed)
+    toks = hashing.tokenize_series(texts)
+    no_tokens = (toks.str.len() == 0).to_numpy()
+    if mode == "char":
+        mh, mh_empty = minhash._char_minhash(texts, cfg.shingle_k, a, b)
+        sh = hashing.simhash_signatures(texts, token_lists=toks)
+    else:
+        mh, sh = hashing.dual_signatures(texts, cfg.shingle_k, a, b, token_lists=toks)
+        mh_empty = no_tokens
+    out = pd.DataFrame({"minhash": list(mh), "simhash": sh})
+    out.loc[mh_empty, "minhash"] = None
+    out["simhash"] = out["simhash"].astype("object")
+    out.loc[no_tokens, "simhash"] = None
+    return {"minhash": out["minhash"], "simhash": out["simhash"]}
+
+
+@pytest.mark.parametrize(
+    "family,mode,kernels",
+    [
+        ("fast", "token", ("minhash",)),
+        ("fast", "char", ("minhash",)),
+        ("fast", "token", ("simhash",)),
+        ("fast", "token", ("minhash", "simhash")),
+        ("fast", "char", ("minhash", "simhash")),
+        ("portable", "token", ("minhash",)),
+        ("portable", "token", ("simhash",)),
+    ],
+    ids=["minhash", "minhash_char", "simhash", "dual", "dual_char",
+         "portable_minhash", "portable_simhash"],
+)
+def test_signature_values_pinned(family, mode, kernels):
+    """Each signing request reproduces the pinned values, and asking for
+    both kernels gives each kernel's values alone (the sign stage's
+    one-pass dual request is bit-identical to two single requests)."""
+    texts = _golden_batch()
+    assert sum(len(hashing._TOKEN_RE.findall(t.lower())) for t in texts.dropna()) > 2 * hashing._REDUCE_BLOCK
+    out = _sign(family, mode, kernels, texts)
+    assert sorted(out) == sorted(kernels)
+    prefix = "portable_" if family == "portable" else ""
+    for k in kernels:
+        key = prefix + k + ("_char" if k == "minhash" and mode == "char" else "")
+        assert len(out[k]) == len(texts)
+        assert _digest(out[k]) == GOLDEN[key], key
