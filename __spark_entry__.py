@@ -31,13 +31,17 @@ from cs588_data_science_bug_duplicate_detector_spark.operators.metrics import re
 from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
     minhash_edges_from_sigs,
     release_cached_deps,
+    with_minhash,
 )
 from cs588_data_science_bug_duplicate_detector_spark.operators.lines import (
     remove_boilerplate,
     repetition_stats,
 )
 from cs588_data_science_bug_duplicate_detector_spark.operators.ngram import ngram_jaccard_pairs
-from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import simhash_edges_from_sigs
+from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import (
+    simhash_edges_from_sigs,
+    with_simhash,
+)
 from cs588_data_science_bug_duplicate_detector_spark.operators.suffix import suffix_edges
 
 CFG = DedupConfig()
@@ -46,6 +50,11 @@ CFG = DedupConfig()
 # pytest-gated on planted long-span pairs.
 SUFFIX_ORACLE_CFG = replace(CFG, anchor_hash="md5")
 K_VALUES = (1, 5, 10, 20)
+# flagship label modes: (MinHash signer, verbatim string band keys)
+_SIGNERS = {
+    "portable": (portable.with_portable_minhash, True),
+    "fast": (with_minhash, False),
+}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -86,40 +95,23 @@ def _harden(spark: SparkSession) -> None:
 # flagship: near-dup clustering (exact + minhash detectors -> CC labels)
 # ---------------------------------------------------------------------------
 
-def _dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable-hash flagship: md5-MinHash signatures (pure Catalyst) ->
-    production banding/cap/verify operators -> union exact-dup edges ->
-    iterative CC. DuckDB reproduces the whole thing (portable.minhash_clusters_sql)."""
+def _labels(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
+    """Flagship labels: MinHash signatures -> production banding/cap/verify
+    operators -> union exact-dup edges -> iterative CC. ``mode`` picks the
+    signer: "portable" (md5 signatures, verbatim string band keys — DuckDB
+    replays the whole flow, portable.minhash_clusters_sql) or "fast" (the
+    production siphash kernel, functions/hashing.py)."""
+    sign, string_keys = _SIGNERS[mode]
     docs = _spread(_t(spark, sf_dir, "documents"))
-    sigs = portable.with_portable_minhash(
-        docs.select("doc_id", "text"), "text", CFG
-    ).select("doc_id", "minhash")
-    mh, _hot = minhash_edges_from_sigs(sigs, "doc_id", CFG, string_keys=True)
+    sigs = sign(docs.select("doc_id", "text"), "text", CFG).select("doc_id", "minhash")
+    mh, _hot = minhash_edges_from_sigs(sigs, "doc_id", CFG, string_keys=string_keys)
     # no .distinct(): connected_components dedups the union once internally
-    edges = mh.unionByName(exact_ops.exact_dup_edges(docs, "doc_id", "text"))
-    labels = (
-        connected_components(edges, vertices=docs.select("doc_id"))
-        .select(F.col("id").alias("doc_id"), "cluster_id")
-        .orderBy("doc_id")
-    )
-    # CC materialized the edges eagerly (localCheckpoint) — band/pair caches
-    # are no longer needed.
-    release_cached_deps(mh)
-    return labels
-
-
-def _fast_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-kernel flagship: vectorized siphash MinHash signatures
-    (functions/hashing.py:78) through the SAME banding/cap/verify/CC flow
-    as ``_dedup_labels``."""
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import minhash_edges
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    mh, _hot = minhash_edges(docs, "doc_id", "text", CFG)
     edges = mh.unionByName(exact_ops.exact_dup_edges(docs, "doc_id", "text"))
     labels = connected_components(edges, vertices=docs.select("doc_id")).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
+    # CC materialized the edges eagerly (localCheckpoint) — band/pair caches
+    # are no longer needed.
     release_cached_deps(mh)
     return labels
 
@@ -175,8 +167,7 @@ def _cached_labels(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
     hit = _LABEL_CACHE.get(key)
     if hit is not None and not stopped:
         return hit
-    fn = _dedup_labels if mode == "portable" else _fast_labels
-    labels = fn(spark, sf_dir).localCheckpoint(eager=True)
+    labels = _labels(spark, sf_dir, mode).localCheckpoint(eager=True)
     while len(_LABEL_CACHE) >= _LABEL_CACHE_MAX:
         _release_labels(_LABEL_CACHE.pop(next(iter(_LABEL_CACHE))))
     _LABEL_CACHE[key] = labels
@@ -185,7 +176,7 @@ def _cached_labels(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _dedup_labels(spark, "/root/testdata/sf0.001")
+    return _labels(spark, "/root/testdata/sf0.001", "portable").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -712,17 +703,21 @@ def q_source_dup_stats(spark, sf_dir):
     return source_dup_stats(labels, docs).orderBy("source")
 
 
-def q_simhash_candidates(spark, sf_dir):
+def _simhash_candidates(spark, sf_dir, sign) -> DataFrame:
+    """SimHash signatures from ``sign`` -> the production chunk-join/cap/
+    verify flow -> sorted (src, dst) edges."""
     docs = _spread(_t(spark, sf_dir, "documents"))
-    sigs = portable.with_portable_simhash(
-        docs.select("doc_id", "text"), "text"
-    ).select("doc_id", "simhash")
+    sigs = sign(docs.select("doc_id", "text"), "text").select("doc_id", "simhash")
     edges = simhash_edges_from_sigs(sigs, "doc_id", CFG)
     # materialize, then drop the persisted chunk-window table — without this
     # repeated bench/correctness runs in one session accumulate cached blocks
     out = edges.localCheckpoint(eager=True)
     release_cached_deps(edges)
     return out.orderBy("src", "dst")
+
+
+def q_simhash_candidates(spark, sf_dir):
+    return _simhash_candidates(spark, sf_dir, portable.with_portable_simhash)
 
 
 def q_suffix_span_edges(spark, sf_dir):
@@ -742,18 +737,11 @@ def q_suffix_span_edges_fast(spark, sf_dir):
 
 def q_simhash_candidates_fast(spark, sf_dir):
     """Production SimHash detector (vectorized siphash token hashes,
-    functions/hashing.py:109) through the same chunk-join/cap/verify flow
+    functions/hashing.py) through the same chunk-join/cap/verify flow
     as the portable twin. Rows-only check; near-identical detection for
     both hash families is pytest-gated (tests/test_simhash.py,
     tests/test_portable.py)."""
-    from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import with_simhash
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    sigs = with_simhash(docs.select("doc_id", "text"), "text").select("doc_id", "simhash")
-    edges = simhash_edges_from_sigs(sigs, "doc_id", CFG)
-    out = edges.localCheckpoint(eager=True)
-    release_cached_deps(edges)
-    return out.orderBy("src", "dst")
+    return _simhash_candidates(spark, sf_dir, with_simhash)
 
 
 def q_streaming_batch_equiv(spark, sf_dir):
@@ -785,10 +773,7 @@ def q_streaming_batch_equiv(spark, sf_dir):
     import tempfile
 
     from cs588_data_science_bug_duplicate_detector_spark.operators.buckets import bucket_window
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
-        band_table,
-        with_minhash,
-    )
+    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import band_table
     from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
         streaming_candidate_edges,
     )
@@ -1300,8 +1285,6 @@ def q_detector_parity(spark, sf_dir):
       #7): planted full-doc copies whose base doc emits >=1 content-
       defined anchored window must reconnect under BOTH hash families.
     """
-    from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import with_simhash
-
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     out = []
 

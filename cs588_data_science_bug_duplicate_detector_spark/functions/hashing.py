@@ -1,17 +1,28 @@
-"""Deterministic vectorized hashing kernels (numpy/pandas, Arrow-batch side).
+"""Signing: the engine's one signature UDF and its vectorized kernels.
 
-These run INSIDE pandas UDFs — the engine's only Python hot path
-(SURVEY.md U3: the reference's batched ``model.encode``,
-``/root/reference/evaluate.py:71-108``, becomes batched signature
-computation). Everything is vectorized over the whole Arrow batch:
-one ``pd.util.hash_array`` call over the concatenated shingles of all
-rows, then segment reductions with ``np.minimum.reduceat`` /
-``np.add.reduceat`` — no per-row Python in the inner loop.
+Every signing path goes through ``with_signatures``: the batch pipeline
+and the fold (``incremental.sign_docs``), the stream's in-stream banding
+and its signature log, and the portable twins the DuckDB oracle replays.
+It is ONE pandas UDF. Its batch function (``sign_batch``, or
+``portable.portable_sign_batch`` for the md5 family) tokenizes and
+token-hashes once per Arrow batch, runs only the requested kernels
+(MinHash over token or char shingles, SimHash, or both), and NULLs the
+signatures of content-less docs in one place (``signature_frame``).
+This is the engine's only Python hot path: the reference's batched
+encoder call becomes batched signature computation (SURVEY.md U3).
+
+Everything is vectorized over the whole Arrow batch: one hash call over
+the concatenated tokens of all rows, then per-doc segment reductions
+(``np.minimum.reduceat`` slot minima for MinHash, a per-doc bit vote for
+SimHash) over doc-aligned, cache-sized blocks (``doc_blocks``) — no
+per-row Python in the inner loop.
 
 Determinism: pandas' siphash with a pinned 16-byte key + numpy
 ``default_rng(seed)`` permutations. Stable across processes/machines
 (no PYTHONHASHSEED dependence), which the checkpoint/resume contract
-requires.
+requires. Signature values are pinned by golden digests
+(``tests/test_hashing.py``); a change that moves them bumps
+``KERNEL_VERSION``.
 """
 
 from __future__ import annotations
@@ -20,6 +31,11 @@ import re
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+
+from ..config import DedupConfig
 
 # pd.util.hash_array requires a 16-character key.
 _HASH_KEY = "dupdetect-v1-key"
@@ -51,13 +67,14 @@ def tokenize_series(texts: pd.Series) -> pd.Series:
 # Bump when signature VALUES change (hash family / combine / constants):
 # DedupConfig.fingerprint() folds this in, so persisted signatures
 # (pipeline checkpoints, DedupIndex) from an older kernel can never be
-# mixed with newly-signed increments. v2 = token-hash rolling-combine
+# mixed with newly-signed increments; re-record the golden digests in
+# tests/test_hashing.py in the same commit. v2 = token-hash rolling-combine
 # shingles (replaced the v1 joined-string shingle hashing).
 KERNEL_VERSION = 2
 
 _MIX_M1 = np.uint64(0xBF58476D1CE4E5B9)
 _MIX_M2 = np.uint64(0x94D049BB133111EB)
-# fixed shingle hash for zero-token docs (signature is NULL-masked upstream;
+# fixed shingle hash for zero-token docs (signature_frame NULLs the signature;
 # the constant only keeps every reduceat segment non-empty)
 _EMPTY_SHINGLE = np.uint64(0x9E3779B97F4A7C15)
 
@@ -80,19 +97,23 @@ def _shingle_weights(k: int) -> np.ndarray:
     return rng.integers(1, np.iinfo(np.uint64).max, size=k, dtype=np.uint64) | np.uint64(1)
 
 
-def flat_token_hashes(token_lists: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(hashes, counts, offsets): one 64-bit hash per token, flattened over
-    the batch — the ONE string-hashing pass both signature kernels share.
-    Empty docs contribute zero tokens (counts[i] == 0)."""
+def _starts(counts: np.ndarray) -> np.ndarray:
+    """Segment start offsets for per-doc item counts (exclusive cumsum)."""
+    offsets = np.zeros(len(counts), dtype=np.int64)
+    if len(counts) > 1:
+        np.cumsum(counts[:-1], out=offsets[1:])
+    return offsets
+
+
+def flat_token_hashes(token_lists: pd.Series, hash_fn=hash64) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(hashes, counts, offsets): one 64-bit ``hash_fn`` hash per token,
+    flattened over the batch — the ONE string-hashing pass both signature
+    kernels share. Empty docs contribute zero tokens (counts[i] == 0)."""
     from itertools import chain
 
-    n = len(token_lists)
-    counts = np.fromiter((len(t) for t in token_lists), dtype=np.int64, count=n)
-    flat = list(chain.from_iterable(token_lists))
-    offsets = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(counts[:-1], out=offsets[1:])
-    return hash64(np.asarray(flat, dtype=object)), counts, offsets
+    counts = np.fromiter((len(t) for t in token_lists), dtype=np.int64, count=len(token_lists))
+    flat = np.asarray(list(chain.from_iterable(token_lists)), dtype=object)
+    return hash_fn(flat), counts, _starts(counts)
 
 
 def shingle_hashes_from_tokens(
@@ -108,7 +129,7 @@ def shingle_hashes_from_tokens(
     Same segment contract as ``_segments``: docs with >= k tokens get
     cnt-k+1 shingles; shorter non-empty docs one whole-doc shingle (the
     weight prefix — never collides with a full k-window except at 2^-64);
-    empty docs one fixed constant (masked to NULL signatures upstream).
+    empty docs one fixed constant (NULLed by ``signature_frame``).
     Distinct token sequences map to distinct hashes up to 64-bit collisions,
     exactly like the string family they replace.
     """
@@ -117,9 +138,7 @@ def shingle_hashes_from_tokens(
     k = shingle_k
     W = _shingle_weights(k)
     m = np.where(counts >= k, counts - k + 1, 1)
-    sh_offsets = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(m[:-1], out=sh_offsets[1:])
+    sh_offsets = _starts(m)
     out = np.empty(int(m.sum()), dtype=np.uint64)
     with np.errstate(over="ignore"):
         big = counts >= k
@@ -169,18 +188,15 @@ def _segments(token_lists: pd.Series, shingle_k: int) -> tuple[np.ndarray, np.nd
         else:
             shingles.append("")
             counts[i] = 1
-    offsets = np.zeros(len(counts), dtype=np.int64)
-    if len(counts) > 1:
-        np.cumsum(counts[:-1], out=offsets[1:])
-    return np.asarray(shingles, dtype=object), offsets
+    return np.asarray(shingles, dtype=object), _starts(counts)
 
 
 def char_segments(texts: pd.Series, shingle_k: int) -> tuple[np.ndarray, np.ndarray]:
     """k-CHARACTER sliding shingles (whitespace collapsed, lowercased) —
     the MinHash unit for unsegmented scripts (CJK), where token shingles
     degenerate to zero tokens. Same (flat, offsets) contract as
-    ``_segments``; blank docs contribute the empty shingle and are masked
-    to NULL signatures upstream."""
+    ``_segments``; blank docs contribute the empty shingle (NULLed by
+    ``signature_frame``)."""
     shingles: list[str] = []
     counts = np.empty(len(texts), dtype=np.int64)
     for i, t in enumerate(texts):
@@ -193,10 +209,7 @@ def char_segments(texts: pd.Series, shingle_k: int) -> tuple[np.ndarray, np.ndar
         else:
             shingles.append(t)  # whole (short or empty) doc
             counts[i] = 1
-    offsets = np.zeros(len(counts), dtype=np.int64)
-    if len(counts) > 1:
-        np.cumsum(counts[:-1], out=offsets[1:])
-    return np.asarray(shingles, dtype=object), offsets
+    return np.asarray(shingles, dtype=object), _starts(counts)
 
 
 # Shingle-block size for the permutation reduction: hc + hv at 32k shingles
@@ -212,63 +225,47 @@ def char_segments(texts: pd.Series, shingle_k: int) -> tuple[np.ndarray, np.ndar
 _REDUCE_BLOCK = 32768
 
 
-def _blocked_minhash_reduce(
-    h: np.ndarray, offsets: np.ndarray, n_docs: int, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """num_perm minimum.reduceat passes over document-aligned shingle blocks
-    (values are bit-identical to the unblocked reduction — docs are
-    independent, blocks split only BETWEEN docs)."""
-    num_perm = len(a)
-    sig = np.empty((n_docs, num_perm), dtype=np.uint64)
-    n = len(h)
+def doc_blocks(offsets: np.ndarray, total: int):
+    """Yield (start_doc, end_doc, lo, hi): runs of whole docs holding
+    >= _REDUCE_BLOCK items each (a single mega-doc is its own block), so a
+    per-doc reduction over ``items[lo:hi]`` is bit-identical to one over
+    the whole batch — blocks split only BETWEEN docs."""
+    n_docs = len(offsets)
     start_doc = 0
+    while start_doc < n_docs:
+        lo = int(offsets[start_doc])
+        end_doc = int(np.searchsorted(offsets, lo + _REDUCE_BLOCK, side="left"))
+        end_doc = max(end_doc, start_doc + 1)
+        hi = int(offsets[end_doc]) if end_doc < n_docs else total
+        yield start_doc, end_doc, lo, hi
+        start_doc = end_doc
+
+
+def minhash_reduce(h: np.ndarray, offsets: np.ndarray, a: np.ndarray, b: np.ndarray,
+                   mod: int | None = None) -> np.ndarray:
+    """(n_docs, num_perm) int64 slot minima of ``a_j * h + b_j`` per doc
+    segment, over ``doc_blocks``. uint64 ``h`` wraps mod 2^64 (the
+    multiply-shift family); ``mod`` reduces each product first (the
+    portable family's mod P31, exact in int64)."""
+    sig = np.empty((len(offsets), len(a)), dtype=h.dtype)
     with np.errstate(over="ignore"):
-        while start_doc < n_docs:
-            lo = int(offsets[start_doc])
-            # grow the block to >= _REDUCE_BLOCK shingles, whole docs only
-            # (a single mega-doc becomes its own block)
-            end_doc = int(np.searchsorted(offsets, lo + _REDUCE_BLOCK, side="left"))
-            end_doc = max(end_doc, start_doc + 1)
-            hi = int(offsets[end_doc]) if end_doc < n_docs else n
+        for start_doc, end_doc, lo, hi in doc_blocks(offsets, len(h)):
             hc = h[lo:hi]
             offs = offsets[start_doc:end_doc] - lo
-            for j in range(num_perm):
-                hv = a[j] * hc + b[j]  # wraps mod 2^64 (multiply-shift family)
+            for j in range(len(a)):
+                hv = a[j] * hc + b[j]
+                if mod is not None:
+                    hv %= mod
                 sig[start_doc:end_doc, j] = np.minimum.reduceat(hv, offs)
-            start_doc = end_doc
     return sig.view(np.int64)
 
 
-def minhash_signatures_from_segments(
-    flat: np.ndarray, offsets: np.ndarray, n_docs: int, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """Shared reduce: hash the flat shingle array once, then blocked
-    minimum.reduceat per permutation (see _blocked_minhash_reduce)."""
-    h = hash64(flat)
-    return _blocked_minhash_reduce(h, offsets, n_docs, a, b)
-
-
-def minhash_signatures(
-    texts: pd.Series, shingle_k: int, a: np.ndarray, b: np.ndarray,
-    token_lists: pd.Series | None = None,
-    token_flats: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
-) -> np.ndarray:
-    """(n_docs, num_perm) int64 MinHash signature matrix for a batch of texts.
-
-    Pass ``token_lists`` to reuse an existing tokenization, and/or
-    ``token_flats`` (from :func:`flat_token_hashes`) to also reuse the
-    token hashing — the dual-signature path shares BOTH with SimHash."""
-    if token_flats is None:
-        if token_lists is None:
-            token_lists = tokenize_series(texts)
-        if len(token_lists) == 0:
-            return np.empty((0, len(a)), dtype=np.int64)
-        token_flats = flat_token_hashes(token_lists)
-    h, counts, offsets = token_flats
-    if len(counts) == 0:
-        return np.empty((0, len(a)), dtype=np.int64)
-    sh, sh_offsets = shingle_hashes_from_tokens(h, counts, offsets, shingle_k)
-    return _blocked_minhash_reduce(sh, sh_offsets, len(counts), a, b)
+def minhash_signatures(flats: tuple[np.ndarray, np.ndarray, np.ndarray], shingle_k: int,
+                       a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(n_docs, num_perm) int64 token-shingle MinHash matrix from the
+    batch's token hashes (``flat_token_hashes``)."""
+    sh, sh_offsets = shingle_hashes_from_tokens(*flats, shingle_k)
+    return minhash_reduce(sh, sh_offsets, a, b)
 
 
 def shingle_set(text: str, shingle_k: int) -> set:
@@ -279,53 +276,32 @@ def shingle_set(text: str, shingle_k: int) -> set:
     return {" ".join(toks)} if toks else {""}
 
 
-def simhash_signatures(
-    texts: pd.Series,
-    token_lists: pd.Series | None = None,
-    token_flats: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
-) -> np.ndarray:
-    """64-bit SimHash per doc (int64 view), vectorized over the batch.
+def simhash_signatures(flats: tuple[np.ndarray, np.ndarray, np.ndarray]) -> np.ndarray:
+    """64-bit SimHash per doc (int64 view) from 64-bit token hashes
+    (hashes, counts, offsets), vectorized over the batch.
 
     Token hash bits vote +1/-1 per position; sign of the per-doc sum
     gives the signature bit. Zero-token docs get signature 0 (they are
-    NULL-masked upstream either way). ``token_flats`` (from
-    :func:`flat_token_hashes`) reuses the token hashing the MinHash
-    kernel also consumes.
+    NULL-masked by the batch function either way).
     """
-    if token_flats is None:
-        if token_lists is None:
-            token_lists = tokenize_series(texts)
-        if len(token_lists) == 0:
-            return np.empty(0, dtype=np.int64)
-        token_flats = flat_token_hashes(token_lists)
-    h, counts, offsets = token_flats
-    n = len(counts)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    # Bit matrix via FLAT unpackbits over doc-aligned blocks. Two measured
-    # facts (4.5M tokens / 20k docs): (a) axis=1 unpackbits walks the array
+    h, counts, offsets = flats
+    # Bit matrix via FLAT unpackbits over doc_blocks. Two measured facts
+    # (4.5M tokens / 20k docs): (a) axis=1 unpackbits walks the array
     # row-by-row and ran ~7-10x slower than one flat pass over the same
     # bytes (3.1s vs 0.45s); (b) materializing the whole (total, 64) bit
     # matrix costs a 64x-inflated DRAM write (page-fault bound on first
     # touch) — blocking into ~2 MB L2-resident chunks with the per-doc
     # short-row .sum loop is faster still (0.31s) AND keeps the kernel's
     # bandwidth footprint flat at high worker counts, the same argument as
-    # _blocked_minhash_reduce. Bit-identical to the unblocked version.
+    # minhash_reduce. Bit-identical to the unblocked version.
     # (The earlier shifted-uint64 variant was worse than all of these.)
     h8 = h.view(np.uint8)
-    ntok = len(h)
-    ones = np.empty((n, 64), dtype=np.int64)
-    start_doc = 0
-    while start_doc < n:
-        lo = int(offsets[start_doc])
-        end_doc = int(np.searchsorted(offsets, lo + _REDUCE_BLOCK, side="left"))
-        end_doc = max(end_doc, start_doc + 1)
-        hi = int(offsets[end_doc]) if end_doc < n else ntok
+    ones = np.empty((len(counts), 64), dtype=np.int64)
+    for start_doc, end_doc, lo, hi in doc_blocks(offsets, len(h)):
         bits = np.unpackbits(h8[lo * 8 : hi * 8], bitorder="little").reshape(-1, 64)
         for i in range(start_doc, end_doc):
             s = int(offsets[i] - lo)
             ones[i] = bits[s : s + int(counts[i])].sum(axis=0)
-        start_doc = end_doc
     # majority vote: bit set iff ones > tokens/2 (tie -> 0), ≙ sum(±1) > 0
     majority = (2 * ones) > counts[:, None]
     shifts = np.arange(64, dtype=np.uint64)
@@ -333,20 +309,67 @@ def simhash_signatures(
     return sig.view(np.int64)
 
 
-def dual_signatures(
-    texts: pd.Series, shingle_k: int, a: np.ndarray, b: np.ndarray,
-    token_lists: pd.Series | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """(minhash matrix, simhash vector) for one batch — ONE tokenization
-    AND one token-hashing pass shared by both kernels (together they are
-    the bulk of the signature phase, which dominates the whole job at
-    scale). Pass ``token_lists`` to reuse an existing tokenization."""
-    if token_lists is None:
-        token_lists = tokenize_series(texts)
-    if len(token_lists) == 0:
-        return np.empty((0, len(a)), dtype=np.int64), np.empty(0, dtype=np.int64)
-    flats = flat_token_hashes(token_lists)
+def signature_frame(cols: dict) -> pd.DataFrame:
+    """{name: (signatures, empty)} -> the batch function's output frame:
+    one object column per name, a row per doc, NULL where ``empty``.
+
+    Content-less docs (no tokens; blank text for char shingles) get a NULL
+    signature: all of them share one degenerate signature otherwise, which
+    collides in EVERY band / chunk, auto-accepts, and welds every failed
+    extraction on earth into one mega-cluster. The band and chunk tables
+    drop NULL signatures, so such docs stay singletons; the DuckDB oracle
+    SQL mirrors the rule for the portable family (``len(toks) >= 1``)."""
+    frame = {}
+    for name, (sig, empty) in cols.items():
+        out = pd.Series(list(sig) if sig.ndim == 2 else sig, dtype=object)
+        out[empty] = None
+        frame[name] = out
+    return pd.DataFrame(frame)
+
+
+def sign_batch(texts: pd.Series, cfg: DedupConfig, kernels) -> pd.DataFrame:
+    """The signing batch function: one column per kernel in ``kernels``
+    ("minhash", "simhash") for one Arrow batch of texts under ``cfg``.
+
+    One tokenization and one token-hashing pass feed every requested
+    token kernel; a kernel that is not requested is not computed, and
+    char-shingle MinHash alone (``cfg.shingle_mode == "char"``) never
+    tokenizes."""
+    char_mode = cfg.shingle_mode == "char"
+    flats = None
+    if "simhash" in kernels or not char_mode:
+        flats = flat_token_hashes(tokenize_series(texts))
+    cols = {}
+    if "minhash" in kernels:
+        a, b = minhash_perms(cfg.num_perm, cfg.seed)
+        if char_mode:
+            flat, offsets = char_segments(texts, cfg.shingle_k)
+            blank = (texts.fillna("").str.strip().str.len() == 0).to_numpy()
+            cols["minhash"] = (minhash_reduce(hash64(flat), offsets, a, b), blank)
+        else:
+            cols["minhash"] = (minhash_signatures(flats, cfg.shingle_k, a, b), flats[1] == 0)
+    if "simhash" in kernels:
+        cols["simhash"] = (simhash_signatures(flats), flats[1] == 0)
+    return signature_frame(cols)
+
+
+_SQL_TYPES = {"minhash": "array<long>", "simhash": "long"}
+
+
+def with_signatures(df: DataFrame, text_col: str, cfg: DedupConfig, kernels, batch=sign_batch) -> DataFrame:
+    """``df`` plus one signature column per kernel in ``kernels``, from ONE
+    Arrow UDF pass over ``text_col``: one JVM->Python text transfer, then
+    ``batch`` (``sign_batch``, or the portable family's twin) per Arrow
+    batch. Every signing path — batch, fold, stream, the portable twins —
+    goes through here."""
+    kernels = tuple(kernels)
+
+    def _sign(texts: pd.Series) -> pd.DataFrame:
+        return batch(texts, cfg, kernels)
+
+    udf = pandas_udf(_sign, ", ".join(f"{k} {_SQL_TYPES[k]}" for k in kernels))
     return (
-        minhash_signatures(texts, shingle_k, a, b, token_flats=flats),
-        simhash_signatures(texts, token_flats=flats),
+        df.withColumn("_sig", udf(F.col(text_col)))
+        .withColumns({k: F.col(f"_sig.{k}") for k in kernels})
+        .drop("_sig")
     )

@@ -19,9 +19,9 @@ both engines evaluate identically:
 - suffix anchors       = positions whose ANCHOR_K-gram md5 low nibble
                          ≡ 0 (mod anchor_mod)
 
-Spark side: Arrow-batched pandas UDFs (hashlib md5 + numpy segment
-reductions) for the signature kernels, pure Catalyst for the suffix
-anchors. A full-Catalyst signature variant (md5/conv + transform/
+Spark side: ``portable_sign_batch`` (hashlib md5 + the production
+block-walk reductions) behind the engine's one signature UDF,
+``hashing.with_signatures``; pure Catalyst for the suffix anchors. A full-Catalyst signature variant (md5/conv + transform/
 array_min over 128 perm literals) was tried and measured 2-3x SLOWER at
 sf0.1: Spark higher-order functions are interpreted per element, not
 whole-stage-codegen'd, so 128 lambda evaluations per shingle lose badly
@@ -52,9 +52,6 @@ import hashlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
 
 from ..config import DedupConfig
 from . import hashing
@@ -83,38 +80,19 @@ def perms31(num_perm: int, seed: int) -> tuple[list[int], list[int]]:
     return [int(x) for x in a], [int(x) for x in b]
 
 
-def _md5_ints(flat: np.ndarray, start: int, length: int) -> np.ndarray:
-    """int64 value of md5-hex[start:start+length] per string — the portable
-    hash both engines evaluate (DuckDB: CAST('0x'||substr(md5(s),..) AS BIGINT)).
+def _md5_h64(flat: np.ndarray) -> np.ndarray:
+    """uint64 of the first 8 md5-digest bytes (big-endian) per string —
+    exactly (hex[0:8] << 32) | hex[8:16], the portable 64-bit token hash;
+    its top 32 bits are hex[0:8], the portable shingle hash before mod P31
+    (DuckDB: CAST('0x'||substr(md5(s),..) AS BIGINT)).
 
     Round-6 kernel notes (values unchanged, pytest/oracle-gated):
-    - hex[start:start+length] for even start/length is a byte-aligned slice
-      of the raw digest — int.from_bytes over digest() skips the hexdigest
-      string build and the int(hex, 16) parse (~2x per hash);
+    - the hex slices are byte-aligned slices of the raw digest —
+      int.from_bytes over digest() skips the hexdigest string build and
+      the int(hex, 16) parse (~2x per hash);
     - repeated strings (natural-text tokens repeat heavily; duplicate docs
       repeat whole shingle runs) are hashed ONCE via factorize + gather.
     """
-    assert start % 2 == 0 and length % 2 == 0, "hex slice must be byte-aligned"
-    if len(flat) == 0:
-        return np.empty(0, dtype=np.int64)
-    codes, uniq = pd.factorize(pd.Series(flat, dtype=object), use_na_sentinel=False)
-    a, b = start // 2, (start + length) // 2
-    md5 = hashlib.md5
-    vals = np.fromiter(
-        (
-            int.from_bytes(md5(s.encode("utf-8")).digest()[a:b], "big")
-            for s in uniq
-        ),
-        dtype=np.int64,
-        count=len(uniq),
-    )
-    return vals[codes]
-
-
-def _md5_h64(flat: np.ndarray) -> np.ndarray:
-    """uint64 of the first 8 md5-digest bytes (big-endian) per string —
-    exactly (hex[0:8] << 32) | hex[8:16], the portable 64-bit token hash —
-    in ONE digest pass per distinct string (factorize + gather)."""
     if len(flat) == 0:
         return np.empty(0, dtype=np.uint64)
     codes, uniq = pd.factorize(pd.Series(flat, dtype=object), use_na_sentinel=False)
@@ -127,45 +105,32 @@ def _md5_h64(flat: np.ndarray) -> np.ndarray:
     return vals[codes]
 
 
-def portable_minhash_signatures(
-    texts: pd.Series, shingle_k: int, a: np.ndarray, b: np.ndarray,
-    token_lists: pd.Series | None = None,
-) -> np.ndarray:
-    """(n_docs, num_perm) int64 portable-MinHash matrix: md5-derived 31-bit
-    shingle hashes + (a*h+b) mod P31 slot mins (products < 2^62: identical
-    int64 arithmetic in numpy, Spark SQL and DuckDB — no wraparound).
+def portable_sign_batch(texts: pd.Series, cfg: DedupConfig, kernels) -> pd.DataFrame:
+    """The portable family's batch function, same contract as
+    ``hashing.sign_batch`` (one tokenization, requested kernels only, the
+    same content-less rule) over md5-derived hashes both engines evaluate:
 
-    Same shingle segmentation as the production kernel
-    (hashing._segments): short docs -> one whole-doc shingle, empty -> ''.
+    - MinHash: 31-bit shingle hashes (hex[0:8] mod P31) + (a*h+b) mod P31
+      slot mins (products < 2^62: identical int64 arithmetic in numpy,
+      Spark SQL and DuckDB — no wraparound), over the production shingle
+      segmentation (``hashing._segments``: short docs -> one whole-doc
+      shingle);
+    - SimHash: per-bit majority over 64-bit token hashes (hi = hex[0:8],
+      lo = hex[8:16]; bit j = (lo>>j)&1 for j<32 else (hi>>(j-32))&1 —
+      exactly the DuckDB oracle's CASE arithmetic), through the production
+      vote ``hashing.simhash_signatures``.
     """
-    if token_lists is None:
-        token_lists = hashing.tokenize_series(texts)
-    if len(token_lists) == 0:
-        return np.empty((0, len(a)), dtype=np.int64)
-    flat, offsets = hashing._segments(token_lists, shingle_k)
-    h = _md5_ints(flat, 0, 8) % P31
-    n_docs = len(token_lists)
-    num_perm = len(a)
-    out = np.empty((n_docs, num_perm), dtype=np.int64)
-    # blocked permutation reduce (same shape as hashing._blocked_minhash_reduce,
-    # same rationale: the unblocked loop re-streams the full shingle-hash
-    # array from DRAM once per permutation; blocking keeps the per-block
-    # slice L2-resident across all 128 passes. Values are bit-identical —
-    # blocks split only BETWEEN docs.
-    n = len(h)
-    start_doc = 0
-    while start_doc < n_docs:
-        lo = int(offsets[start_doc])
-        end_doc = int(np.searchsorted(offsets, lo + hashing._REDUCE_BLOCK, side="left"))
-        end_doc = max(end_doc, start_doc + 1)
-        hi = int(offsets[end_doc]) if end_doc < n_docs else n
-        hc = h[lo:hi]
-        offs = offsets[start_doc:end_doc] - lo
-        for j in range(num_perm):
-            v = (a[j] * hc + b[j]) % P31
-            out[start_doc:end_doc, j] = np.minimum.reduceat(v, offs)
-        start_doc = end_doc
-    return out
+    toks = hashing.tokenize_series(texts)
+    empty = (toks.str.len() == 0).to_numpy()
+    cols = {}
+    if "minhash" in kernels:
+        a, b = (np.asarray(p, dtype=np.int64) for p in perms31(cfg.num_perm, cfg.seed))
+        flat, offsets = hashing._segments(toks, cfg.shingle_k)
+        h = (_md5_h64(flat) >> np.uint64(32)).astype(np.int64) % P31
+        cols["minhash"] = (hashing.minhash_reduce(h, offsets, a, b, mod=P31), empty)
+    if "simhash" in kernels:
+        cols["simhash"] = (hashing.simhash_signatures(hashing.flat_token_hashes(toks, _md5_h64)), empty)
+    return hashing.signature_frame(cols)
 
 
 def with_portable_minhash(df: DataFrame, text_col: str, cfg: DedupConfig) -> DataFrame:
@@ -176,69 +141,13 @@ def with_portable_minhash(df: DataFrame, text_col: str, cfg: DedupConfig) -> Dat
     bit-identical to an eager Python recomputation (tests/test_portable.py)
     and to the DuckDB oracle SQL.
     """
-    a_l, b_l = perms31(cfg.num_perm, cfg.seed)
-    a = np.asarray(a_l, dtype=np.int64)
-    b = np.asarray(b_l, dtype=np.int64)
-    k = cfg.shingle_k
-
-    def _f(texts: pd.Series) -> pd.Series:
-        toks = hashing.tokenize_series(texts)  # ONE tokenization per batch
-        out = pd.Series(list(portable_minhash_signatures(texts, k, a, b, token_lists=toks)))
-        # zero-token docs: NULL signature (same exclusion as the production
-        # kernel — content-less docs are never candidates); the oracle SQL
-        # mirrors this with WHERE len(toks) >= 1
-        out[toks.str.len() == 0] = None
-        return out
-
-    return df.withColumn("minhash", pandas_udf(_f, ArrayType(LongType()))(F.col(text_col)))
-
-
-def portable_simhash_signatures(texts: pd.Series) -> np.ndarray:
-    """int64 portable SimHash per doc: per-bit majority over md5-derived
-    64-bit token hashes (hi = hex[0:8], lo = hex[8:16]; bit j = (lo>>j)&1
-    for j<32 else (hi>>(j-32))&1 — exactly the DuckDB oracle's CASE
-    arithmetic). Token segmentation mirrors the production kernel
-    (empty docs -> ['']), and the unpackbits/majority machinery is the
-    same shape as hashing.simhash_signatures."""
-    token_lists = hashing.tokenize_series(texts)
-    n = len(token_lists)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    flat: list[str] = []
-    counts = np.empty(n, dtype=np.int64)
-    for i, toks in enumerate(token_lists):
-        if toks:
-            flat.extend(toks)
-            counts[i] = len(toks)
-        else:
-            flat.append("")
-            counts[i] = 1
-    offsets = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(counts[:-1], out=offsets[1:])
-    arr = np.asarray(flat, dtype=object)
-    # ONE md5 digest pass per distinct token (hex[0:8] = digest[0:4],
-    # hex[8:16] = digest[4:8], so h64 = first 8 digest bytes big-endian);
-    # then the production kernel's blocked unpackbits/majority machinery,
-    # which is bit-identical to the per-doc .sum loop it replaces (the
-    # segment contract matches: every doc here contributes counts >= 1).
-    h64 = _md5_h64(arr)
-    return hashing.simhash_signatures(texts, token_flats=(h64, counts, offsets))
-
-
-@pandas_udf(LongType())
-def _portable_simhash_udf(texts: pd.Series) -> pd.Series:
-    out = pd.Series(portable_simhash_signatures(texts)).astype("object")
-    # zero-token docs: NULL signature (mirrored by WHERE len(toks) > 0 in
-    # the oracle SQL) — content-less docs are never candidates
-    out[(hashing.tokenize_series(texts).str.len() == 0).to_numpy()] = None
-    return out
+    return hashing.with_signatures(df, text_col, cfg, ("minhash",), portable_sign_batch)
 
 
 def with_portable_simhash(df: DataFrame, text_col: str) -> DataFrame:
     """Portable 64-bit SimHash (long): one Arrow-batched kernel pass,
     bit-identical to the eager Python oracle and the DuckDB SQL."""
-    return df.withColumn("simhash", _portable_simhash_udf(F.col(text_col)))
+    return hashing.with_signatures(df, text_col, DedupConfig(), ("simhash",), portable_sign_batch)
 
 
 # ---------------------------------------------------------------------------

@@ -92,16 +92,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
+from ..functions.hashing import with_signatures
 from .cc import connected_components
 from .exact import exact_edges, text_md5_col
-from .minhash import (
-    _attach_deps,
-    lsh_edges,
-    release_cached_deps,
-    with_dual_signatures,
-    with_minhash,
-)
-from .simhash import hamming_edges, with_simhash
+from .minhash import _attach_deps, lsh_edges, release_cached_deps
+from .simhash import hamming_edges
 
 # the signature column each signature-based detector reads, in the
 # pipeline's detector order
@@ -114,18 +109,15 @@ def sign_docs(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,
     what the pipeline's ``signatures`` checkpoint and the index's ``sigs``
     store per doc.
 
-    MinHash and SimHash together come from ONE Arrow pass
-    (``with_dual_signatures``: one JVM->Python text transfer, one shared
+    The requested hash signatures come from ONE Arrow pass
+    (``hashing.with_signatures``: one JVM->Python text transfer, one shared
     tokenization; char-shingle MinHash under ``shingle_mode="char"``).
     ``text_md5`` (``exact.text_md5_col``) is NULL for content-less docs.
     """
     df = docs.select(id_col, text_col)
-    if {"minhash", "simhash"} <= set(detectors):
-        df = with_dual_signatures(df, text_col, cfg)
-    elif "minhash" in detectors:
-        df = with_minhash(df, text_col, cfg)
-    elif "simhash" in detectors:
-        df = with_simhash(df, text_col)
+    kernels = [k for k in ("minhash", "simhash") if k in detectors]
+    if kernels:
+        df = with_signatures(df, text_col, cfg, kernels)
     if "exact" in detectors:
         df = df.withColumn("text_md5", text_md5_col(text_col))
     return df.drop(text_col)

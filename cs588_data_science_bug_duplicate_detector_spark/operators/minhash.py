@@ -21,91 +21,24 @@ Scale notes:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
 
 from ..config import DedupConfig
 from ..functions import hashing
 from .buckets import bucket_window, pair_buckets, self_pairs
 
 
-def _char_minhash(texts: pd.Series, shingle_k: int, a, b):
-    """k-char sliding-shingle MinHash (CJK/unsegmented scripts) ->
-    (signatures, mask of blank docs)."""
-    flat, offsets = hashing.char_segments(texts, shingle_k)
-    sig = hashing.minhash_signatures_from_segments(flat, offsets, len(texts), a, b)
-    return sig, (texts.fillna("").str.strip().str.len() == 0).to_numpy()
-
-
-def minhash_udf(cfg: DedupConfig):
-    shingle_k, num_perm, seed = cfg.shingle_k, cfg.num_perm, cfg.seed
-    char_mode = cfg.shingle_mode == "char"
-
-    def _minhash_batch(texts: pd.Series) -> pd.Series:
-        a, b = hashing.minhash_perms(num_perm, seed)
-        if char_mode:
-            sig, empty = _char_minhash(texts, shingle_k, a, b)
-        else:
-            toks = hashing.tokenize_series(texts)
-            sig = hashing.minhash_signatures(texts, shingle_k, a, b, token_lists=toks)
-            empty = (toks.str.len() == 0).to_numpy()
-        out = pd.Series(list(sig))
-        # content-less docs (null/blank text -> zero tokens) get a NULL
-        # signature: all of them share one degenerate signature otherwise,
-        # which collides in EVERY band, auto-accepts, and welds every
-        # failed extraction on earth into one mega-cluster. band_table
-        # drops NULL sigs; such docs stay singletons.
-        out[empty] = None
-        return out
-
-    return pandas_udf(_minhash_batch, ArrayType(LongType()))
-
-
 def with_minhash(df: DataFrame, text_col: str, cfg: DedupConfig) -> DataFrame:
-    return df.withColumn("minhash", minhash_udf(cfg)(F.col(text_col)))
+    return hashing.with_signatures(df, text_col, cfg, ("minhash",))
 
 
 def with_dual_signatures(df: DataFrame, text_col: str, cfg: DedupConfig) -> DataFrame:
-    """Add BOTH ``minhash`` and ``simhash`` columns in ONE Arrow pass.
-
-    One UDF = one JVM->Python text transfer and one tokenization shared by
-    both kernels — the signature phase is the throughput driver at 10^12
-    docs, and two separate UDFs paid the text shuffle + tokenize twice.
-
-    ``shingle_mode="char"``: MinHash over k-char shingles, SimHash over
-    tokens — bit-identical to ``with_minhash`` + ``with_simhash``, so the
-    batch pipeline and the incremental index sign alike in both modes.
-    """
-    shingle_k, num_perm, seed = cfg.shingle_k, cfg.num_perm, cfg.seed
-    char_mode = cfg.shingle_mode == "char"
-
-    def _dual_batch(texts: pd.Series) -> pd.DataFrame:
-        a, b = hashing.minhash_perms(num_perm, seed)
-        toks = hashing.tokenize_series(texts)
-        no_tokens = (toks.str.len() == 0).to_numpy()
-        if char_mode:
-            mh, mh_empty = _char_minhash(texts, shingle_k, a, b)
-            sh = hashing.simhash_signatures(texts, token_lists=toks)
-        else:
-            mh, sh = hashing.dual_signatures(texts, shingle_k, a, b, token_lists=toks)
-            mh_empty = no_tokens
-        out = pd.DataFrame({"minhash": list(mh), "simhash": sh})
-        # content-less docs: NULL signatures (see minhash_udf)
-        out.loc[mh_empty, "minhash"] = None
-        out["simhash"] = out["simhash"].astype("object")
-        out.loc[no_tokens, "simhash"] = None
-        return out
-
-    udf = pandas_udf(_dual_batch, "minhash array<long>, simhash long")
-    return (
-        df.withColumn("_sig", udf(F.col(text_col)))
-        .withColumn("minhash", F.col("_sig.minhash"))
-        .withColumn("simhash", F.col("_sig.simhash"))
-        .drop("_sig")
-    )
+    """Add BOTH ``minhash`` and ``simhash`` columns in ONE Arrow pass: one
+    JVM->Python text transfer and one tokenization shared by both kernels
+    (``shingle_mode="char"``: MinHash over k-char shingles, SimHash over
+    tokens), bit-identical to ``with_minhash`` + ``with_simhash``."""
+    return hashing.with_signatures(df, text_col, cfg, ("minhash", "simhash"))
 
 
 def band_table(sigs: DataFrame, id_col: str, cfg: DedupConfig,

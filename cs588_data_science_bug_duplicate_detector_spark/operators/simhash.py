@@ -10,11 +10,8 @@ Verification is a JVM-side popcount on XOR — no Python.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 
 from ..config import DedupConfig
 from ..functions import hashing
@@ -22,19 +19,8 @@ from .buckets import pair_buckets
 from .minhash import _attach_deps
 
 
-@pandas_udf(LongType())
-def _simhash_udf(texts: pd.Series) -> pd.Series:
-    toks = hashing.tokenize_series(texts)
-    out = pd.Series(hashing.simhash_signatures(texts, token_lists=toks)).astype("object")
-    # zero-token docs: NULL signature (all of them hash to the same
-    # degenerate value otherwise and the chunk join welds them together);
-    # chunk_table drops NULLs, so content-less docs stay singletons
-    out[(toks.str.len() == 0).to_numpy()] = None
-    return out
-
-
 def with_simhash(df: DataFrame, text_col: str) -> DataFrame:
-    return df.withColumn("simhash", _simhash_udf(F.col(text_col)))
+    return hashing.with_signatures(df, text_col, DedupConfig(), ("simhash",))
 
 
 def chunk_table(sigs: DataFrame, id_col: str, cfg: DedupConfig) -> DataFrame:

@@ -12,6 +12,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "dupdetect",
@@ -58,6 +60,9 @@ def get_spark(
         # propagation only infers extra IsNotNull/filter predicates, which
         # this workload doesn't depend on — disable it.
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # the Python UDF workers import this package too: put its root on
+        # their path, so a driver started from any directory can sign
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

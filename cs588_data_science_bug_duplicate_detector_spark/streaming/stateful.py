@@ -43,7 +43,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..config import DedupConfig
-from ..operators.minhash import band_table, minhash_udf
+from ..operators.minhash import band_table, with_minhash
 
 EDGE_SCHEMA = StructType(
     [StructField("src", LongType()), StructField("dst", LongType())]
@@ -149,9 +149,9 @@ def streaming_candidate_edges(
     cfg = cfg or DedupConfig()
     if ts_col is not None and state_ttl_ms is None:
         raise ValueError("event-time TTL (ts_col given) requires state_ttl_ms")
-    sigs = pages.select(
-        id_col, text_col, *([ts_col] if ts_col else [])
-    ).withColumn("minhash", minhash_udf(cfg)(pages[text_col]))
+    sigs = with_minhash(
+        pages.select(id_col, text_col, *([ts_col] if ts_col else [])), text_col, cfg
+    )
     if ts_col is not None:
         ttl_mode = "event"
         sigs = sigs.withWatermark(ts_col, watermark_delay)
@@ -198,7 +198,6 @@ def signature_log_sink(
     rewrites exactly the batch=N partition. Signatures use the SAME
     vectorized kernel as batch and in-stream banding, so a doc's logged
     signature is bit-identical to what the candidate stream banded."""
-    from ..operators.minhash import with_minhash
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         # one row per doc per batch: a source redelivery inside one

@@ -430,16 +430,17 @@ def _kernel_worker(kind: str, docs: int, core: int) -> None:
     import numpy as np
     import pandas as pd
 
+    from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
     from cs588_data_science_bug_duplicate_detector_spark.functions import hashing
 
     rng = np.random.default_rng(7 + core)
     if kind == "kernel":
         texts = pd.Series([" ".join(f"w{x}" for x in rng.integers(0, 5000, size=180)) for _ in range(docs)])
-        a, b = hashing.minhash_perms(128, 42)
+        cfg = DedupConfig()  # shingle_k 5, num_perm 128, seed 42
         n_batches = max(1, docs // 10_000)
         per = docs // n_batches
         for i in range(n_batches):
-            hashing.dual_signatures(texts.iloc[i * per: (i + 1) * per], 5, a, b)
+            hashing.sign_batch(texts.iloc[i * per: (i + 1) * per], cfg, ("minhash", "simhash"))
     else:  # alu: xxhash-style integer mixing
         x = rng.integers(0, 2**62, size=2_000_000, dtype=np.int64).astype(np.uint64)
         with np.errstate(over="ignore"):

@@ -18,9 +18,10 @@ from __future__ import annotations
 
 import argparse
 import ast
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
 from cs588_data_science_bug_duplicate_detector_spark.operators.inspect import (

@@ -21,6 +21,10 @@ def _texts():
     )
 
 
+def _flats(texts: pd.Series):
+    return hashing.flat_token_hashes(hashing.tokenize_series(texts))
+
+
 def test_hash64_deterministic():
     a = hashing.hash64(np.array(["abc", "def"], dtype=object))
     b = hashing.hash64(np.array(["abc", "def"], dtype=object))
@@ -54,7 +58,7 @@ def test_minhash_matches_per_doc_oracle():
     window-validity/scatter machinery against a trivial reference)."""
     a, b = hashing.minhash_perms(32, 42)
     texts = _texts()
-    sig = hashing.minhash_signatures(texts, 3, a, b)
+    sig = hashing.minhash_signatures(_flats(texts), 3, a, b)
     assert sig.shape == (len(texts), 32)
     for i, t in enumerate(texts):
         h = np.unique(_doc_shingle_hashes(t, 3))  # set semantics like shingle_set
@@ -80,7 +84,7 @@ def test_minhash_distinct_shingle_sequences_differ():
 def test_minhash_estimates_jaccard():
     a, b = hashing.minhash_perms(256, 42)
     texts = _texts()
-    sig = hashing.minhash_signatures(texts, 3, a, b)
+    sig = hashing.minhash_signatures(_flats(texts), 3, a, b)
     s0, s1 = hashing.shingle_set(texts[0], 3), hashing.shingle_set(texts[1], 3)
     true_j = len(s0 & s1) / len(s0 | s1)
     est_j = (sig[0] == sig[1]).mean()
@@ -91,7 +95,7 @@ def test_minhash_estimates_jaccard():
 
 def test_minhash_exact_dup_identical_signature():
     a, b = hashing.minhash_perms(64, 42)
-    sig = hashing.minhash_signatures(pd.Series(["same text here okay", "same text here okay"]), 3, a, b)
+    sig = hashing.minhash_signatures(_flats(pd.Series(["same text here okay", "same text here okay"])), 3, a, b)
     assert np.array_equal(sig[0], sig[1])
 
 
@@ -103,7 +107,7 @@ def test_simhash_near_identical_low_hamming():
             " ".join(f"other{i}" for i in range(200)),
         ]
     )
-    sig = hashing.simhash_signatures(texts)
+    sig = hashing.simhash_signatures(_flats(texts))
     mask = (1 << 64) - 1  # signed int64 signatures: popcount the 64-bit pattern
     near = bin((int(sig[0]) ^ int(sig[1])) & mask).count("1")
     far = bin((int(sig[0]) ^ int(sig[2])) & mask).count("1")
@@ -113,17 +117,17 @@ def test_simhash_near_identical_low_hamming():
 
 def test_simhash_batch_matches_single():
     texts = _texts()
-    batch = hashing.simhash_signatures(texts)
+    batch = hashing.simhash_signatures(_flats(texts))
     for i, t in enumerate(texts):
-        single = hashing.simhash_signatures(pd.Series([t]))
+        single = hashing.simhash_signatures(_flats(pd.Series([t])))
         assert single[0] == batch[i]
 
 
 def test_empty_and_edge_inputs():
     a, b = hashing.minhash_perms(16, 42)
-    assert hashing.minhash_signatures(pd.Series([], dtype=object), 5, a, b).shape == (0, 16)
-    assert hashing.simhash_signatures(pd.Series([], dtype=object)).shape == (0,)
-    sig = hashing.minhash_signatures(pd.Series([None, ""]), 5, a, b)
+    assert hashing.minhash_signatures(_flats(pd.Series([], dtype=object)), 5, a, b).shape == (0, 16)
+    assert hashing.simhash_signatures(_flats(pd.Series([], dtype=object))).shape == (0,)
+    sig = hashing.minhash_signatures(_flats(pd.Series([None, ""])), 5, a, b)
     assert np.array_equal(sig[0], sig[1])  # null == empty text
 
 
@@ -145,7 +149,7 @@ def test_blocked_minhash_reduce_matches_unblocked():
     offsets = np.zeros(len(sizes), dtype=np.int64)
     np.cumsum(np.asarray(sizes[:-1]), out=offsets[1:])
 
-    got = hashing._blocked_minhash_reduce(h, offsets, len(sizes), a, b)
+    got = hashing.minhash_reduce(h, offsets, a, b)
     want = np.empty((len(sizes), len(a)), dtype=np.uint64)
     with np.errstate(over="ignore"):
         for j in range(len(a)):
@@ -217,36 +221,10 @@ def _sign(family: str, mode: str, kernels: tuple, texts: pd.Series) -> dict:
 
     from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
     from cs588_data_science_bug_duplicate_detector_spark.functions import portable
-    from cs588_data_science_bug_duplicate_detector_spark.operators import minhash, simhash
 
-    cfg = replace(DedupConfig(), shingle_mode=mode)
-    if family == "portable":
-        if kernels == ("simhash",):
-            return {"simhash": portable._portable_simhash_udf.func(texts)}
-        a, b = (np.asarray(p, dtype=np.int64) for p in portable.perms31(cfg.num_perm, cfg.seed))
-        toks = hashing.tokenize_series(texts)
-        out = pd.Series(list(portable.portable_minhash_signatures(texts, cfg.shingle_k, a, b, token_lists=toks)))
-        out[toks.str.len() == 0] = None
-        return {"minhash": out}
-    if kernels == ("minhash",):
-        return {"minhash": minhash.minhash_udf(cfg).func(texts)}
-    if kernels == ("simhash",):
-        return {"simhash": simhash._simhash_udf.func(texts)}
-    # both kernels: with_dual_signatures' batch body
-    a, b = hashing.minhash_perms(cfg.num_perm, cfg.seed)
-    toks = hashing.tokenize_series(texts)
-    no_tokens = (toks.str.len() == 0).to_numpy()
-    if mode == "char":
-        mh, mh_empty = minhash._char_minhash(texts, cfg.shingle_k, a, b)
-        sh = hashing.simhash_signatures(texts, token_lists=toks)
-    else:
-        mh, sh = hashing.dual_signatures(texts, cfg.shingle_k, a, b, token_lists=toks)
-        mh_empty = no_tokens
-    out = pd.DataFrame({"minhash": list(mh), "simhash": sh})
-    out.loc[mh_empty, "minhash"] = None
-    out["simhash"] = out["simhash"].astype("object")
-    out.loc[no_tokens, "simhash"] = None
-    return {"minhash": out["minhash"], "simhash": out["simhash"]}
+    batch = portable.portable_sign_batch if family == "portable" else hashing.sign_batch
+    out = batch(texts, replace(DedupConfig(), shingle_mode=mode), kernels)
+    return {k: out[k] for k in out.columns}
 
 
 @pytest.mark.parametrize(
@@ -276,3 +254,31 @@ def test_signature_values_pinned(family, mode, kernels):
         key = prefix + k + ("_char" if k == "minhash" and mode == "char" else "")
         assert len(out[k]) == len(texts)
         assert _digest(out[k]) == GOLDEN[key], key
+
+
+def test_sign_batch_computes_only_the_requested_kernels(monkeypatch):
+    """The sign stage pays only for what it asks: char-shingle MinHash alone
+    never tokenizes, and a kernel nobody requested never runs. An empty
+    batch yields an empty frame with the requested columns."""
+    from dataclasses import replace
+
+    from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
+
+    def _boom(*_a, **_k):
+        raise AssertionError("computed a kernel that was not requested")
+
+    texts = pd.Series(["alpha beta gamma delta epsilon zeta", None, "!!!"], dtype=object)
+    cfg = DedupConfig()
+    with monkeypatch.context() as m:
+        m.setattr(hashing, "tokenize_series", _boom)
+        m.setattr(hashing, "simhash_signatures", _boom)
+        out = hashing.sign_batch(texts, replace(cfg, shingle_mode="char"), ("minhash",))
+    assert list(out.columns) == ["minhash"] and out["minhash"][2] is not None
+    with monkeypatch.context() as m:
+        m.setattr(hashing, "minhash_reduce", _boom)
+        assert list(hashing.sign_batch(texts, cfg, ("simhash",)).columns) == ["simhash"]
+    with monkeypatch.context() as m:
+        m.setattr(hashing, "simhash_signatures", _boom)
+        assert list(hashing.sign_batch(texts, cfg, ("minhash",)).columns) == ["minhash"]
+    empty = hashing.sign_batch(pd.Series([], dtype=object), cfg, ("minhash", "simhash"))
+    assert list(empty.columns) == ["minhash", "simhash"] and len(empty) == 0

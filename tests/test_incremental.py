@@ -339,3 +339,33 @@ def test_exact_rule_matches_md5_oracle(spark):
         assert len(out) == len(set(out))
         folded += out
     assert union_find_oracle(folded, ids) == oracle
+
+
+def test_incremental_update_script_runs_outside_the_repo(tmp_path):
+    """``scripts/incremental_update.py`` started from another directory,
+    without PYTHONPATH: the session puts the package root on the Python
+    UDF workers' path, so signing the increment does not fail with
+    ModuleNotFoundError in the workers."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import pandas as pd
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    inp = tmp_path / "inc"
+    inp.mkdir()
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    pd.DataFrame({"doc_id": [1, 2, 3], "text": [text, text + " today", "unrelated words only"]}) \
+        .to_parquet(inp / "part-0.parquet")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "scripts", "incremental_update.py"),
+         "--index", str(tmp_path / "idx"), "--input", str(inp), "--cores", "1"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert summary["total_docs"] == 3 and summary["n_clusters"] == 2

@@ -42,4 +42,5 @@ def test_simhash_column_matches_kernel(spark):
     got = {r["doc_id"]: r["simhash"] for r in df.collect()}
     texts = {r["doc_id"]: r["text"] for r in _docs(spark).collect()}
     for doc_id, text in texts.items():
-        assert got[doc_id] == int(hashing.simhash_signatures(pd.Series([text]))[0])
+        flats = hashing.flat_token_hashes(hashing.tokenize_series(pd.Series([text])))
+        assert got[doc_id] == int(hashing.simhash_signatures(flats)[0])

@@ -381,6 +381,9 @@ class _FakeState:
     def getCurrentWatermarkMs(self):
         return 0
 
+    def setTimeoutDuration(self, ms):
+        self.timeout_ms = ms
+
 
 def test_bucket_update_no_duplicate_edge_when_old_root_rearrives():
     """Batch {5, 10} hitting a bucket whose stored root is 10: the root
@@ -404,6 +407,29 @@ def test_bucket_update_no_duplicate_edge_when_old_root_rearrives():
     state2 = _FakeState(stored=(20, 0))
     out2 = pd.concat(list(update(("k",), [pd.DataFrame({"id": [5, 30]})], state2)))
     assert sorted(zip(out2["src"], out2["dst"])) == [(5, 20), (5, 30)]
+
+
+def test_bucket_update_processing_time_ttl():
+    """The default streaming mode (``state_ttl_ms`` set, no ``ts_col``):
+    every update re-arms the wall-clock timer to the TTL, and a timed-out
+    bucket drops its state and emits an empty (src, dst) frame."""
+    import pandas as pd
+
+    from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
+        _make_bucket_update,
+    )
+
+    update = _make_bucket_update(3_600_000, "processing")
+    state = _FakeState()
+    out = pd.concat(list(update(("k",), [pd.DataFrame({"id": [7, 3]})], state)))
+    assert list(zip(out["src"], out["dst"])) == [(3, 7)]
+    assert state.get == (3, 0) and state.timeout_ms == 3_600_000
+
+    state.hasTimedOut = True
+    frames = list(update(("k",), iter([]), state))
+    assert not state.exists
+    assert len(frames) == 1 and frames[0].empty
+    assert list(frames[0].columns) == ["src", "dst"]
 
 
 def test_verified_edges_sink_path_sigs_and_unverifiable_passthrough(spark, tmp_path):
