@@ -95,7 +95,7 @@ def _harden(spark: SparkSession) -> None:
 # flagship: near-dup clustering (exact + minhash detectors -> CC labels)
 # ---------------------------------------------------------------------------
 
-def _labels(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
+def _dedup_labels(spark: SparkSession, sf_dir: str, mode: str = "portable") -> DataFrame:
     """Flagship labels: MinHash signatures -> production banding/cap/verify
     operators -> union exact-dup edges -> iterative CC. ``mode`` picks the
     signer: "portable" (md5 signatures, verbatim string band keys — DuckDB
@@ -167,7 +167,7 @@ def _cached_labels(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
     hit = _LABEL_CACHE.get(key)
     if hit is not None and not stopped:
         return hit
-    labels = _labels(spark, sf_dir, mode).localCheckpoint(eager=True)
+    labels = _dedup_labels(spark, sf_dir, mode).localCheckpoint(eager=True)
     while len(_LABEL_CACHE) >= _LABEL_CACHE_MAX:
         _release_labels(_LABEL_CACHE.pop(next(iter(_LABEL_CACHE))))
     _LABEL_CACHE[key] = labels
@@ -176,7 +176,7 @@ def _cached_labels(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _labels(spark, "/root/testdata/sf0.001", "portable").orderBy("doc_id")
+    return _dedup_labels(spark, "/root/testdata/sf0.001")
 
 
 # ---------------------------------------------------------------------------

@@ -105,7 +105,8 @@ def _starts(counts: np.ndarray) -> np.ndarray:
     return offsets
 
 
-def flat_token_hashes(token_lists: pd.Series, hash_fn=hash64) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def flat_token_hashes(token_lists: pd.Series,
+                      hash_fn=hash64) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(hashes, counts, offsets): one 64-bit ``hash_fn`` hash per token,
     flattened over the batch — the ONE string-hashing pass both signature
     kernels share. Empty docs contribute zero tokens (counts[i] == 0)."""
@@ -356,7 +357,8 @@ def sign_batch(texts: pd.Series, cfg: DedupConfig, kernels) -> pd.DataFrame:
 _SQL_TYPES = {"minhash": "array<long>", "simhash": "long"}
 
 
-def with_signatures(df: DataFrame, text_col: str, cfg: DedupConfig, kernels, batch=sign_batch) -> DataFrame:
+def with_signatures(df: DataFrame, text_col: str, cfg: DedupConfig, kernels,
+                    batch=sign_batch) -> DataFrame:
     """``df`` plus one signature column per kernel in ``kernels``, from ONE
     Arrow UDF pass over ``text_col``: one JVM->Python text transfer, then
     ``batch`` (``sign_batch``, or the portable family's twin) per Arrow

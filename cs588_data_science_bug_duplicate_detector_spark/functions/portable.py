@@ -21,9 +21,10 @@ both engines evaluate identically:
 
 Spark side: ``portable_sign_batch`` (hashlib md5 + the production
 block-walk reductions) behind the engine's one signature UDF,
-``hashing.with_signatures``; pure Catalyst for the suffix anchors. A full-Catalyst signature variant (md5/conv + transform/
-array_min over 128 perm literals) was tried and measured 2-3x SLOWER at
-sf0.1: Spark higher-order functions are interpreted per element, not
+``hashing.with_signatures``; pure Catalyst for the suffix anchors. A
+full-Catalyst signature variant (md5/conv + transform/array_min over 128
+perm literals) was tried and measured 2-3x SLOWER at sf0.1: Spark
+higher-order functions are interpreted per element, not
 whole-stage-codegen'd, so 128 lambda evaluations per shingle lose badly
 to one numpy reduceat pass — the Arrow kernel is the right shape.
 DuckDB side: generated SQL built by the ``*_sql`` functions below

@@ -61,7 +61,7 @@ def get_spark(
         # this workload doesn't depend on — disable it.
         .config("spark.sql.constraintPropagation.enabled", "false")
         # the Python UDF workers import this package too: put its root on
-        # their path, so a driver started from any directory can sign
+        # their path, so a script started from any directory can sign
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if local_dir:

@@ -95,7 +95,8 @@ def test_minhash_estimates_jaccard():
 
 def test_minhash_exact_dup_identical_signature():
     a, b = hashing.minhash_perms(64, 42)
-    sig = hashing.minhash_signatures(_flats(pd.Series(["same text here okay", "same text here okay"])), 3, a, b)
+    texts = pd.Series(["same text here okay", "same text here okay"])
+    sig = hashing.minhash_signatures(_flats(texts), 3, a, b)
     assert np.array_equal(sig[0], sig[1])
 
 
@@ -246,7 +247,8 @@ def test_signature_values_pinned(family, mode, kernels):
     both kernels gives each kernel's values alone (the sign stage's
     one-pass dual request is bit-identical to two single requests)."""
     texts = _golden_batch()
-    assert sum(len(hashing._TOKEN_RE.findall(t.lower())) for t in texts.dropna()) > 2 * hashing._REDUCE_BLOCK
+    n_tokens = sum(len(hashing._TOKEN_RE.findall(t.lower())) for t in texts.dropna())
+    assert n_tokens > 2 * hashing._REDUCE_BLOCK  # the batch straddles the block walk
     out = _sign(family, mode, kernels, texts)
     assert sorted(out) == sorted(kernels)
     prefix = "portable_" if family == "portable" else ""

@@ -1,8 +1,6 @@
 """SimHash operator: pigeonhole chunk join finds all pairs within the
 Hamming radius; verification rejects far pairs."""
 
-from pyspark.sql import functions as F
-
 from cs588_data_science_bug_duplicate_detector_spark.config import DedupConfig
 from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import (
     simhash_edges,
