@@ -31,15 +31,29 @@ def norm_rows(cols, rows):
     return sorted(tuple(norm_cell(r[i]) for i in idx) for r in rows)
 
 
-def main(sf_dir: str, only: list[str]):
-    spark = get_spark("oracle-check", cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
+def compare(scols, srows, dcols, drows):
+    """(columns equal, Spark rows, DuckDB rows), rows normalized by
+    ``norm_rows``: a query matches its oracle iff the flag holds and the
+    two row lists are equal."""
+    a = norm_rows(scols, [[r[c] for c in scols] for r in srows])
+    return sorted(scols) == sorted(dcols), a, norm_rows(dcols, drows)
+
+
+def duck(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
     # the recursive-CTE oracles at sf0.1 exceed DuckDB's conservative
     # default memory limit when Spark shares the box; give the oracle room
     con.execute("SET memory_limit='40GB'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def main(sf_dir: str, only: list[str]):
+    spark = get_spark("oracle-check")
+    spark.sparkContext.setLogLevel("ERROR")
+    con = duck(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
@@ -60,9 +74,7 @@ def main(sf_dir: str, only: list[str]):
             print(f"{name}: ORACLE SQL ERROR: {exc}")
             failures += 1
             continue
-        ok_cols = sorted(scols) == sorted(dcols)
-        a = norm_rows(scols, [[r[c] for c in scols] for r in srows])
-        b = norm_rows(dcols, drows)
+        ok_cols, a, b = compare(scols, srows, dcols, drows)
         ok_vals = a == b
         status = "OK" if (ok_cols and ok_vals) else "MISMATCH"
         if status != "OK":
