@@ -65,6 +65,8 @@ def main() -> None:
     from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import simhash_edges
     from cs588_data_science_bug_duplicate_detector_spark.session import get_spark
 
+    # cores=8 is pinned, not the session default: PLANS.md embeds the
+    # shuffle partition count it implies (hashpartitioning(band_key#<n>L, 16))
     spark = get_spark("plan-audit", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
     out = io.StringIO()

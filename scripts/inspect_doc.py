@@ -86,7 +86,7 @@ def main() -> None:
                    help="DedupConfig overrides for a side-by-side diff vs the default")
     args = p.parse_args()
 
-    spark = get_spark("inspect-doc", cores=8)
+    spark = get_spark("inspect-doc")
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(args.corpus)
     labels = spark.read.parquet(args.labels) if args.labels else None
