@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -27,9 +28,12 @@ from cs588_data_science_bug_duplicate_detector_spark.functions.text import (
 from cs588_data_science_bug_duplicate_detector_spark.operators import exact as exact_ops
 from cs588_data_science_bug_duplicate_detector_spark.operators.ann import brute_force_topk, lsh_topk
 from cs588_data_science_bug_duplicate_detector_spark.operators.cc import connected_components
+from cs588_data_science_bug_duplicate_detector_spark.operators.incremental import (
+    detect_edges,
+    sign_docs,
+)
 from cs588_data_science_bug_duplicate_detector_spark.operators.metrics import retrieval_metrics_1d
 from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
-    minhash_edges_from_sigs,
     release_cached_deps,
     with_minhash,
 )
@@ -50,11 +54,8 @@ CFG = DedupConfig()
 # pytest-gated on planted long-span pairs.
 SUFFIX_ORACLE_CFG = replace(CFG, anchor_hash="md5")
 K_VALUES = (1, 5, 10, 20)
-# flagship label modes: (MinHash signer, verbatim string band keys)
-_SIGNERS = {
-    "portable": (portable.with_portable_minhash, True),
-    "fast": (with_minhash, False),
-}
+# flagship label modes: the MinHash signer
+_SIGNERS = {"portable": portable.with_portable_minhash, "fast": with_minhash}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -96,23 +97,25 @@ def _harden(spark: SparkSession) -> None:
 # ---------------------------------------------------------------------------
 
 def _dedup_labels(spark: SparkSession, sf_dir: str, mode: str = "portable") -> DataFrame:
-    """Flagship labels: MinHash signatures -> production banding/cap/verify
-    operators -> union exact-dup edges -> iterative CC. ``mode`` picks the
-    signer: "portable" (md5 signatures, verbatim string band keys — DuckDB
+    """Flagship labels: MinHash signatures + text md5 -> the pipeline's
+    batch detect step over the exact and MinHash detectors
+    (``incremental.detect_edges`` with an empty old side) -> iterative CC.
+    ``mode`` picks the MinHash signer: "portable" (md5 signatures — DuckDB
     replays the whole flow, portable.minhash_clusters_sql) or "fast" (the
     production siphash kernel, functions/hashing.py)."""
-    sign, string_keys = _SIGNERS[mode]
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    sigs = sign(docs.select("doc_id", "text"), "text", CFG).select("doc_id", "minhash")
-    mh, _hot = minhash_edges_from_sigs(sigs, "doc_id", CFG, string_keys=string_keys)
-    # no .distinct(): connected_components dedups the union once internally
-    edges = mh.unionByName(exact_ops.exact_dup_edges(docs, "doc_id", "text"))
-    labels = connected_components(edges, vertices=docs.select("doc_id")).select(
+    docs = _spread(_t(spark, sf_dir, "documents")).select(F.col("doc_id").alias("id"), "text")
+    sigs = (
+        _SIGNERS[mode](docs, "text", CFG)
+        .withColumn("text_md5", exact_ops.text_md5_col("text"))
+        .drop("text")
+    )
+    edges, _hot = detect_edges(sigs, sigs.where(F.lit(False)), CFG, ("exact", "minhash"))
+    labels = connected_components(edges, vertices=docs.select("id")).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
     # CC materialized the edges eagerly (localCheckpoint) — band/pair caches
     # are no longer needed.
-    release_cached_deps(mh)
+    release_cached_deps(edges)
     return labels
 
 
@@ -525,8 +528,8 @@ def q_minhash_clusters(spark, sf_dir):
 
 def q_minhash_clusters_fast(spark, sf_dir):
     """Production-kernel flagship: vectorized siphash MinHash signatures
-    (functions/hashing.py:78, Arrow-batched numpy segment reductions)
-    through the SAME banding/cap/verify/CC flow as ``q_minhash_clusters``.
+    (``hashing.sign_batch``, Arrow-batched numpy segment reductions)
+    through the SAME detect step and CC as ``q_minhash_clusters``.
 
     The portable (md5) twin exists so DuckDB can replay the whole dataflow;
     THIS is the kernel users run, so the bench reports it as the headline
@@ -744,6 +747,78 @@ def q_simhash_candidates_fast(spark, sf_dir):
     return _simhash_candidates(spark, sf_dir, with_simhash)
 
 
+# ---------------------------------------------------------------------------
+# check harness: the stream, fold and detector-parity checks
+# ---------------------------------------------------------------------------
+
+def _planted(docs: DataFrame, originals: DataFrame, off: int) -> tuple[DataFrame, DataFrame]:
+    """(docs + a copy of every doc of ``originals`` at ``doc_id + off``,
+    the (a, b) = (original, copy) id pairs)."""
+    copies = originals.select((F.col("doc_id") + off).alias("doc_id"), "text")
+    pairs = originals.select(F.col("doc_id").alias("a"), (F.col("doc_id") + off).alias("b"))
+    return docs.unionByName(copies), pairs
+
+
+def _split_planted(spark, sf_dir, off: int) -> tuple[DataFrame, DataFrame, list]:
+    """(docs, pairs, parts): the corpus plus a copy of every 25th doc at
+    ``doc_id + off``, the (original, copy) pairs, and the docs in three
+    parts by ``doc_id % 3`` (the stream's micro-batches, the fold's
+    increments)."""
+    # a copy in its original's part connects without any state crossing
+    # parts, and the pair checks would pass vacuously
+    assert off % 3 != 0, off
+    base = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs, pairs = _planted(base, base.where(F.col("doc_id") % 25 == 0), off)
+    return docs, pairs, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
+
+
+def _check(passed: DataFrame, name: str, detector: str | None = None) -> DataFrame:
+    """A one-row ``passed`` frame -> its (check_name, passed) row, led by
+    ``detector`` for the parity checks."""
+    lead = [F.lit(detector).alias("detector")] if detector else []
+    return passed.select(*lead, F.lit(name).alias("check_name"), "passed")
+
+
+def _pairs_connected(labels: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``passed``: every (a, b) pair shares a label (id, cluster_id), and
+    there is at least one pair (vacuous truth never passes)."""
+    la = labels.select(F.col("id").alias("a"), F.col("cluster_id").alias("ca"))
+    lb = labels.select(F.col("id").alias("b"), F.col("cluster_id").alias("cb"))
+    return pairs.join(la, "a").join(lb, "b").agg(
+        ((F.count("*") > 0) & (F.count_if(F.col("ca") == F.col("cb")) == F.count("*"))).alias("passed")
+    )
+
+
+def _partitions_equal(a: DataFrame, b: DataFrame) -> DataFrame:
+    """``passed``: labels ``a`` and ``b`` (id, cluster_id) induce the same
+    partition of their shared ids, and they share at least one id."""
+    j = a.select("id", F.col("cluster_id").alias("ca")).join(
+        b.select("id", F.col("cluster_id").alias("cb")), "id"
+    )
+    joint = F.countDistinct("ca", "cb")
+    return j.agg(
+        ((F.count("*") > 0) & (joint == F.countDistinct("ca")) & (joint == F.countDistinct("cb")))
+        .alias("passed")
+    )
+
+
+def _same_rows(a: DataFrame, b: DataFrame) -> DataFrame:
+    """``passed``: ``a`` is not empty and equals ``b`` as a multiset."""
+    diff = a.exceptAll(b).unionByName(b.exceptAll(a))
+    return a.agg(F.count("*").alias("n")).crossJoin(diff.agg(F.count("*").alias("d"))).select(
+        ((F.col("n") > 0) & (F.col("d") == 0)).alias("passed")
+    )
+
+
+def _drain(writer, ckpt: str, what: str) -> None:
+    """Run an availableNow query to its end; raise if it still runs after
+    300 s."""
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    if not q.awaitTermination(300):
+        q.stop()
+        raise RuntimeError(f"{what} did not terminate in 300s")
+
+
 def q_streaming_batch_equiv(spark, sf_dir):
     """Driver-visible CORRECTNESS for the stateful-streaming family
     (round-4 verdict "Next round #2": the batch-equivalence invariant was
@@ -775,95 +850,43 @@ def q_streaming_batch_equiv(spark, sf_dir):
     from cs588_data_science_bug_duplicate_detector_spark.operators.buckets import bucket_window
     from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import band_table
     from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
+        signature_log_sink,
         streaming_candidate_edges,
+        verified_edges_sink,
     )
 
-    # offset % 3 == 2 (i.e. != 0): every planted copy lands in a DIFFERENT
-    # micro-batch than its original (residue shifts by 2 mod 3), so
-    # recovering the pair requires cross-batch state — keep any replacement
-    # offset OFF % 3 != 0 or the check passes vacuously in-batch
-    OFF = 40_000_001
-    base = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = base.where(F.col("doc_id") % 25 == 0).select(
-        (F.col("doc_id") + OFF).alias("doc_id"), "text"
-    )
-    docs = base.unionByName(planted)
-
+    docs, pairs, parts = _split_planted(spark, sf_dir, 40_000_001)
+    vertices = docs.select("doc_id")
     tmp = tempfile.mkdtemp(prefix="stream_equiv_")
-    src, ckpt, out = f"{tmp}/src", f"{tmp}/ckpt", f"{tmp}/out"
+    src, out, sig_dir, vout = f"{tmp}/src", f"{tmp}/out", f"{tmp}/sigs", f"{tmp}/vout"
     try:
-        for i in range(3):
-            docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
+        for part in parts:
+            part.coalesce(1).write.mode("append").parquet(src)
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        sq = (
-            # NoTimeout: a bounded availableNow replay must terminate once
-            # the 3 files are processed (wall-clock timers would keep the
-            # trigger scheduling empty batches until every timer fires)
+        # NoTimeout: a bounded availableNow replay must terminate once the 3
+        # files are processed (wall-clock timers would keep the trigger
+        # scheduling empty batches until every timer fires)
+        _drain(
             streaming_candidate_edges(stream, CFG, state_ttl_ms=None)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.format("parquet").option("path", out).outputMode("append"),
+            f"{tmp}/ckpt", "streaming replay",
         )
-        if not sq.awaitTermination(300):
-            sq.stop()
-            raise RuntimeError("streaming replay did not terminate in 300s")
-
         stream_edges = spark.read.parquet(out).select("src", "dst")
-        stream_labels = connected_components(
-            stream_edges, vertices=docs.select("doc_id")
-        )
+        stream_labels = connected_components(stream_edges, vertices=vertices)
         # batch comparator: identical signatures/band keys -> per-bucket
         # min-id star edges (exactly the connectivity the stream preserves)
         sigs = with_minhash(docs, "text", CFG)
-        bands = band_table(sigs.select("doc_id", "minhash"), "doc_id", CFG)
         star = (
-            bucket_window(bands)
+            bucket_window(band_table(sigs.select("doc_id", "minhash"), "doc_id", CFG))
             .where(F.col("id") != F.col("root"))
             .select(F.col("root").alias("src"), F.col("id").alias("dst"))
             .distinct()
         )
-        batch_labels = connected_components(star, vertices=docs.select("doc_id"))
-
-        a = stream_labels.select("id", F.col("cluster_id").alias("cs"))
-        b = batch_labels.select("id", F.col("cluster_id").alias("cb"))
-        equal = (
-            a.join(b, "id")
-            .agg(
-                F.count("*").alias("n"),
-                F.countDistinct("cs", "cb").alias("joint"),
-                F.countDistinct("cs").alias("ns"),
-                F.countDistinct("cb").alias("nb"),
-            )
-            .select(
-                F.lit("clusters_equal_batch").alias("check_name"),
-                (
-                    (F.col("n") > 0)
-                    & (F.col("joint") == F.col("ns"))
-                    & (F.col("joint") == F.col("nb"))
-                ).alias("passed"),
-            )
-        )
-        nonempty = stream_edges.agg(F.count("*").alias("n")).select(
-            F.lit("edge_log_nonempty").alias("check_name"),
-            (F.col("n") > 0).alias("passed"),
-        )
-        # every planted (orig, copy) pair shares a STREAM label — only
-        # possible if bucket roots survived across micro-batches
-        pairs = planted.select(
-            (F.col("doc_id") - OFF).alias("a"), F.col("doc_id").alias("b")
-        )
-        crossed = _pairs_connected_agg(
-            stream_labels, pairs, "minhash", "cross_batch_planted_pairs_connected"
-        ).drop("detector")
+        batch_labels = connected_components(star, vertices=vertices)
         # composed-sink invariants (round 5): drive the SAME 3-file stream
         # through the foreachBatch pair — signature_log_sink first (so
         # every doc's signature is logged before any edge verifies), then
@@ -873,60 +896,31 @@ def q_streaming_batch_equiv(spark, sf_dir):
         # was found via the per-batch re-listing), and (b) CC over
         # VERIFIED-only edges still connects every planted cross-batch
         # pair (verification never drops a true-duplicate edge).
-        from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
-            signature_log_sink,
-            streaming_candidate_edges as _sce,
-            verified_edges_sink,
+        _drain(
+            stream.writeStream.foreachBatch(signature_log_sink("doc_id", "text", CFG, sig_dir)),
+            f"{tmp}/ckpt_sig", "signature-log stream",
         )
-
-        sig_dir, vout = f"{tmp}/sigs", f"{tmp}/vout"
-        sstream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        _drain(
+            streaming_candidate_edges(stream, CFG, state_ttl_ms=None)
+            .writeStream.foreachBatch(verified_edges_sink(sig_dir, "doc_id", CFG, vout)),
+            f"{tmp}/ckpt_ver", "verified-edge stream",
         )
-        q_sig = (
-            sstream.writeStream.foreachBatch(
-                signature_log_sink("doc_id", "text", CFG, sig_dir)
-            )
-            .option("checkpointLocation", f"{tmp}/ckpt_sig")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_sig.awaitTermination(300):
-            q_sig.stop()
-            raise RuntimeError("signature-log stream did not terminate in 300s")
-        q_ver = (
-            _sce(sstream, CFG, state_ttl_ms=None)
-            .writeStream.foreachBatch(
-                verified_edges_sink(sig_dir, "doc_id", CFG, vout)
-            )
-            .option("checkpointLocation", f"{tmp}/ckpt_ver")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_ver.awaitTermination(300):
-            q_ver.stop()
-            raise RuntimeError("verified-edge stream did not terminate in 300s")
         vlog = spark.read.parquet(vout)
-        all_checked = vlog.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.col("est_jaccard").isNull().cast("int")), F.lit(0)
-            ).alias("nulls"),
-        ).select(
-            F.lit("verified_log_all_edges_checked").alias("check_name"),
-            ((F.col("n") > 0) & (F.col("nulls") == 0)).alias("passed"),
-        )
-        vlabels = connected_components(
-            vlog.select("src", "dst"), vertices=docs.select("doc_id")
-        )
-        vcrossed = _pairs_connected_agg(
-            vlabels, pairs, "minhash", "verified_log_planted_pairs_connected"
-        ).drop("detector")
+        vlabels = connected_components(vlog.select("src", "dst"), vertices=vertices)
+        n = F.count("*")
         res = (
-            equal.unionByName(nonempty).unionByName(crossed)
-            .unionByName(all_checked).unionByName(vcrossed)
+            _check(_partitions_equal(stream_labels, batch_labels), "clusters_equal_batch")
+            .unionByName(_check(stream_edges.agg((n > 0).alias("passed")), "edge_log_nonempty"))
+            # every planted (orig, copy) pair shares a STREAM label — only
+            # possible if bucket roots survived across micro-batches
+            .unionByName(_check(_pairs_connected(stream_labels, pairs),
+                                "cross_batch_planted_pairs_connected"))
+            .unionByName(_check(
+                vlog.agg(((n > 0) & (F.count("est_jaccard") == n)).alias("passed")),
+                "verified_log_all_edges_checked",
+            ))
+            .unionByName(_check(_pairs_connected(vlabels, pairs),
+                                "verified_log_planted_pairs_connected"))
             .orderBy("check_name")
             .localCheckpoint(eager=True)  # materialize before tmp cleanup
         )
@@ -941,8 +935,9 @@ def q_incremental_dedup(spark, sf_dir):
     into three increments by ``doc_id % 3`` and folded one at a time
     through ``DedupIndex.add_increment`` (sign only the increment, pair
     only LSH buckets / simhash chunks / md5 groups touched by it, carry
-    previous labels as star edges); the final labels must EQUAL a
-    from-scratch batch run (exact ∪ MinHash ∪ SimHash edges -> CC) on the
+    previous labels as star edges); the final labels must EQUAL the
+    pipeline's batch detect step (``sign_docs`` -> ``detect_edges`` over
+    the index's detectors with an empty old side -> CC) on the
     concatenated corpus — both use min-member cluster ids, so the strong
     row-level form is checked, not just partition equality.
 
@@ -960,70 +955,23 @@ def q_incremental_dedup(spark, sf_dir):
     import tempfile
 
     from cs588_data_science_bug_duplicate_detector_spark.operators.incremental import DedupIndex
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import minhash_edges
-    from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import simhash_edges
 
-    OFF = 50_000_002  # keep OFF % 3 != 0: copies land in a different increment
-    base = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = base.where(F.col("doc_id") % 25 == 0).select(
-        (F.col("doc_id") + OFF).alias("doc_id"), "text"
-    )
-    docs = base.unionByName(planted)
-
+    docs, pairs, parts = _split_planted(spark, sf_dir, 50_000_002)
     tmp = tempfile.mkdtemp(prefix="inc_dedup_")
     try:
         idx = DedupIndex(f"{tmp}/idx", CFG)
-        labels = None
-        for i in range(3):
-            labels = idx.add_increment(
-                docs.where(F.col("doc_id") % 3 == i), "doc_id", "text"
-            )
-
-        edges, _hot = minhash_edges(docs, "doc_id", "text", CFG)
-        sim = simhash_edges(docs, "doc_id", "text", CFG)
-        batch_edges = (
-            edges.unionByName(exact_ops.exact_dup_edges(docs, "doc_id", "text"))
-            .unionByName(sim)
-            .distinct()
-        )
-        batch_labels = connected_components(
-            batch_edges, vertices=docs.select("doc_id"), pre_deduped=True
-        )
+        for part in parts:
+            labels = idx.add_increment(part, "doc_id", "text")
+        sigs = sign_docs(docs, "doc_id", "text", CFG, idx.detectors).withColumnRenamed("doc_id", "id")
+        edges, _hot = detect_edges(sigs, sigs.where(F.lit(False)), CFG, idx.detectors)
+        batch_labels = connected_components(edges, vertices=docs.select("doc_id"))
         release_cached_deps(edges)
-        release_cached_deps(sim)
-
-        j = labels.select("id", F.col("cluster_id").alias("ci")).join(
-            batch_labels.select("id", F.col("cluster_id").alias("cb")), "id", "full"
-        )
-        equal = j.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(
-                    (
-                        F.col("ci").isNull()
-                        | F.col("cb").isNull()
-                        | (F.col("ci") != F.col("cb"))
-                    ).cast("int")
-                ),
-                F.lit(0),
-            ).alias("mismatched"),
-        ).select(
-            F.lit("final_labels_equal_batch").alias("check_name"),
-            ((F.col("n") > 0) & (F.col("mismatched") == 0)).alias("passed"),
-        )
-        pairs = planted.select(
-            (F.col("doc_id") - OFF).alias("a"), F.col("doc_id").alias("b")
-        )
-        crossed = _pairs_connected_agg(
-            labels, pairs, "incremental", "cross_increment_planted_pairs_connected"
-        ).drop("detector")
-        three = spark.createDataFrame(
-            [("index_has_three_increments", idx.meta()["n_increments"] == 3)],
-            "check_name string, passed boolean",
-        )
+        three = spark.createDataFrame([(idx.meta()["n_increments"] == 3,)], "passed boolean")
         res = (
-            equal.unionByName(crossed)
-            .unionByName(three)
+            _check(_same_rows(labels, batch_labels), "final_labels_equal_batch")
+            .unionByName(_check(_pairs_connected(labels, pairs),
+                                "cross_increment_planted_pairs_connected"))
+            .unionByName(_check(three, "index_has_three_increments"))
             .orderBy("check_name")
             .localCheckpoint(eager=True)  # materialize before tmp cleanup
         )
@@ -1238,28 +1186,6 @@ def _media_dedup_oracle_sql() -> str:
     """
 
 
-def _pairs_connected_agg(labels: DataFrame, planted: DataFrame, detector: str, check: str) -> DataFrame:
-    """1-row (detector, check_name, passed): every planted (a, b) pair
-    shares a CC label AND there was at least one pair (vacuous truth never
-    passes). ``labels`` has (id, cluster_id); ``planted`` has (a, b)."""
-    la = labels.select(F.col("id").alias("a"), F.col("cluster_id").alias("ca"))
-    lb = labels.select(F.col("id").alias("b"), F.col("cluster_id").alias("cb"))
-    agg = (
-        planted.join(la, "a").join(lb, "b")
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum((F.col("ca") == F.col("cb")).cast("int")), F.lit(0)
-            ).alias("ok"),
-        )
-    )
-    return agg.select(
-        F.lit(detector).alias("detector"),
-        F.lit(check).alias("check_name"),
-        ((F.col("n") > 0) & (F.col("ok") == F.col("n"))).alias("passed"),
-    )
-
-
 def q_detector_parity(spark, sf_dir):
     """Driver-visible value parity for the production (siphash/xxhash64)
     detector kernels vs their oracle-checked portable twins (round-3
@@ -1285,83 +1211,36 @@ def q_detector_parity(spark, sf_dir):
       #7): planted full-doc copies whose base doc emits >=1 content-
       defined anchored window must reconnect under BOTH hash families.
     """
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    out = []
+    from cs588_data_science_bug_duplicate_detector_spark.operators.suffix import window_table
 
-    # --- minhash: whole-corpus label partition equality --------------------
-    fast = _cached_labels(spark, sf_dir, "fast").select(
-        F.col("doc_id").alias("id"), F.col("cluster_id").alias("cf")
-    )
-    port = _cached_labels(spark, sf_dir, "portable").select(
-        F.col("doc_id").alias("id"), F.col("cluster_id").alias("cp")
-    )
-    j = fast.join(port, "id")
-    out.append(
-        j.agg(
-            F.count("*").alias("n"),
-            F.countDistinct("cf", "cp").alias("joint"),
-            F.countDistinct("cf").alias("nf"),
-            F.countDistinct("cp").alias("np"),
-        ).select(
-            F.lit("minhash").alias("detector"),
-            F.lit("fast_vs_portable_labels_partition_equal").alias("check_name"),
-            (
-                (F.col("n") > 0)
-                & (F.col("joint") == F.col("nf"))
-                & (F.col("joint") == F.col("np"))
-            ).alias("passed"),
-        )
-    )
+    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    labels = {
+        mode: _cached_labels(spark, sf_dir, mode).withColumnRenamed("doc_id", "id")
+        for mode in ("fast", "portable")
+    }
+    out = [_check(_partitions_equal(labels["fast"], labels["portable"]),
+                  "fast_vs_portable_labels_partition_equal", "minhash")]
 
     # --- simhash: planted exact copies recovered by BOTH kernels -----------
-    SH_OFF = 20_000_000
     sh_base = docs.where(token_count("text") >= 5)
-    sh_planted_docs = sh_base.where(F.col("doc_id") % 25 == 0).select(
-        (F.col("doc_id") + SH_OFF).alias("doc_id"), "text"
-    )
-    sh_all = docs.unionByName(sh_planted_docs)
-    sh_pairs = sh_planted_docs.select(
-        (F.col("doc_id") - SH_OFF).alias("a"), F.col("doc_id").alias("b")
-    )
-    for mode, check in (("fast", "planted_exact_recall_1_fast"),
-                        ("portable", "planted_exact_recall_1_portable")):
-        if mode == "fast":
-            sigs = with_simhash(sh_all, "text").select("doc_id", "simhash")
-        else:
-            sigs = portable.with_portable_simhash(sh_all, "text").select("doc_id", "simhash")
-        e = simhash_edges_from_sigs(sigs, "doc_id", CFG)
-        lab = connected_components(
-            e.select("src", "dst"), vertices=sh_all.select("doc_id")
-        )
+    sh_all, sh_pairs = _planted(docs, sh_base.where(F.col("doc_id") % 25 == 0), 20_000_000)
+    for sign, check in ((with_simhash, "planted_exact_recall_1_fast"),
+                        (portable.with_portable_simhash, "planted_exact_recall_1_portable")):
+        e = simhash_edges_from_sigs(sign(sh_all, "text").select("doc_id", "simhash"), "doc_id", CFG)
+        lab = connected_components(e.select("src", "dst"), vertices=sh_all.select("doc_id"))
         release_cached_deps(e)
-        out.append(_pairs_connected_agg(lab, sh_pairs, "simhash", check))
+        out.append(_check(_pairs_connected(lab, sh_pairs), check, "simhash"))
 
     # --- suffix: exhaustive-anchor edge-set equality + planted recall ------
-    sx_fast_cfg = replace(CFG, anchor_mod=1)
-    sx_port_cfg = replace(SUFFIX_ORACLE_CFG, anchor_mod=1)
-    SX_OFF = 30_000_000
     sx_base = docs.where(token_count("text") >= CFG.suffix_min_tokens)
-    sx_planted_docs = sx_base.where(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + SX_OFF).alias("doc_id"), "text"
+    sx_all, sx_pairs = _planted(docs, sx_base.where(F.col("doc_id") % 10 == 0), 30_000_000)
+    ef = suffix_edges(sx_all, "doc_id", "text", replace(CFG, anchor_mod=1)).select("src", "dst")
+    ep = suffix_edges(sx_all, "doc_id", "text", replace(SUFFIX_ORACLE_CFG, anchor_mod=1)).select(
+        "src", "dst"
     )
-    sx_all = docs.unionByName(sx_planted_docs)
-    ef = suffix_edges(sx_all, "doc_id", "text", sx_fast_cfg).select("src", "dst")
-    ep = suffix_edges(sx_all, "doc_id", "text", sx_port_cfg).select("src", "dst")
-    sym_diff = ef.exceptAll(ep).unionByName(ep.exceptAll(ef))
-    out.append(
-        ef.agg(F.count("*").alias("n_edges"))
-        .crossJoin(sym_diff.agg(F.count("*").alias("n_diff")))
-        .select(
-            F.lit("suffix").alias("detector"),
-            F.lit("fast_vs_portable_edges_equal_exhaustive").alias("check_name"),
-            ((F.col("n_edges") > 0) & (F.col("n_diff") == 0)).alias("passed"),
-        )
-    )
-    sx_pairs = sx_planted_docs.select(
-        (F.col("doc_id") - SX_OFF).alias("a"), F.col("doc_id").alias("b")
-    )
+    out.append(_check(_same_rows(ef, ep), "fast_vs_portable_edges_equal_exhaustive", "suffix"))
     sx_lab = connected_components(ef, vertices=sx_all.select("doc_id"))
-    out.append(_pairs_connected_agg(sx_lab, sx_pairs, "suffix", "planted_span_recall_1_fast"))
+    out.append(_check(_pairs_connected(sx_lab, sx_pairs), "planted_span_recall_1_fast", "suffix"))
 
     # --- suffix at PRODUCTION anchor density (round-4 verdict #7): the
     # anchor_mod=1 rows prove the window machinery with anchor selection
@@ -1370,9 +1249,7 @@ def q_detector_parity(spark, sf_dir):
     # doc, so pairs are restricted to base docs that emit >=1 anchored
     # window under the family being checked — for those, a full-doc copy
     # shares the window hash DETERMINISTICALLY and must reconnect; >0 such
-    # pairs is asserted inside _pairs_connected_agg (vacuous truth fails).
-    from cs588_data_science_bug_duplicate_detector_spark.operators.suffix import window_table
-
+    # pairs is asserted inside _pairs_connected (vacuous truth fails).
     for acfg, check in (
         (CFG, "planted_span_recall_prod_fast"),
         (SUFFIX_ORACLE_CFG, "planted_span_recall_prod_portable"),
@@ -1385,12 +1262,9 @@ def q_detector_parity(spark, sf_dir):
             .distinct()
         )
         pairs_prod = sx_pairs.join(anchored, "a", "left_semi")
-        out.append(_pairs_connected_agg(lab_prod, pairs_prod, "suffix", check))
+        out.append(_check(_pairs_connected(lab_prod, pairs_prod), check, "suffix"))
 
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res.orderBy("detector", "check_name")
+    return reduce(DataFrame.unionByName, out).orderBy("detector", "check_name")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

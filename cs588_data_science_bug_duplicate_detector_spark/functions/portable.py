@@ -28,14 +28,18 @@ higher-order functions are interpreted per element, not
 whole-stage-codegen'd, so 128 lambda evaluations per shingle lose badly
 to one numpy reduceat pass — the Arrow kernel is the right shape.
 DuckDB side: generated SQL built by the ``*_sql`` functions below
-(DuckDB parses ``'0x..'`` hex casts). Downstream operators are the
-production ones —
-``operators.minhash.minhash_edges_from_sigs`` and
-``operators.simhash.simhash_edges_from_sigs`` (both on the shared
-bucket-pairing core ``operators.buckets.pair_buckets``),
-``operators.suffix.suffix_edges``, ``operators.cc.connected_components``
-— so banding, skew caps, verification, and the iterative CC loop are all
-value-checked against the oracle, not just the hash kernels.
+(DuckDB parses ``'0x..'`` hex casts). Downstream is the production
+code: the flagship runs the pipeline's batch detect step,
+``operators.incremental.detect_edges`` over the exact and MinHash
+detectors; the SimHash twin runs
+``operators.simhash.simhash_edges_from_sigs`` (both hash rules on the
+shared bucket-pairing core ``operators.buckets.pair_buckets``); then
+``operators.suffix.suffix_edges`` and
+``operators.cc.connected_components`` — so banding, skew caps,
+verification, and the iterative CC loop are all value-checked against
+the oracle, not just the hash kernels. The oracle's band keys are the
+verbatim ``"<band>:<slots>"`` strings (DuckDB has no xxhash64); the
+Spark side's hashed keys group the same rows.
 
 Equivalence of the two hash families (siphash fast path vs md5 portable
 path) at the planted-cluster level is pytest-gated in

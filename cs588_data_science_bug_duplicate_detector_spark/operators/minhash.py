@@ -42,7 +42,7 @@ def with_dual_signatures(df: DataFrame, text_col: str, cfg: DedupConfig) -> Data
 
 
 def band_table(sigs: DataFrame, id_col: str, cfg: DedupConfig,
-               string_keys: bool = False, keep_cols: tuple = ()) -> DataFrame:
+               keep_cols: tuple = ()) -> DataFrame:
     """(id, band_key): one row per band per doc, JVM-side only.
 
     band_key folds the band index INTO the hash (xxhash64(band_id, slice)),
@@ -50,25 +50,18 @@ def band_table(sigs: DataFrame, id_col: str, cfg: DedupConfig,
     (int, long) — ~30% less key bandwidth on the hottest table in the job.
     Cross-band collisions need a 64-bit hash collision: negligible.
 
-    ``string_keys=True`` emits the verbatim key ``"<band>:<s0>,<s1>,..."``
-    instead — the portable/oracle mode, reproduced exactly by the DuckDB
-    SQL in functions/portable.py (DuckDB has no xxhash64). Semantically
-    identical grouping; only the key encoding differs.
+    A key's value never reaches an output, only its grouping does, and
+    barring that collision it groups exactly the rows that the DuckDB
+    oracle's verbatim ``"<band>:<s0>,<s1>,..."`` key groups
+    (functions/portable.py).
     """
-    if string_keys:
-        key = lambda b: F.concat_ws(
-            ":",
-            b.cast("string"),
-            F.array_join(
-                F.slice(F.col("minhash"), b * F.lit(cfg.rows_per_band) + 1, cfg.rows_per_band), ","
-            ),
-        )
-    else:
-        key = lambda b: F.xxhash64(
+    bands = F.transform(
+        F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
+        lambda b: F.xxhash64(
             b,
             F.slice(F.col("minhash"), b * F.lit(cfg.rows_per_band) + 1, cfg.rows_per_band),
-        )
-    bands = F.transform(F.sequence(F.lit(0), F.lit(cfg.bands - 1)), key)
+        ),
+    )
     # NULL signatures = content-less docs (zero tokens): never candidates
     return (
         sigs.where(F.col("minhash").isNotNull())
@@ -168,11 +161,11 @@ def release_cached_deps(df: DataFrame) -> None:
             pass
 
 
-def lsh_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupConfig,
-              string_keys: bool = False) -> tuple[DataFrame, DataFrame]:
+def lsh_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str,
+              cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
     """``buckets.pair_buckets`` over the band keys + MinHash's verify rule
     -> (edges, hot), every edge with >= 1 new endpoint. Batch is the call
-    with an empty old side (``minhash_edges_from_sigs``).
+    with an empty old side (``minhash_edges``).
 
     Hybrid verify: pairs colliding in >= ``auto_accept_bands`` bands (the
     quadratic bulk — exact dups, template farms) are accepted outright;
@@ -189,8 +182,8 @@ def lsh_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupC
     # the detector, paid 3x instead of 1x.
     new_sigs.persist()
     pairs, star, hot, deps = pair_buckets(
-        band_table(new_sigs, id_col, cfg, string_keys=string_keys),
-        band_table(old_sigs, id_col, cfg, string_keys=string_keys),
+        band_table(new_sigs, id_col, cfg),
+        band_table(old_sigs, id_col, cfg),
         cfg.bucket_cap, cfg.bucket_salt,
     )
     # persist: the auto/ambiguous split reads the pair table twice —
@@ -208,15 +201,9 @@ def lsh_edges(new_sigs: DataFrame, old_sigs: DataFrame, id_col: str, cfg: DedupC
     return _attach_deps(auto.unionByName(verified).distinct(), [new_sigs, *deps, pairs]), hot
 
 
-def minhash_edges_from_sigs(sigs: DataFrame, id_col: str, cfg: DedupConfig,
-                            string_keys: bool = False) -> tuple[DataFrame, DataFrame]:
-    """sigs(id, minhash) -> (verified edges(src,dst), hot_bucket_summary):
-    ``lsh_edges`` with an empty old side."""
-    return lsh_edges(sigs, sigs.where(F.lit(False)), id_col, cfg, string_keys)
-
-
 def minhash_edges(docs: DataFrame, id_col: str, text_col: str,
                   cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
-    """Full detector-1 dataflow: docs -> verified candidate edges."""
+    """Full detector-1 dataflow: docs -> verified candidate edges and the
+    hot-bucket summary (``lsh_edges`` with an empty old side)."""
     sigs = with_minhash(docs.select(id_col, text_col), text_col, cfg)
-    return minhash_edges_from_sigs(sigs, id_col, cfg)
+    return lsh_edges(sigs, sigs.where(F.lit(False)), id_col, cfg)

@@ -124,42 +124,39 @@ def stage_table(tr: Tracer) -> dict:
 
 
 def detect(docs, cfg, tr: Tracer, split: bool = False) -> dict:
-    """The staged job: sign ONCE (one Arrow pass for both signatures, shared
-    by every detector — composing the detector functions would re-run the
-    signature UDFs in each self-join branch), minhash ∪ exact ∪ simhash
-    edges, then CC. Spans: ``sign``, ``detect`` (one fused job) or, with
-    ``split``, one span per detector plus ``union_distinct``; ``cc``.
-    This is also the batch reference the incremental scenarios check."""
+    """The staged job, as ``run_pipeline`` runs it for the exact, MinHash
+    and SimHash detectors: ``sign`` runs ``incremental.sign_docs`` once
+    (one Arrow pass for both signatures, plus the text md5), ``detect``
+    runs ``incremental.detect_edges`` with an empty old side, ``cc``
+    labels. With ``split``, one span per detector (a one-detector set)
+    plus ``union_distinct``. This is also the batch reference the
+    incremental scenarios check."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from cs588_data_science_bug_duplicate_detector_spark.operators.cc import connected_components
-    from cs588_data_science_bug_duplicate_detector_spark.operators.exact import exact_dup_edges
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
-        minhash_edges_from_sigs,
-        release_cached_deps,
-        with_dual_signatures,
+    from cs588_data_science_bug_duplicate_detector_spark.operators.incremental import (
+        detect_edges,
+        sign_docs,
     )
-    from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import simhash_edges_from_sigs
+    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import release_cached_deps
 
-    sc = docs.sparkSession.sparkContext
+    sc, detectors = docs.sparkSession.sparkContext, ("exact", "minhash", "simhash")
     with tr.span("sign", sc):
-        sigs = with_dual_signatures(docs, "text", cfg).drop("text").persist()
-        sigs.count()
-    build = {
-        "minhash_detect": lambda: minhash_edges_from_sigs(sigs.select("doc_id", "minhash"), "doc_id", cfg)[0],
-        "exact_detect": lambda: exact_dup_edges(docs, "doc_id", "text"),
-        "simhash_detect": lambda: simhash_edges_from_sigs(sigs.select("doc_id", "simhash"), "doc_id", cfg),
-    }
-    parts = {}
+        sigs = sign_docs(docs, "doc_id", "text", cfg, detectors).withColumnRenamed("doc_id", "id")
+        sigs.persist().count()
+    old, parts = sigs.where(F.lit(False)), {}
     if split:
-        for name in ("minhash_detect", "simhash_detect", "exact_detect"):
-            with tr.span(name, sc):
-                parts[name] = build[name]().persist()
-                parts[name].count()
+        for det in ("minhash", "simhash", "exact"):
+            with tr.span(f"{det}_detect", sc):
+                parts[det] = detect_edges(sigs, old, cfg, (det,))[0].persist()
+                parts[det].count()
     with tr.span("union_distinct" if split else "detect", sc):
-        parts = parts or {name: b() for name, b in build.items()}
-        edges = parts["minhash_detect"].unionByName(parts["exact_detect"])
-        edges = edges.unionByName(parts["simhash_detect"]).distinct().persist()
+        parts = parts or {"all": detect_edges(sigs, old, cfg, detectors)[0]}
+        edges = reduce(DataFrame.unionByName, parts.values()).select("src", "dst")
+        edges = edges.distinct().persist()
         n_edges = edges.count()
     rounds: list[float] = []
     with tr.span("cc", sc) as cc:

@@ -88,9 +88,7 @@ def test_bucket_salting_recovers_hot_bucket_pairs(spark):
     star-only capping loses true member<->member pairs; bucket_salt
     sub-bucket pairs recover them (pigeonhole guarantees >=2 of the 3 true
     dups share a salt), and connectivity edges never regress."""
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
-        minhash_edges_from_sigs,
-    )
+    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import lsh_edges
 
     # num_perm=8, bands=2 x rows=4. Every doc shares band-0 slots [1,2,3,4]
     # (one hot bucket, root=id 1). Docs 2,3,7: pairwise 6/8 slots equal
@@ -111,7 +109,7 @@ def test_bucket_salting_recovers_hot_bucket_pairs(spark):
     base = dict(num_perm=8, bands=2, rows_per_band=4, bucket_cap=3)
 
     def edges(cfg):
-        e, _hot = minhash_edges_from_sigs(sigs, "doc_id", cfg)
+        e, _hot = lsh_edges(sigs, sigs.where(F.lit(False)), "doc_id", cfg)
         out = {(r["src"], r["dst"]) for r in e.collect()}
         from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
             release_cached_deps,

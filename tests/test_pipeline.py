@@ -192,7 +192,7 @@ def test_cap_metrics_surface_in_stats_and_meta(spark, tmp_path_factory):
 
     from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
         hot_bucket_stats,
-        minhash_edges_from_sigs,
+        lsh_edges,
         release_cached_deps,
     )
     from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import hamming_edges
@@ -212,7 +212,8 @@ def test_cap_metrics_surface_in_stats_and_meta(spark, tmp_path_factory):
     # the summaries taken after the edge write are the caps of the
     # pipeline's own signatures, recomputed here from the checkpoint
     sigs = TableIO(wd).read(spark, "signatures")
-    mh_edges, mh_hot = minhash_edges_from_sigs(sigs.select("doc_id", "minhash"), "doc_id", cfg)
+    mh = sigs.select("doc_id", "minhash")
+    mh_edges, mh_hot = lsh_edges(mh, mh.where(F.lit(False)), "doc_id", cfg)
     sh = sigs.select("doc_id", "simhash")
     sh_edges, sh_hot = hamming_edges(sh, sh.where(F.lit(False)), "doc_id", cfg)
     assert det["minhash"] == hot_bucket_stats(mh_hot)

@@ -21,9 +21,7 @@ from cs588_data_science_bug_duplicate_detector_spark.datagen import generate_pag
 from cs588_data_science_bug_duplicate_detector_spark.functions import portable
 from cs588_data_science_bug_duplicate_detector_spark.operators.cc import connected_components
 from cs588_data_science_bug_duplicate_detector_spark.operators.exact import exact_dup_edges
-from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import (
-    minhash_edges_from_sigs,
-)
+from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import lsh_edges
 from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import (
     simhash_edges_from_sigs,
 )
@@ -117,10 +115,10 @@ def test_portable_pipeline_meets_recall_gate(spark, planted):
     """Portable hash family passes the same dup-pair gates as production."""
     docs, tr = planted
     cfg = DedupConfig()
-    sigs = portable.with_portable_minhash(docs.select("doc_id", "text"), "text", cfg)
-    mh, _hot = minhash_edges_from_sigs(
-        sigs.select("doc_id", "minhash"), "doc_id", cfg, string_keys=True
+    sigs = portable.with_portable_minhash(docs.select("doc_id", "text"), "text", cfg).select(
+        "doc_id", "minhash"
     )
+    mh, _hot = lsh_edges(sigs, sigs.where(F.lit(False)), "doc_id", cfg)
     edges = mh.unionByName(exact_dup_edges(docs, "doc_id", "text")).distinct()
     labels = connected_components(edges, vertices=docs.select("doc_id"))
     lab = {r["id"]: r["cluster_id"] for r in labels.collect()}
