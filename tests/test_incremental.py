@@ -363,9 +363,12 @@ def test_incremental_update_script_runs_outside_the_repo(tmp_path):
     env["SPARK_DRIVER_MEM"] = "1g"
     proc = subprocess.run(
         [sys.executable, os.path.join(root, "scripts", "incremental_update.py"),
-         "--index", str(tmp_path / "idx"), "--input", str(inp), "--cores", "1"],
+         "--index", str(tmp_path / "idx"), "--input", str(inp), "--cores", "1",
+         "--reliable-cc"],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     assert summary["total_docs"] == 3 and summary["n_clusters"] == 2
+    # the reliable fold removes its CC round files once the labels are written
+    assert not os.path.exists(tmp_path / "idx" / "_cc_checkpoints")
