@@ -7,11 +7,11 @@ every vertex labeled with its component's MIN member id (≙ the
 reference's root-as-cluster-id convention — labels are compared as
 partitions, not raw values).
 
-The deduplicated edge set is always checkpointed first; its observed
+The deduplicated edge set is always materialized first; its observed
 summary gives the distinct edge count ``n``. When ``n <= _LOCAL_MAX_EDGES``
-the checkpoint is collected over Arrow and labeled on the driver by a
+it is collected over Arrow and labeled on the driver by a
 vectorized numpy union-find — one job instead of a loop whose every
-round is an eager checkpoint, which at interactive sizes costs far more
+round is materialized, which at interactive sizes costs far more
 in per-stage scheduling than in work. Above the bound the edges stay
 distributed, in the star loop:
 
@@ -19,11 +19,17 @@ Algorithm (Kiveris et al., "Connected Components in MapReduce and
 Beyond"): converges in O(log n) rounds; each round is two
 join+aggregate passes over the edge DataFrame — no collect_list, so a
 10^9-leaf star never materializes an adjacency list in one task.
-Lineage is truncated every round via reliable checkpoint (iterative
-plans otherwise grow unboundedly — SURVEY.md §4).
+Lineage is truncated every round (iterative plans otherwise grow
+unboundedly — SURVEY.md §4): by ``localCheckpoint``, or with
+``reliable=True`` by a parquet round file under the caller's
+``checkpoint_dir``. The loop reads and writes no session setting, so it
+runs at the session's shuffle width.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import numpy as np
 import pyarrow as pa
@@ -36,6 +42,8 @@ from pyspark.sql import functions as F
 # the bound caps driver memory, not speed: one collect of at most this many
 # (src, dst) longs, 16 MB of Arrow.
 _LOCAL_MAX_EDGES = 1_000_000
+# Star-loop rounds before an unconverged edge set raises.
+_MAX_ROUNDS = 50
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -92,7 +100,7 @@ def _union_find(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarra
 
 
 def _driver_labels(e: DataFrame) -> DataFrame:
-    """Checkpointed edges(src, dst) -> labels(id, cluster_id), unioned on
+    """Materialized edges(src, dst) -> labels(id, cluster_id), unioned on
     the driver: one Arrow collect, one local relation back."""
     t = e.toArrow()
     ids, roots = _union_find(t.column("src").to_numpy(), t.column("dst").to_numpy())
@@ -113,7 +121,6 @@ def _summary_metrics():
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    max_iter: int = 50,
     on_iteration=None,
     reliable: bool = False,
     pre_deduped: bool = False,
@@ -126,124 +133,89 @@ def connected_components(
     distinct() when the caller already dedup'd the edge set (saves a full
     shuffle — callers like the pipeline otherwise pay it twice).
 
-    The deduplicated edge set is checkpointed first. Up to
+    The deduplicated edge set is materialized first. Up to
     ``_LOCAL_MAX_EDGES`` distinct edges it is collected and labeled on the
-    driver (``_union_find``); ``max_iter``, ``on_iteration`` and the
-    per-round checkpoints then never come into play, as no loop runs.
-    Above the bound the star loop runs, and lineage is truncated every
-    round. Default is ``localCheckpoint`` (memory, no disk round-trip — the
-    rounds are the latency-critical serial section); pass ``reliable=True``
-    for HDFS-style checkpoints when executor loss must not restart the
-    loop; the init checkpoint then lands in ``checkpoint_dir`` on either
-    path. Job-level resume is handled one level up by the pipeline's
-    edge/label stage checkpoints.
+    driver (``_union_find``); ``on_iteration`` and the per-round files
+    then never come into play, as no loop runs. Above the bound the star
+    loop runs, at most ``_MAX_ROUNDS`` rounds, and every round is
+    materialized to truncate lineage. Default is ``localCheckpoint``
+    (memory, no disk round-trip — the rounds are the latency-critical
+    serial section). ``reliable=True`` writes each materialization as
+    parquet to ``<checkpoint_dir>/r<i>`` (``r0`` the init set, ``r<i>``
+    round ``i``) and reads it back, so executor loss recomputes from the
+    last round's files instead of restarting the loop. Each round's files
+    replace the previous round's, and the driver path drops ``r0`` once it
+    has collected it: a finished call leaves only the files its labels
+    read, which the caller removes with the directory. Job-level resume is
+    handled one level up by the pipeline's edge/label stage checkpoints.
+    No session or SparkContext setting is read or written.
 
     The convergence summary (count + order-independent checksum) rides the
-    SAME job as each checkpoint via ``observe`` — no separate aggregate job
-    per round (the per-round fixed costs are what keep CC from scaling at
-    small corpus sizes); the init summary's count picks the path.
+    SAME job as each materialization via ``observe`` — no separate
+    aggregate job per round (the per-round fixed costs are what keep CC
+    from scaling at small corpus sizes); the init summary's count picks
+    the path.
     """
-    sc = edges.sparkSession.sparkContext
-    prev_ckpt_dir = None
-    if reliable:
-        if checkpoint_dir is not None:
-            # the checkpoint dir is SESSION-GLOBAL state: remember the
-            # caller's setting and restore it after the loop, so one
-            # pipeline's workdir never leaks into later reliable callers
-            # (or a concurrent pipeline sharing the session)
-            opt = sc._jsc.sc().getCheckpointDir()
-            prev_ckpt_dir = None if opt.isEmpty() else opt.get()
-            sc.setCheckpointDir(checkpoint_dir)
-        elif sc._jsc.sc().getCheckpointDir().isEmpty():
-            import os
-            import tempfile
+    if reliable and checkpoint_dir is None:
+        raise ValueError("reliable=True needs a checkpoint_dir for its round files")
+    spark = edges.sparkSession
 
-            sc.setCheckpointDir(os.path.join(tempfile.gettempdir(), "dupdetect-ckpt"))
-
-    def _ckpt_with_summary(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    def materialize(df: DataFrame, i: int) -> tuple[DataFrame, tuple[int, int]]:
         obs = Observation()
         df = df.observe(obs, *_summary_metrics())
-        out = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+        if reliable:
+            df.write.mode("overwrite").parquet(os.path.join(checkpoint_dir, f"r{i}"))
+            out = spark.read.schema("src long, dst long").parquet(
+                os.path.join(checkpoint_dir, f"r{i}")
+            )
+        else:
+            out = df.localCheckpoint(eager=True)
         got = obs.get
         return out, (int(got["n"] or 0), int(got["chk"] or 0))
+
+    def release(df: DataFrame, i: int) -> None:
+        if reliable:
+            shutil.rmtree(os.path.join(checkpoint_dir, f"r{i}"), ignore_errors=True)
+        else:
+            df.unpersist()
 
     init = edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).where(
         F.col("src") != F.col("dst")
     )
     if not pre_deduped:
         init = init.distinct()
-    sess = edges.sparkSession
-    prev_sp = sess.conf.get("spark.sql.shuffle.partitions", None)
-    converged = False
-    try:
-        # ALWAYS checkpoint the init set (even off a caller-persisted DF): the
-        # round plans self-union the edges, and Spark's relation-dedup rewrites
-        # expression ids in the union branches, which can MISS the outer cache
-        # and silently recompute the whole upstream detect pipeline per round
-        # (measured: 43s vs 2.6s for round 0 at 400k docs). The driver path
-        # collects from it, so the upstream plan runs exactly once either way.
-        e, prev = _ckpt_with_summary(init)
-        local = prev[0] <= _LOCAL_MAX_EDGES
-        if local:
-            labels = _driver_labels(e)
-            e.unpersist()
-            converged = True
+    # ALWAYS materialize the init set (even off a caller-persisted DF): the
+    # round plans self-union the edges, and Spark's relation-dedup rewrites
+    # expression ids in the union branches, which can MISS the outer cache
+    # and silently recompute the whole upstream detect pipeline per round
+    # (measured: 43s vs 2.6s for round 0 at 400k docs). The driver path
+    # collects from it, so the upstream plan runs exactly once either way.
+    e, prev = materialize(init, 0)
+    if prev[0] <= _LOCAL_MAX_EDGES:
+        labels = _driver_labels(e)
+        release(e, 0)
+    else:
+        for it in range(_MAX_ROUNDS):
+            e_next, cur = materialize(_small_star(_large_star(e)), it + 1)
+            if on_iteration is not None:
+                on_iteration(it, cur[0])
+            release(e, it)
+            e = e_next
+            if cur == prev:
+                break
+            prev = cur
         else:
-            # Size the loop's shuffle width to the ACTUAL edge count (known from
-            # the init summary): the localCheckpoint materialization bypasses
-            # AQE's partition coalescing, so a small edge set otherwise schedules
-            # the session default (2x cores) of near-empty tasks per exchange,
-            # 4-6 exchanges per round — pure fixed latency in the serial section.
-            # Only ever LOWERS toward 8 for small inputs; at production edge
-            # volumes the session setting stands untouched. Restored after the
-            # loop (session conf is shared state).
-            try:
-                default_sp = int(prev_sp) if prev_sp else 200
-            except ValueError:
-                default_sp = 200
-            loop_sp = min(default_sp, max(8, (prev[0] // 2_000_000) + 1))
-            if loop_sp < default_sp:
-                sess.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
-            for it in range(max_iter):
-                e_next, cur = _ckpt_with_summary(_small_star(_large_star(e)))
-                if on_iteration is not None:
-                    on_iteration(it, cur[0])
-                e.unpersist()
-                e = e_next
-                if cur == prev:
-                    converged = True
-                    break
-                prev = cur
-    finally:
-        if prev_sp is not None:
-            sess.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        else:
-            sess.conf.unset("spark.sql.shuffle.partitions")
-        if reliable and checkpoint_dir is not None:
-            # restore the caller's global setting, also when a round
-            # raised; if there was none, point at the stable tempdir
-            # fallback — leaving the global dir aimed into this caller's
-            # (possibly soon-deleted) workdir would misdirect the next
-            # reliable caller that doesn't pass its own dir
-            import os
-            import tempfile
-
-            sc.setCheckpointDir(
-                prev_ckpt_dir or os.path.join(tempfile.gettempdir(), "dupdetect-ckpt")
+            # Labels derived from a still-evolving edge set would split true
+            # components ACROSS cluster ids with no downstream signal — fail
+            # loudly instead. The alternating algorithm converges in
+            # O(log^2 n) rounds, so the bound covers any physical corpus;
+            # hitting it means a checksum-collision oscillation or a
+            # genuinely pathological graph.
+            raise RuntimeError(
+                f"connected_components did not converge within {_MAX_ROUNDS} rounds; "
+                "labels from an unconverged edge set would silently split components. "
+                "Inspect the edge graph."
             )
-    if not converged:
-        # Labels derived from a still-evolving edge set would split true
-        # components ACROSS cluster ids with no downstream signal — fail
-        # loudly instead. The alternating algorithm converges in O(log^2 n)
-        # rounds, so 50 covers any physical corpus; hitting this means a
-        # checksum-collision oscillation or a genuinely pathological graph.
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; labels from an unconverged edge set would silently split "
-            "components. Raise max_iter (the alternating algorithm needs "
-            "O(log^2 n) rounds) or inspect the edge graph."
-        )
-    if not local:
         labels = (
             e.select(F.col("src").alias("id"), F.col("dst").alias("cluster_id"))
             .unionByName(e.select(F.col("dst").alias("id"), F.col("dst").alias("cluster_id")))

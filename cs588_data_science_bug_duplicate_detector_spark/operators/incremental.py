@@ -163,14 +163,15 @@ incremental_exact_edges = exact_edges
 
 
 def fold_labels(old_labels: DataFrame, new_edges: DataFrame,
-                new_ids: DataFrame, **cc_kwargs) -> DataFrame:
+                new_ids: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """(previous labels, new edges) -> updated labels over old + new ids.
 
     The previous partition enters CC as star edges (cluster_id ->
     member), so its contribution is one edge per non-root member — CC
     never re-reads historical edge sets. Up to ``cc._LOCAL_MAX_EDGES``
     carried + new edges it labels them on the driver; above, the star
-    loop converges in ~2 rounds.
+    loop converges in ~2 rounds. A ``checkpoint_dir`` makes CC reliable:
+    its round files land there.
     """
     carried = old_labels.where(F.col("id") != F.col("cluster_id")).select(
         F.col("cluster_id").alias("src"), F.col("id").alias("dst")
@@ -180,7 +181,8 @@ def fold_labels(old_labels: DataFrame, new_edges: DataFrame,
         carried.unionByName(new_edges.select("src", "dst")).distinct(),
         vertices=vertices,
         pre_deduped=True,
-        **cc_kwargs,
+        reliable=checkpoint_dir is not None,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -209,7 +211,8 @@ class DedupIndex:
         self.root = root
         self.cfg = cfg or DedupConfig()
         # the production detector set is exact ∪ MinHash ∪ SimHash; False
-        # folds exact ∪ MinHash only (the flagship driver pair). Part of
+        # folds exact ∪ MinHash only (what
+        # ``scripts/incremental_update.py --no-simhash`` builds). Part of
         # the index identity — mixing detector sets across increments
         # breaks the inductive carried-labels invariant.
         self.use_simhash = use_simhash
@@ -349,25 +352,20 @@ class DedupIndex:
 
     # --- the one write path ---
     def add_increment(self, docs: DataFrame, id_col: str, text_col: str,
-                      cc_kwargs: dict | None = None) -> DataFrame:
+                      reliable_cc: bool = False) -> DataFrame:
         """Sign, pair, and fold one increment; returns the updated labels.
 
         Cost profile: Python/signature work O(|docs|); pairing touches
         only LSH buckets and md5 groups containing a new doc; CC input is
         carried-star-edges + new edges.
 
-        ``cc_kwargs`` forwards to ``connected_components`` — pass
-        ``{"reliable": True}`` on a real cluster so executor loss mid-fold
-        replays from the round checkpoint instead of restarting the CC
-        loop (same knob the pipeline wires when a workdir is present).
-        Without a ``checkpoint_dir`` those checkpoints land under the
-        index root, not on a node-local tempdir, and are removed once the
+        ``reliable_cc=True`` on a real cluster makes executor loss mid-fold
+        replay from CC's last round file instead of restarting the loop
+        (the policy the pipeline runs with its workdir). The round files
+        land under ``<root>/_cc_checkpoints`` and are removed once the
         labels are written.
         """
-        cc_kwargs = dict(cc_kwargs or {})
-        own_ckpt = None
-        if cc_kwargs.get("reliable") and cc_kwargs.get("checkpoint_dir") is None:
-            own_ckpt = cc_kwargs["checkpoint_dir"] = os.path.join(self.root, "_cc_checkpoints")
+        ckpt = os.path.join(self.root, "_cc_checkpoints") if reliable_cc else None
         spark = docs.sparkSession
         self._recover_compaction()
         meta = self.meta()
@@ -396,11 +394,11 @@ class DedupIndex:
             old_sigs = new_sigs.where(F.lit(False))
             old_labels = new_ids.select("id", F.col("id").alias("cluster_id")).where(F.lit(False))
         edges, _hot = detect_edges(new_sigs, old_sigs, self.cfg, self.detectors)
-        labels = fold_labels(old_labels, edges, new_ids, **cc_kwargs)
+        labels = fold_labels(old_labels, edges, new_ids, ckpt)
         labels.write.mode("overwrite").parquet(self._label_dir(n))
         release_cached_deps(edges)
-        if own_ckpt:
-            shutil.rmtree(own_ckpt, ignore_errors=True)
+        if ckpt:
+            shutil.rmtree(ckpt, ignore_errors=True)
         out = spark.read.parquet(self._label_dir(n))
         n_docs = out.count()
         # count the materialized parquet, not the incoming plan (no recompute)

@@ -8,7 +8,6 @@ Arrow for every JVM<->Python boundary, explicit shuffle-partition sizing.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -68,9 +67,4 @@ def get_spark(
         builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # Reliable checkpoint dir: used to truncate lineage in the iterative
-    # connected-components loop (SURVEY.md §4 "iterative-plan truncation").
-    ckpt = os.path.join(tempfile.gettempdir(), "dupdetect-ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt)
-    return spark
+    return builder.getOrCreate()

@@ -85,13 +85,15 @@ def start(name: str, cores: int):
 
 
 def ensure_corpus(n_docs: int, cores: int, farm_frac: float | None = None) -> str:
-    """Generate the (url, text, lang) corpus once per size: uniform
-    (planted clusters never cross a 5000-doc slice) or, with ``farm_frac``,
-    one global farm. The output is deterministic and width-independent."""
+    """Generate the (url, text, lang) corpus once per size, each in its own
+    directory: uniform (planted clusters never cross a 5000-doc slice) or,
+    with ``farm_frac``, one global farm. The output is deterministic and
+    width-independent."""
     from cs588_data_science_bug_duplicate_detector_spark import datagen
 
     # datagen's default seed 42 is part of the corpus identity
-    path, tag = (CORPUS, f"{n_docs}") if farm_frac is None else (SKEW_CORPUS, f"{n_docs}_{farm_frac}_42")
+    base, tag = (CORPUS, f"{n_docs}") if farm_frac is None else (SKEW_CORPUS, f"{n_docs}_{farm_frac}_42")
+    path = os.path.join(base, tag)
     marker = os.path.join(path, f"_GEN_{tag}")
     if not os.path.exists(marker):
         spark = start("corpus-gen", cores)
@@ -99,7 +101,7 @@ def ensure_corpus(n_docs: int, cores: int, farm_frac: float | None = None) -> st
             pages = datagen.generate_pages_distributed(spark, n_docs).select("url", "text", "lang")
         else:
             pages = datagen.generate_skewed_pages_distributed(spark, n_docs, farm_frac=farm_frac)
-        pages.write.mode("overwrite").parquet(path)  # also wipes stale markers
+        pages.write.mode("overwrite").parquet(path)
         spark.stop()
         open(marker, "w").close()
     return path

@@ -42,9 +42,12 @@ def compare(scols, srows, dcols, drows):
 def duck(sf_dir: str):
     """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
-    # the recursive-CTE oracles at sf0.1 exceed DuckDB's conservative
-    # default memory limit when Spark shares the box; give the oracle room
-    con.execute("SET memory_limit='40GB'")
+    # DuckDB spills past its memory limit, but fails with "bad allocation"
+    # when the limit exceeds what the host can give. Spark's driver shares
+    # the box, so the oracle gets a third of physical memory (5 GB on a
+    # 15 GB host, where the recursive-CTE oracles at sf0.1 finish).
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con.execute(f"SET memory_limit='{phys // 3 // 2**20}MB'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con

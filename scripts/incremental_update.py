@@ -58,8 +58,7 @@ def main() -> None:
 
     idx = DedupIndex(args.index, DedupConfig(), use_simhash=not args.no_simhash)
     docs = spark.read.parquet(args.input)
-    cc_kwargs = {"reliable": True} if args.reliable_cc else None
-    labels = idx.add_increment(docs, args.id_col, args.text_col, cc_kwargs=cc_kwargs)
+    labels = idx.add_increment(docs, args.id_col, args.text_col, reliable_cc=args.reliable_cc)
     merged = idx.compact(spark) if args.compact else 0
     meta = idx.meta()
     from pyspark.sql import functions as F

@@ -3,6 +3,7 @@
 reversed edges, isolated vertices. Small edge sets take the driver-side
 union-find; a test of the star loop forces it by lowering the bound."""
 
+import os
 import random
 
 import pytest
@@ -88,15 +89,17 @@ def test_cc_min_member_convention(spark):
 
 
 def test_cc_unconverged_raises_instead_of_silent_partial_labels(spark, monkeypatch):
-    """Exhausting max_iter before the edge set stabilizes must fail loudly:
-    labels from a still-evolving edge set silently split true components
-    across cluster ids and downstream canonical selection keeps multiple
-    'representatives' per cluster with no signal anything went wrong."""
+    """Exhausting the round bound before the edge set stabilizes must fail
+    loudly: labels from a still-evolving edge set silently split true
+    components across cluster ids and downstream canonical selection keeps
+    multiple 'representatives' per cluster with no signal anything went
+    wrong."""
     monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", -1)  # only the loop iterates
     chain = [(i, i + 1) for i in range(1, 9)]
     e = spark.createDataFrame(chain, "src long, dst long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(e, max_iter=1)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="did not converge"):
+        m.setattr(cc, "_MAX_ROUNDS", 1)
+        connected_components(e)
     # the same graph converges fine with the default budget
     got = _labels_from_spark(spark, chain, list(range(1, 10)))
     assert set(got.values()) == {1}
@@ -123,6 +126,33 @@ def test_driver_path_bound(spark, monkeypatch):
             [(s, d) for s, d in edges if s != d]
         )
         assert bool(rounds) == loops
+
+
+def _session_state(spark):
+    return (
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        spark.sparkContext._jsc.sc().getCheckpointDir().toString(),
+    )
+
+
+def test_reliable_loop_writes_round_files_and_no_session_state(spark, tmp_path, monkeypatch):
+    """A reliable star loop keeps its rounds as parquet under the caller's
+    dir, leaves only the last round (the one its labels read) once it
+    finishes, and reads or writes no session setting on the way."""
+    monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", -1)
+    edges = SHAPES["long_path"] + SHAPES["two_cliques_bridged"]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        connected_components(e, reliable=True)
+    before = _session_state(spark)
+    rounds = []
+    ckpt = str(tmp_path / "ckpt")
+    got = connected_components(
+        e, reliable=True, checkpoint_dir=ckpt, on_iteration=lambda it, n: rounds.append(n)
+    )
+    assert _session_state(spark) == before
+    assert os.listdir(ckpt) == [f"r{len(rounds)}"]
+    assert {r["id"]: r["cluster_id"] for r in got.collect()} == union_find_oracle(edges)
 
 
 # --- property-based: random graphs vs the union-find oracle ----------------

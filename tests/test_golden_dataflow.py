@@ -15,6 +15,7 @@ between folds is the declared fold-vs-batch asymmetry
 
 import hashlib
 import json
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -50,6 +51,7 @@ def _pipeline_digests(spark, pages, wd) -> dict:
         "detector_stats": hashlib.sha256(json.dumps(stats, sort_keys=True).encode()).hexdigest(),
         "labels": _digest_rows(run.labels.select("url", "doc_id", "cluster_id")),
         "_stats": stats,
+        "_stages": run.stats["stages"],
     }
 
 
@@ -60,7 +62,7 @@ def corpus(spark):
 
 
 def test_pipeline_digests_pinned(spark, corpus, tmp_path, monkeypatch):
-    got = _pipeline_digests(spark, corpus, str(tmp_path / "driver"))
+    got = _pipeline_digests(spark, corpus, str(tmp_path / "wd"))
     # the caps fire, so the pinned flow covers the hot-bucket star paths
     assert got["_stats"]["minhash"]["hot_buckets"] > 0
     assert got["_stats"]["simhash"]["hot_chunks"] > 0
@@ -68,11 +70,14 @@ def test_pipeline_digests_pinned(spark, corpus, tmp_path, monkeypatch):
         k: GOLDEN[k] for k in ("edges", "detector_stats", "labels")
     }
     # the reliable star loop inside the pipeline labels exactly as the
-    # driver-side union-find does
+    # driver-side union-find does: drop the labels stage, so the re-run
+    # resumes the edges and recomputes only CC
     monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", -1)
-    looped = _pipeline_digests(spark, corpus, str(tmp_path / "loop"))
+    shutil.rmtree(tmp_path / "wd" / "component_labels")
+    looped = _pipeline_digests(spark, corpus, str(tmp_path / "wd"))
+    assert looped["_stages"]["candidate_edges"]["resumed"]
+    assert not looped["_stages"]["component_labels"]["resumed"]
     assert looped["labels"] == GOLDEN["labels"]
-    assert looped["edges"] == GOLDEN["edges"]
 
 
 def test_fold_digest_pinned(spark, corpus, tmp_path):

@@ -184,8 +184,8 @@ def test_index_guards(spark, tmp_path):
         [(1, "some text one"), (2, "other text two")], "doc_id long, text string"
     )
     idx = DedupIndex(str(tmp_path / "idx"), DedupConfig())
-    # reliable CC checkpoints pass through to the fold
-    idx.add_increment(docs, "doc_id", "text", cc_kwargs={"reliable": True})
+    # the reliable CC policy reaches the fold
+    idx.add_increment(docs, "doc_id", "text", reliable_cc=True)
 
     # config mismatch refuses
     with pytest.raises(ValueError, match="fingerprint mismatch"):
@@ -261,33 +261,37 @@ def test_compact_crash_recovery(spark, tmp_path):
 
 
 def test_reliable_cc_checkpoints_under_index_root_and_removed(spark, tmp_path, monkeypatch):
-    """``{"reliable": True}`` without a checkpoint_dir checkpoints under the
-    index root, not the node-local tempdir fallback, and the fold removes
-    its checkpoints once the labels are written."""
+    """``reliable_cc=True`` writes CC's round files under the index root,
+    and the fold removes them once the labels are written."""
     import os
-    import tempfile
 
     from cs588_data_science_bug_duplicate_detector_spark.operators import cc
+    from cs588_data_science_bug_duplicate_detector_spark.operators import incremental
 
-    def files(top):
-        return {os.path.join(d, f) for d, _, fs in os.walk(top) for f in fs}
-
-    # force the star loop: under the driver-side bound no round checkpoints
+    # force the star loop: under the driver-side bound no round files
     monkeypatch.setattr(cc, "_LOCAL_MAX_EDGES", -1)
-    fallback = os.path.join(tempfile.gettempdir(), "dupdetect-ckpt")
-    before = files(fallback)
+    root = tmp_path / "idx"
+    left = []
+
+    def spy(*args, **kwargs):
+        out = cc.connected_components(*args, **kwargs)
+        assert kwargs["reliable"] and kwargs["checkpoint_dir"] == str(root / "_cc_checkpoints")
+        left.append(os.listdir(kwargs["checkpoint_dir"]))
+        return out
+
+    monkeypatch.setattr(incremental, "connected_components", spy)
     docs = spark.createDataFrame(
         [(i, f"shared body text number {i % 3} for the copies") for i in range(9)],
         "doc_id long, text string",
     )
-    root = tmp_path / "idx"
     idx = DedupIndex(str(root), DedupConfig())
     for i in range(2):
         labels = idx.add_increment(docs.where(F.col("doc_id") % 2 == i), "doc_id", "text",
-                                   cc_kwargs={"reliable": True})
+                                   reliable_cc=True)
     assert labels.select("cluster_id").distinct().count() == 3
+    # each fold's CC left only its last round's files, until the fold removed them
+    assert [len(x) for x in left] == [1, 1]
     assert not os.path.exists(root / "_cc_checkpoints")
-    assert files(fallback) == before
 
 
 def test_exact_rule_matches_md5_oracle(spark):

@@ -362,18 +362,23 @@ def test_pipeline_cc_uses_reliable_checkpoints_and_survives_kill(
     wd = str(tmp_path_factory.mktemp("pipe_cc_reliable"))
     pages_df, _, _ = pages
 
+    def session_state():
+        return (
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.sparkContext._jsc.sc().getCheckpointDir().toString(),
+        )
+
     # uninterrupted reference run in a separate workdir
     wd_ref = str(tmp_path_factory.mktemp("pipe_cc_reliable_ref"))
+    before = session_state()
     ref = run_pipeline(spark, pages_df, wd_ref, DedupConfig())
     ref_labels = _label_map(ref.labels)
     ckpt_root = os.path.join(wd_ref, "_cc_checkpoints")
     assert not (os.path.isdir(ckpt_root) and os.listdir(ckpt_root)), (
         "completed pipeline must clean up superseded CC round checkpoints"
     )
-    # and the session-global checkpoint dir was restored, not left pointing
-    # into this pipeline's workdir
-    opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-    assert opt.isEmpty() or "_cc_checkpoints" not in opt.get()
+    # CC reads and writes no session setting
+    assert session_state() == before
 
     # kill MID-CC: a direct reliable CC run interrupted after round 0 still
     # leaves that round's files on disk (what a recovering executor reads)
@@ -397,8 +402,8 @@ def test_pipeline_cc_uses_reliable_checkpoints_and_survives_kill(
         raise AssertionError("expected mid-CC kill")
     except Killed:
         pass
-    assert "_cc_kill" not in spark.sparkContext._jsc.sc().getCheckpointDir().get()
-    assert os.path.isdir(kill_dir) and os.listdir(kill_dir)
+    assert session_state() == before
+    assert "r1" in os.listdir(kill_dir)  # round 0's parquet files
 
     # the pipeline re-run over the same workdir completes and matches
     run2 = run_pipeline(spark, pages_df, wd_ref, DedupConfig())
