@@ -54,16 +54,10 @@ def _anchor_pred(gram: Column, cfg: DedupConfig) -> Column:
     return F.pmod(F.xxhash64(gram), F.lit(cfg.anchor_mod)) == 0
 
 
-def window_table(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,
-                 observation=None) -> DataFrame:
-    """(id, win_hash) for every content-defined anchor window in every doc.
-
-    ``observation`` (pyspark Observation): when given, the window cap is
-    METERED in the same pass — ``windows_dropped`` (anchors beyond
-    cfg.max_windows_per_doc) and ``docs_capped`` land in the observation
-    after the first action, so the cap is surfaced as lineage instead of
-    silently reading as full coverage.
-    """
+def _anchored_docs(docs: DataFrame, id_col: str, text_col: str,
+                   cfg: DedupConfig) -> DataFrame:
+    """(id, toks, n_anchors, pos_capped) for every doc that holds a full
+    window: its anchor positions, capped at ``cfg.max_windows_per_doc``."""
     toks = tokens(text_col)
     df = (
         docs.select(F.col(id_col).alias("id"), toks.alias("toks"))
@@ -82,20 +76,46 @@ def window_table(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,
     )
     # materialize the anchor array once per row; n_anchors/slice read it
     df = df.withColumn("_pos", positions)
-    df = df.withColumn("n_anchors", F.size("_pos")).withColumn(
+    return df.withColumn("n_anchors", F.size("_pos")).withColumn(
         "pos_capped", F.slice("_pos", 1, cfg.max_windows_per_doc)
     )
+
+
+def _cap_counters(cfg: DedupConfig) -> list:
+    """The window cap's counters over ``_anchored_docs`` rows."""
+    over = F.col("n_anchors") - cfg.max_windows_per_doc  # windows beyond the cap
+    return [
+        F.sum(F.greatest(over, F.lit(0))).alias("windows_dropped"),
+        F.sum((over > 0).cast("long")).alias("docs_capped"),
+        F.count(F.lit(1)).alias("docs_windowed"),
+    ]
+
+
+def window_cap_stats(docs: DataFrame, id_col: str, text_col: str,
+                     cfg: DedupConfig) -> dict:
+    """``window_table``'s cap counters as a direct aggregate (one pass that
+    re-tokenizes ``docs``)."""
+    row = _anchored_docs(docs, id_col, text_col, cfg).agg(*_cap_counters(cfg)).collect()[0]
+    return {k: int(v or 0) for k, v in row.asDict().items()}
+
+
+def window_table(docs: DataFrame, id_col: str, text_col: str, cfg: DedupConfig,
+                 observation=None) -> DataFrame:
+    """(id, win_hash) for every content-defined anchor window in every doc.
+
+    ``observation`` (pyspark Observation): when given, the window cap is
+    METERED in the same pass — ``windows_dropped`` (anchors beyond
+    cfg.max_windows_per_doc) and ``docs_capped`` land in the observation
+    after the first action, so the cap is surfaced as lineage instead of
+    silently reading as full coverage. The observation sits below the
+    window exchanges: when a stage above it comes out empty (no window,
+    or in ``suffix_edges`` no shared window), AQE prunes it from the final
+    plan and it never completes; ``window_cap_stats`` gives the same
+    counters by a direct aggregate.
+    """
+    df = _anchored_docs(docs, id_col, text_col, cfg)
     if observation is not None:
-        df = df.observe(
-            observation,
-            F.sum(F.greatest(F.col("n_anchors") - cfg.max_windows_per_doc, F.lit(0))).alias(
-                "windows_dropped"
-            ),
-            F.sum((F.col("n_anchors") > cfg.max_windows_per_doc).cast("long")).alias(
-                "docs_capped"
-            ),
-            F.count(F.lit(1)).alias("docs_windowed"),
-        )
+        df = df.observe(observation, *_cap_counters(cfg))
     # Hash the windows INSIDE the per-doc array, then explode only the
     # (id, win_hash) longs. The earlier explode-then-hash shape carried the
     # full token array (~2 KB/doc) into every anchor row — at 50k docs /

@@ -32,7 +32,7 @@ from ..functions.extract import with_extracted_text
 from ..operators.cc import connected_components
 from ..operators.incremental import SIG_COLUMN, detect_edges, sign_docs
 from ..operators.minhash import _attach_deps, hot_bucket_stats, release_cached_deps
-from ..operators.suffix import suffix_edges
+from ..operators.suffix import suffix_edges, window_cap_stats
 from ..sources.tableio import TableIO
 
 # suffix is IN the default path: north_star names it as detector 3. Drop it
@@ -199,15 +199,10 @@ def run_pipeline(
     if "id_collisions" not in stats:
         # resumed run: documents_meta never executed — backfill the collision
         # audit from the checkpoint's lineage meta so run.stats always carries
-        # it (older checkpoints without the key pay one column-pruned re-agg).
-        doc_meta = io.read_meta("documents") or {}
-        if "id_collisions" in doc_meta:
-            stats["id_collisions"] = int(doc_meta["id_collisions"])
-        else:
-            row = documents.agg(
-                F.countDistinct("url").alias("u"), F.countDistinct("doc_id").alias("d")
-            ).collect()[0]
-            stats["id_collisions"] = int(row["u"] - row["d"])
+        # it. Every resumable checkpoint has the key: documents_meta wrote it
+        # before cfg.fingerprint() folded in KERNEL_VERSION, so an older
+        # checkpoint never matches pages_fp.
+        stats["id_collisions"] = int(io.read_meta("documents")["id_collisions"])
 
     # --- stage 2: signatures ----------------------------------------------
     # detector set folded into the salt: resuming with a different set must
@@ -224,6 +219,8 @@ def run_pipeline(
     from pyspark.sql import Observation
 
     suffix_obs = Observation("suffix_caps") if "suffix" in detectors else None
+    # counted at the root of the write, where AQE cannot prune it
+    suffix_out = Observation("suffix_out") if "suffix" in detectors else None
 
     hot: dict = {}  # detector -> its hot-bucket frame, summarized in edges_meta
 
@@ -238,7 +235,9 @@ def run_pipeline(
         if "suffix" in detectors:
             e = suffix_edges(documents, "doc_id", "text", cfg, observation=suffix_obs)
             e = e.withColumn("detector", F.lit("suffix"))
-            edges = e if edges is None else edges.unionByName(e)
+            edges = (e if edges is None else edges.unionByName(e)).observe(
+                suffix_out, F.count(F.when(F.col("detector") == "suffix", 1)).alias("edges")
+            )
         return _attach_deps(edges, deps)
 
     def edges_meta():
@@ -253,8 +252,15 @@ def run_pipeline(
                 k.replace("bucket", "chunk"): v for k, v in hot_bucket_stats(hot["simhash"]).items()
             }
         if suffix_obs is not None:
-            # available once the stage write materialized the window scan
-            det_stats["suffix"] = {k: int(v or 0) for k, v in suffix_obs.get.items()}
+            # the cap observation completes only when the suffix branch
+            # emitted an edge: with none, AQE prunes its empty stages, the
+            # observation with them (see suffix.window_table). Then the
+            # counters come from one direct aggregate; a run with suffix
+            # edges reads them off the stage write.
+            if suffix_out.get["edges"]:
+                det_stats["suffix"] = {k: int(v or 0) for k, v in suffix_obs.get.items()}
+            else:
+                det_stats["suffix"] = window_cap_stats(documents, "doc_id", "text", cfg)
         return {"detector_stats": det_stats}
 
     edges = stage("candidate_edges", docs_fp, build_edges, extra_meta=edges_meta)

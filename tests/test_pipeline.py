@@ -196,6 +196,7 @@ def test_cap_metrics_surface_in_stats_and_meta(spark, tmp_path_factory):
         release_cached_deps,
     )
     from cs588_data_science_bug_duplicate_detector_spark.operators.simhash import hamming_edges
+    from cs588_data_science_bug_duplicate_detector_spark.operators.suffix import window_cap_stats
     from cs588_data_science_bug_duplicate_detector_spark.sources.tableio import TableIO
 
     wd = str(tmp_path_factory.mktemp("pipe_caps"))
@@ -224,6 +225,9 @@ def test_cap_metrics_surface_in_stats_and_meta(spark, tmp_path_factory):
     release_cached_deps(sh_edges)
     assert det["suffix"]["windows_dropped"] > 0
     assert det["suffix"]["docs_capped"] == 30
+    # the observed counters equal a direct aggregate over the documents
+    docs = TableIO(wd).read(spark, "documents")
+    assert det["suffix"] == window_cap_stats(docs, "doc_id", "text", cfg)
     with open(os.path.join(wd, "candidate_edges._meta.json")) as f:
         meta = json.load(f)
     assert meta["detector_stats"]["minhash"]["hot_buckets"] > 0
@@ -234,6 +238,37 @@ def test_cap_metrics_surface_in_stats_and_meta(spark, tmp_path_factory):
     assert run.stats["id_collisions"] == 0
     with open(os.path.join(wd, "documents._meta.json")) as f:
         assert json.load(f)["id_collisions"] == 0
+
+
+def test_suffix_counters_when_suffix_emits_no_edge(spark, tmp_path_factory):
+    """With the default detectors, a corpus whose suffix detector emits no
+    edge must finish and report the true window-cap counters. The cap
+    observation sits below the window exchanges, and AQE prunes an empty
+    stage together with it, so it never completes on such a corpus: the
+    counters come from a direct aggregate. Two corpora: no doc reaches
+    ``suffix_min_tokens`` (no windows at all), and 12 docs of 80 distinct
+    tokens (31 window starts each, under the 512 cap, none shared)."""
+    from cs588_data_science_bug_duplicate_detector_spark.sources.tableio import TableIO
+
+    short = [
+        (f"https://ex.com/s/{i}", f"short page number {i % 4} about the same thing again and again")
+        for i in range(12)
+    ]
+    distinct = [
+        (f"https://ex.com/d/{i}", " ".join(f"t{i}x{j}" for j in range(80))) for i in range(12)
+    ]
+    for rows, truth, n_clusters in (
+        (short, {"windows_dropped": 0, "docs_capped": 0, "docs_windowed": 0}, 4),
+        (distinct, {"windows_dropped": 0, "docs_capped": 0, "docs_windowed": 12}, 12),
+    ):
+        wd = str(tmp_path_factory.mktemp("pipe_no_suffix"))
+        pages_df = spark.createDataFrame(rows, "url string, text string")
+        run = run_pipeline(spark, pages_df, wd, DedupConfig(), resume=False)
+        assert run.stats["detectors"] == ["exact", "minhash", "simhash", "suffix"]
+        assert run.stats["detector_stats"]["suffix"] == truth
+        edges = TableIO(wd).read(spark, "candidate_edges")
+        assert edges.where(F.col("detector") == "suffix").count() == 0
+        assert run.labels.select("cluster_id").distinct().count() == n_clusters
 
 
 def test_keep_best_gate_protects_better_labels(spark, pages, tmp_path_factory):
