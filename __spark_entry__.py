@@ -867,11 +867,8 @@ def q_streaming_batch_equiv(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        # NoTimeout: a bounded availableNow replay must terminate once the 3
-        # files are processed (wall-clock timers would keep the trigger
-        # scheduling empty batches until every timer fires)
         _drain(
-            streaming_candidate_edges(stream, CFG, state_ttl_ms=None)
+            streaming_candidate_edges(stream, CFG)
             .writeStream.format("parquet").option("path", out).outputMode("append"),
             f"{tmp}/ckpt", "streaming replay",
         )
@@ -901,7 +898,7 @@ def q_streaming_batch_equiv(spark, sf_dir):
             f"{tmp}/ckpt_sig", "signature-log stream",
         )
         _drain(
-            streaming_candidate_edges(stream, CFG, state_ttl_ms=None)
+            streaming_candidate_edges(stream, CFG)
             .writeStream.foreachBatch(verified_edges_sink(sig_dir, "doc_id", CFG, vout)),
             f"{tmp}/ckpt_ver", "verified-edge stream",
         )

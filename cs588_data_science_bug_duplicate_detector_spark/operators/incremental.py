@@ -193,7 +193,7 @@ class DedupIndex:
 
         root/
           meta.json            config fingerprint + increment count
-          sigs/inc=N/          (id, minhash[, simhash], text_md5) per increment
+          sigs/inc=N/          (id, text_md5, minhash, simhash) per increment
           labels/v{N}/         full label snapshot after increment N
 
     ``meta.json`` is written LAST via atomic rename, so a crash mid-
@@ -206,17 +206,12 @@ class DedupIndex:
     carried label count).
     """
 
-    def __init__(self, root: str, cfg: DedupConfig | None = None,
-                 use_simhash: bool = True):
+    # the production detector set: every increment folds all three
+    detectors = ("exact", "minhash", "simhash")
+
+    def __init__(self, root: str, cfg: DedupConfig | None = None):
         self.root = root
         self.cfg = cfg or DedupConfig()
-        # the production detector set is exact ∪ MinHash ∪ SimHash; False
-        # folds exact ∪ MinHash only (what
-        # ``scripts/incremental_update.py --no-simhash`` builds). Part of
-        # the index identity — mixing detector sets across increments
-        # breaks the inductive carried-labels invariant.
-        self.use_simhash = use_simhash
-        self.detectors = ("exact", "minhash", "simhash") if use_simhash else ("exact", "minhash")
         os.makedirs(root, exist_ok=True)
 
     # --- layout helpers ---
@@ -232,11 +227,7 @@ class DedupIndex:
 
     def meta(self) -> dict:
         if not os.path.exists(self._meta_path):
-            return {
-                "n_increments": 0,
-                "cfg_fp": self.cfg.fingerprint(),
-                "use_simhash": self.use_simhash,
-            }
+            return {"n_increments": 0, "cfg_fp": self.cfg.fingerprint()}
         with open(self._meta_path) as f:
             return json.load(f)
 
@@ -248,7 +239,7 @@ class DedupIndex:
 
     # --- reads ---
     def signatures(self, spark: SparkSession, upto: int | None = None) -> DataFrame:
-        """All stored (id, text_md5, minhash[, simhash]); ``upto`` bounds
+        """All stored (id, text_md5, minhash, simhash); ``upto`` bounds
         the increment index (exclusive) via partition pruning on ``inc``."""
         self._recover_compaction()
         df = spark.read.option("basePath", os.path.join(self.root, "sigs")).parquet(
@@ -374,11 +365,6 @@ class DedupIndex:
                 "config fingerprint mismatch: index was built with a different "
                 f"DedupConfig ({meta['cfg_fp']} != {self.cfg.fingerprint()})"
             )
-        if meta.get("use_simhash", True) != self.use_simhash:
-            raise ValueError(
-                "detector-set mismatch: index was built with "
-                f"use_simhash={meta.get('use_simhash', True)}"
-            )
         n = meta["n_increments"]
         sign_docs(
             docs.select(F.col(id_col).alias("id"), text_col), "id", text_col, self.cfg, self.detectors
@@ -411,7 +397,6 @@ class DedupIndex:
         self._write_meta(
             {
                 "cfg_fp": self.cfg.fingerprint(),
-                "use_simhash": self.use_simhash,
                 "n_increments": n + 1,
                 "total_docs": n_docs,
             }

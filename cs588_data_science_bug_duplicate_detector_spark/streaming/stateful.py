@@ -18,11 +18,12 @@ the batch cap path). Downstream CC over the accumulated edge log then
 matches the batch clustering for bucket-driven components; edges are
 CANDIDATES (verify with signatures in ``foreachBatch``, same as batch).
 
-Scale: state is one long per ACTIVE band bucket, expired after
-``state_ttl_ms`` of inactivity — by EVENT time (watermark over the crawl
-timestamp, the default semantics when ``ts_col`` is given) or wall clock
-— bounded by the active-crawl horizon, not corpus size; an unbounded
-10^12-doc crawl never accretes unbounded state. The shuffle is the band
+Scale: with ``ts_col`` and ``state_ttl_ms`` given, state is one long per
+ACTIVE band bucket, expired after ``state_ttl_ms`` of crawl EVENT time
+(a watermark over the crawl timestamp) — bounded by the active-crawl
+horizon, not corpus size; an unbounded 10^12-doc crawl never accretes
+unbounded state. Without them state never expires (bounded replays,
+where it is bounded by the corpus anyway). The shuffle is the band
 explode (bands × docs rows of two longs), identical to batch banding. The
 operator runs ONCE per micro-batch: ``verified_edges_sink`` persists the
 batch's candidate edges before reading them, so the pandas state function
@@ -57,15 +58,16 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _make_bucket_update(state_ttl_ms: int | None, ttl_mode: str):
+def _make_bucket_update(state_ttl_ms: int | None):
     """One LSH bucket's state transition: maintain min-id root, emit star
     edges for every other id seen this batch (and re-parent the old root
     when a smaller id arrives). Closure, not functools.partial — Spark's
     serializer requires a plain function.
 
-    ``ttl_mode``: 'event' registers an event-time timer at (max event ts
+    ``state_ttl_ms`` set: register an event-time timer at (max event ts
     seen in this bucket + ttl, clamped above the current watermark);
-    'processing' a wall-clock timer; 'none' no timer."""
+    None: no timer."""
+    event_time = state_ttl_ms is not None
 
     def update(key, pdfs, state: GroupState):
         if state.hasTimedOut:
@@ -78,7 +80,7 @@ def _make_bucket_update(state_ttl_ms: int | None, ttl_mode: str):
         ts_max_ms = None
         for pdf in pdfs:
             ids.update(int(x) for x in pdf["id"])
-            if ttl_mode == "event":
+            if event_time:
                 valid = pdf["ts"].dropna()  # null crawl ts must not poison max()
                 if len(valid):
                     m_ms = int(pd.Timestamp(valid.max()).value // 1_000_000)
@@ -97,7 +99,7 @@ def _make_bucket_update(state_ttl_ms: int | None, ttl_mode: str):
         if old_ts:
             ts_max_ms = old_ts if ts_max_ms is None else max(ts_max_ms, old_ts)
         state.update((root, ts_max_ms or 0))
-        if ttl_mode == "event":
+        if event_time:
             # crawl-time horizon: expire when the WATERMARK passes the last
             # event this bucket saw + ttl. Clamp above the current watermark
             # (Spark rejects timers at/behind it — possible when replaying
@@ -107,8 +109,6 @@ def _make_bucket_update(state_ttl_ms: int | None, ttl_mode: str):
             wm = state.getCurrentWatermarkMs()
             anchor = ts_max_ms if ts_max_ms is not None else wm
             state.setTimeoutTimestamp(max(anchor + state_ttl_ms, wm + 1))
-        elif ttl_mode == "processing":
-            state.setTimeoutDuration(state_ttl_ms)
         yield pd.DataFrame({"src": [root] * len(dsts), "dst": dsts})
 
     return update
@@ -119,7 +119,7 @@ def streaming_candidate_edges(
     cfg: DedupConfig | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    state_ttl_ms: int | None = 3_600_000,
+    state_ttl_ms: int | None = None,
     ts_col: str | None = None,
     watermark_delay: str = "10 minutes",
 ) -> DataFrame:
@@ -130,45 +130,39 @@ def streaming_candidate_edges(
     vectorized UDF as batch, then band-exploded with the SAME band_table
     exprs — a micro-batch is just another Arrow batch.
 
-    State-TTL semantics (round-4 verdict "What's wrong #3"):
+    State expiry (round-4 verdict "What's wrong #3") is by crawl EVENT
+    time or not at all; ``ts_col`` and ``state_ttl_ms`` come together, and
+    one without the other raises ``ValueError``:
 
-    - ``ts_col`` given -> EVENT-TIME TTL: ``pages`` is watermarked on
-      ``ts_col`` (minus ``watermark_delay``) and a bucket expires when the
-      watermark passes its last-seen event ts + ``state_ttl_ms``. This is
-      the declared "active-crawl horizon": a year of WARC replayed at full
-      speed expires state by CRAWL time (a fast backfill doesn't keep
+    - both given -> ``pages`` is watermarked on ``ts_col`` (minus
+      ``watermark_delay``) and a bucket expires when the watermark passes
+      its last-seen event ts + ``state_ttl_ms``. This is the declared
+      "active-crawl horizon": a year of WARC replayed at full speed
+      expires state by CRAWL time (a fast backfill doesn't keep
       everything live; a slow trickle doesn't drop contemporaries).
-    - ``ts_col`` None, ``state_ttl_ms`` set -> PROCESSING-TIME TTL
-      (wall clock). Only right for a live ingest consuming at crawl speed.
-      NOTE: pending wall-clock timers keep a ``trigger(availableNow)`` run
-      scheduling empty micro-batches until every timer fires — for bounded
-      replays use ``ts_col`` or ``state_ttl_ms=None``.
-    - ``state_ttl_ms`` None -> no timeout (state bounded by corpus size;
-      fine for bounded replays and tests).
+    - neither (the default) -> no timeout: state is bounded by corpus
+      size, which is what a bounded ``trigger(availableNow)`` replay
+      wants — it terminates once its files are processed.
     """
     cfg = cfg or DedupConfig()
-    if ts_col is not None and state_ttl_ms is None:
-        raise ValueError("event-time TTL (ts_col given) requires state_ttl_ms")
+    if (ts_col is None) != (state_ttl_ms is None):
+        raise ValueError(
+            "event-time TTL takes both ts_col and state_ttl_ms (neither: no expiry)"
+        )
     sigs = with_minhash(
         pages.select(id_col, text_col, *([ts_col] if ts_col else [])), text_col, cfg
     )
-    if ts_col is not None:
-        ttl_mode = "event"
-        sigs = sigs.withWatermark(ts_col, watermark_delay)
-        bands = band_table(
-            sigs, id_col, cfg, keep_cols=(F.col(ts_col).alias("ts"),)
-        )
-        timeout_conf = GroupStateTimeout.EventTimeTimeout
-    elif state_ttl_ms is not None:
-        ttl_mode = "processing"
-        bands = band_table(sigs, id_col, cfg)
-        timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
-    else:
-        ttl_mode = "none"
+    if ts_col is None:
         bands = band_table(sigs, id_col, cfg)
         timeout_conf = GroupStateTimeout.NoTimeout
+    else:
+        bands = band_table(
+            sigs.withWatermark(ts_col, watermark_delay), id_col, cfg,
+            keep_cols=(F.col(ts_col).alias("ts"),),
+        )
+        timeout_conf = GroupStateTimeout.EventTimeTimeout
     return bands.groupBy("band_key").applyInPandasWithState(
-        _make_bucket_update(state_ttl_ms, ttl_mode),
+        _make_bucket_update(state_ttl_ms),
         outputStructType=EDGE_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
@@ -183,8 +177,7 @@ def signature_log_sink(
     sig_dir: str,
 ):
     """foreachBatch sink that appends each micro-batch's MinHash signatures
-    to a parquet signature log — the companion producer for a path-based
-    ``verified_edges_sink``::
+    to a parquet signature log — the log ``verified_edges_sink`` reads::
 
         # one stream writes the sig log...
         pages.writeStream.foreachBatch(
@@ -221,14 +214,14 @@ def signature_log_sink(
 
 
 def verified_edges_sink(
-    sigs,
+    sig_dir: str,
     id_col: str,
     cfg: DedupConfig,
     out_dir: str,
 ):
     """foreachBatch companion to ``streaming_candidate_edges``: each
-    micro-batch of candidate star edges is verified against the signatures
-    table with the SAME estimated-Jaccard check as batch
+    micro-batch of candidate star edges is verified against the signature
+    log with the SAME estimated-Jaccard check as batch
     (operators.minhash.verify_pairs), and the surviving edges append to a
     parquet/Iceberg edge log::
 
@@ -236,14 +229,10 @@ def verified_edges_sink(
             .foreachBatch(verified_edges_sink(sig_dir, "doc_id", cfg, out))
             .option("checkpointLocation", ckpt).start()
 
-    ``sigs`` may be:
-
-    - a **str path** (recommended for live ingest): re-read per micro-batch,
-      so signatures appended by a companion signature-log sink are visible
-      to later batches. A DataFrame snapshot canNOT do this — its file
-      index is frozen at creation, so fresh docs would never verify;
-    - a **DataFrame** for a genuinely static corpus (bounded replays,
-      tests).
+    ``sig_dir`` is the ``batch_id``-partitioned directory that
+    ``signature_log_sink`` writes. It is re-read on every micro-batch, so
+    signatures the companion sink logged since the last batch are visible
+    to this one.
 
     A doc logged by MULTIPLE batches (a recrawl, or at-least-once
     redelivery landing in a different batch) verifies against its LATEST
@@ -302,23 +291,14 @@ def verified_edges_sink(
                 ".write.partitionBy('batch_id').parquet(new) — or clear the dir."
             )
 
-    def _resolve_sigs(batch_df: DataFrame) -> DataFrame:
-        if isinstance(sigs, str):
-            # fresh read per batch -> fresh file listing, so a companion
-            # signature-log sink's appends are visible to this batch
-            return batch_df.sparkSession.read.parquet(sigs)
-        return sigs
-
     def _latest_endpoint_sigs(edges: DataFrame, sig_df: DataFrame) -> DataFrame:
         """Restrict the signature table to this batch's edge endpoints
         (broadcast semi-join — the batch is small, the log is not), then
         keep ONE row per doc. A recrawled page is logged once per batch it
         arrived in; verifying against both rows would fan the join out into
         duplicate — and, if the content changed, contradictory — edge rows.
-        When the table carries the sig-log's ``batch_id``, the LATEST crawl
-        wins (ties broken by signature bytes for determinism); a
-        caller-supplied DataFrame without ``batch_id`` is expected to be
-        one-row-per-id already (dropDuplicates as a safety net)."""
+        The LATEST ``batch_id`` wins (ties broken by signature bytes for
+        determinism)."""
         from pyspark.sql import Window
 
         endpoints = (
@@ -327,16 +307,14 @@ def verified_edges_sink(
             .distinct()
         )
         rel = sig_df.join(F.broadcast(endpoints), id_col, "semi")
-        if "batch_id" in rel.columns:
-            w = Window.partitionBy(id_col).orderBy(
-                F.col("batch_id").desc(), F.col("minhash").desc()
-            )
-            return (
-                rel.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn", "batch_id")
-            )
-        return rel.dropDuplicates([id_col])
+        w = Window.partitionBy(id_col).orderBy(
+            F.col("batch_id").desc(), F.col("minhash").desc()
+        )
+        return (
+            rel.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn", "batch_id")
+        )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         if not layout_checked:
@@ -348,7 +326,11 @@ def verified_edges_sink(
         # below goes through this one persisted frame (see docstring).
         edges = batch_df.select("src", "dst").distinct().persist()
         try:
-            sig_df = _latest_endpoint_sigs(edges, _resolve_sigs(batch_df))
+            # fresh read per batch -> fresh file listing, so a companion
+            # signature-log sink's appends are visible to this batch
+            sig_df = _latest_endpoint_sigs(
+                edges, batch_df.sparkSession.read.parquet(sig_dir)
+            )
             known = sig_df.select(F.col(id_col).alias("_kid"))
             # edges with BOTH endpoint sigs present -> exact-Jaccard verify;
             # the rest pass through unverified (est_jaccard NULL) — see docstring

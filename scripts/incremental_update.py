@@ -33,8 +33,6 @@ def main() -> None:
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--cores", type=int, default=None,
                     help="local mode cores (ignored under a real master)")
-    ap.add_argument("--no-simhash", action="store_true",
-                    help="exact + MinHash only (must match the index's detector set)")
     ap.add_argument("--reliable-cc", action="store_true",
                     help="reliable CC round checkpoints under <index>/_cc_checkpoints, "
                          "removed after the fold (survives executor loss)")
@@ -56,7 +54,7 @@ def main() -> None:
         spark = get_spark("incremental-update", cores=args.cores)
     spark.sparkContext.setLogLevel("WARN")
 
-    idx = DedupIndex(args.index, DedupConfig(), use_simhash=not args.no_simhash)
+    idx = DedupIndex(args.index, DedupConfig())
     docs = spark.read.parquet(args.input)
     labels = idx.add_increment(docs, args.id_col, args.text_col, reliable_cc=args.reliable_cc)
     merged = idx.compact(spark) if args.compact else 0

@@ -162,23 +162,6 @@ def test_compact_preserves_index(spark, tmp_path):
     _assert_labels_equal(labels, _batch_labels(docs, cfg))
 
 
-def test_use_simhash_false_roundtrip(spark, tmp_path):
-    """A use_simhash=False index must accept follow-up increments (the
-    flag persists in meta) and still refuse a True reopen."""
-    docs = spark.createDataFrame(
-        [(i, f"document body number {i} with words") for i in range(8)],
-        "doc_id long, text string",
-    )
-    idx = DedupIndex(str(tmp_path / "idx"), DedupConfig(), use_simhash=False)
-    idx.add_increment(docs.where(F.col("doc_id") < 4), "doc_id", "text")
-    idx.add_increment(docs.where(F.col("doc_id") >= 4), "doc_id", "text")
-    assert idx.meta()["use_simhash"] is False
-    with pytest.raises(ValueError, match="detector-set mismatch"):
-        DedupIndex(str(tmp_path / "idx"), DedupConfig(), use_simhash=True).add_increment(
-            docs, "doc_id", "text"
-        )
-
-
 def test_index_guards(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, "some text one"), (2, "other text two")], "doc_id long, text string"
@@ -190,11 +173,6 @@ def test_index_guards(spark, tmp_path):
     # config mismatch refuses
     with pytest.raises(ValueError, match="fingerprint mismatch"):
         DedupIndex(str(tmp_path / "idx"), DedupConfig(bucket_cap=7)).add_increment(
-            docs, "doc_id", "text"
-        )
-    # detector-set mismatch refuses
-    with pytest.raises(ValueError, match="detector-set mismatch"):
-        DedupIndex(str(tmp_path / "idx"), DedupConfig(), use_simhash=False).add_increment(
             docs, "doc_id", "text"
         )
     # duplicate doc ids across increments refuse (labels can't cover them)

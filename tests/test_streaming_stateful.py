@@ -21,13 +21,7 @@ def _text(tag: str) -> str:
 
 def _run(spark, src_dir, ckpt, out_dir, schema=DOC_SCHEMA, **kw):
     """availableNow replay of ``src_dir`` -> accumulated edge-log set.
-
-    Default is state_ttl_ms=None (NoTimeout): bounded replays must
-    TERMINATE — pending ProcessingTime timers otherwise keep the trigger
-    scheduling empty micro-batches until every wall-clock timer fires
-    (each pre-round-5 _run silently burned its full awaitTermination
-    budget). Termination is asserted, not assumed."""
-    kw.setdefault("state_ttl_ms", None)
+    Termination is asserted, not assumed."""
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
     edges = streaming_candidate_edges(stream, DedupConfig(), **kw)
     q = (
@@ -91,23 +85,22 @@ def test_streaming_candidates_cross_batch_state(spark, tmp_path):
 def test_verified_edges_sink_foreachbatch(spark, tmp_path):
     """Candidates stream through foreachBatch verification with the batch
     verify kernel; surviving edges append to the parquet edge log."""
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import with_minhash
     from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
+        signature_log_sink,
         verified_edges_sink,
     )
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
+    sigs = str(tmp_path / "sigs")
     cfg = DedupConfig()
     shared = _text("a")
     docs = spark.createDataFrame(
         [(10, shared), (11, shared), (20, _text("z"))], DOC_SCHEMA
     )
     docs.write.mode("overwrite").parquet(src)
-    sigs = with_minhash(docs.select("doc_id", "text"), "text", cfg).select(
-        "doc_id", "minhash"
-    )
+    signature_log_sink("doc_id", "text", cfg, sigs)(docs, 0)
     # the sink persists each micro-batch; it must release it on every exit.
     # Compare RDD ids, not counts: the map holds its values weakly, so other
     # tests' unreferenced cached RDDs can drop out of it meanwhile.
@@ -119,7 +112,7 @@ def test_verified_edges_sink_foreachbatch(spark, tmp_path):
 
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
     q = (
-        streaming_candidate_edges(stream, cfg, state_ttl_ms=None)
+        streaming_candidate_edges(stream, cfg)
         .writeStream.foreachBatch(verified_edges_sink(sigs, "doc_id", cfg, out))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -165,24 +158,25 @@ def test_verified_edges_sink_runs_stateful_operator_once(spark, tmp_path):
         with_minhash,
     )
     from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
+        signature_log_sink,
         verified_edges_sink,
     )
 
     cfg = DedupConfig()
     src = str(tmp_path / "src")
+    sig_dir = str(tmp_path / "sigs")
     rows = [(i, _text("a")) for i in range(1, 5)]
     rows += [(100 + i, _text(f"d{i}x")) for i in range(8)]
     docs = spark.createDataFrame(rows, DOC_SCHEMA)
     docs.coalesce(1).write.parquet(src)
+    signature_log_sink("doc_id", "text", cfg, sig_dir)(docs, 0)
     sigs = with_minhash(docs, "text", cfg)
     n_keys = band_table(sigs, "doc_id", cfg).select("band_key").distinct().count()
 
     q = (
-        streaming_candidate_edges(
-            spark.readStream.schema(DOC_SCHEMA).parquet(src), cfg, state_ttl_ms=None
-        )
+        streaming_candidate_edges(spark.readStream.schema(DOC_SCHEMA).parquet(src), cfg)
         .writeStream.foreachBatch(verified_edges_sink(
-            sigs.select("doc_id", "minhash"), "doc_id", cfg, str(tmp_path / "out")
+            sig_dir, "doc_id", cfg, str(tmp_path / "out")
         ))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -263,17 +257,13 @@ def test_verified_edges_sink_rejects_legacy_flat_layout(spark, tmp_path):
     log (round-4 advice)."""
     import pytest
 
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import with_minhash
     from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
         verified_edges_sink,
     )
 
     out = str(tmp_path / "legacy_log")
     cfg = DedupConfig()
-    docs = spark.createDataFrame([(10, _text("a")), (11, _text("a"))], DOC_SCHEMA)
-    sigs = with_minhash(docs.select("doc_id", "text"), "text", cfg).select(
-        "doc_id", "minhash"
-    )
+    sigs = str(tmp_path / "sigs")  # never read: the layout check refuses first
     # legacy layout: flat root-level parquet, no batch_id partitions
     spark.createDataFrame([(10, 11)], "src long, dst long").write.parquet(out)
 
@@ -356,6 +346,15 @@ def test_event_time_ttl_expires_by_crawl_time(spark, tmp_path):
     # the crawl-time gap severed the epochs
     assert not any((s, d) in edges for s in (5, 10, 11) for d in (12, 13))
 
+    # expiry is by event time or not at all: a TTL and a ts column come
+    # together, and one without the other raises
+    import pytest
+
+    stream = spark.readStream.schema(TS_SCHEMA).parquet(src)
+    for kw in ({"state_ttl_ms": 3_600_000}, {"ts_col": "ts"}):
+        with pytest.raises(ValueError, match="both ts_col and state_ttl_ms"):
+            streaming_candidate_edges(stream, DedupConfig(), **kw)
+
 
 class _FakeState:
     """Minimal GroupState stand-in for unit-testing the bucket update fn."""
@@ -381,9 +380,6 @@ class _FakeState:
     def getCurrentWatermarkMs(self):
         return 0
 
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
 
 def test_bucket_update_no_duplicate_edge_when_old_root_rearrives():
     """Batch {5, 10} hitting a bucket whose stored root is 10: the root
@@ -396,7 +392,7 @@ def test_bucket_update_no_duplicate_edge_when_old_root_rearrives():
         _make_bucket_update,
     )
 
-    update = _make_bucket_update(None, "none")
+    update = _make_bucket_update(None)
     state = _FakeState(stored=(10, 0))
     out = pd.concat(list(update(("k",), [pd.DataFrame({"id": [5, 10]})], state)))
     edges = list(zip(out["src"], out["dst"]))
@@ -409,46 +405,22 @@ def test_bucket_update_no_duplicate_edge_when_old_root_rearrives():
     assert sorted(zip(out2["src"], out2["dst"])) == [(5, 20), (5, 30)]
 
 
-def test_bucket_update_processing_time_ttl():
-    """The default streaming mode (``state_ttl_ms`` set, no ``ts_col``):
-    every update re-arms the wall-clock timer to the TTL, and a timed-out
-    bucket drops its state and emits an empty (src, dst) frame."""
-    import pandas as pd
-
-    from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
-        _make_bucket_update,
-    )
-
-    update = _make_bucket_update(3_600_000, "processing")
-    state = _FakeState()
-    out = pd.concat(list(update(("k",), [pd.DataFrame({"id": [7, 3]})], state)))
-    assert list(zip(out["src"], out["dst"])) == [(3, 7)]
-    assert state.get == (3, 0) and state.timeout_ms == 3_600_000
-
-    state.hasTimedOut = True
-    frames = list(update(("k",), iter([]), state))
-    assert not state.exists
-    assert len(frames) == 1 and frames[0].empty
-    assert list(frames[0].columns) == ["src", "dst"]
-
-
 def test_verified_edges_sink_path_sigs_and_unverifiable_passthrough(spark, tmp_path):
-    """sigs given as a PATH is re-read per batch (fresh file listing), so
+    """The signature-log path is re-read per batch (fresh file listing), so
     signatures appended between batches become visible; edges with missing
     endpoint signatures pass through with est_jaccard NULL instead of
     silently vanishing from the log."""
-    from cs588_data_science_bug_duplicate_detector_spark.operators.minhash import with_minhash
     from cs588_data_science_bug_duplicate_detector_spark.streaming.stateful import (
+        signature_log_sink,
         verified_edges_sink,
     )
 
     cfg = DedupConfig()
     sig_dir = str(tmp_path / "sigs")
     out = str(tmp_path / "out")
+    sig_sink = signature_log_sink("doc_id", "text", cfg, sig_dir)
     shared = _text("a")
-    docs1 = spark.createDataFrame([(10, shared), (11, shared)], DOC_SCHEMA)
-    sigs1 = with_minhash(docs1.select("doc_id", "text"), "text", cfg).select("doc_id", "minhash")
-    sigs1.write.mode("append").parquet(sig_dir)
+    sig_sink(spark.createDataFrame([(10, shared), (11, shared)], DOC_SCHEMA), 0)
 
     sink = verified_edges_sink(sig_dir, "doc_id", cfg, out)
     # batch 0: (10, 11) verifiable; (10, 99) has no sig for 99 -> passthrough
@@ -459,12 +431,9 @@ def test_verified_edges_sink_path_sigs_and_unverifiable_passthrough(spark, tmp_p
     assert (10, 11) in got and got[(10, 11)] is not None
     assert (10, 99) in got and got[(10, 99)] is None
 
-    # doc 99's signature arrives later (appended by a companion sig sink);
+    # doc 99's signature arrives later (appended by the companion sig sink);
     # the NEXT batch must see it because the path is re-listed per batch
-    docs2 = spark.createDataFrame([(99, shared)], DOC_SCHEMA)
-    with_minhash(docs2.select("doc_id", "text"), "text", cfg).select(
-        "doc_id", "minhash"
-    ).write.mode("append").parquet(sig_dir)
+    sig_sink(spark.createDataFrame([(99, shared)], DOC_SCHEMA), 1)
     sink(spark.createDataFrame([(10, 99)], "src long, dst long"), 1)
     batch1 = {
         (r["src"], r["dst"]): r["est_jaccard"]
